@@ -182,11 +182,14 @@ object BenchExtra {
     if (mode == "sweep") {
       // Time EVERY SparkEntry query (noop sink; guide §1.4) — the empirical
       // ranking that directs the operator-by-operator sweep. Runs in the
-      // Verify-like environment (AQE on) unless DEV_AQE=false.
+      // Verify-like environment (AQE on) unless DEV_AQE=false. Optional
+      // query names after <outDir> <tag> restrict the sweep to them.
       spark.conf.set("spark.sql.adaptive.enabled",
         sys.env.getOrElse("DEV_AQE", "true"))
+      val only = args.drop(3).toSet
       val results = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-      SparkEntry.queries.foreach { case (name, fn) =>
+      SparkEntry.queries.filter(q => only.isEmpty || only(q._1))
+          .foreach { case (name, fn) =>
         sc.setJobDescription(name)
         try {
           val (_, sec) = timed(noop(fn(spark, sfDir)))

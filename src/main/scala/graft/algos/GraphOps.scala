@@ -1,8 +1,11 @@
 package graft.algos
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.core.LinkGraph
+import graft.engine.{LocalStore, Superstep}
 
 /** Smaller reference apps: bond percolation, k-hop subgraph extraction,
   * degree distribution, weighted/seeded label propagation
@@ -91,18 +94,28 @@ object GraphOps {
        |WHERE iter = (SELECT MAX(iter) FROM cc) ORDER BY id""".stripMargin
 
   /** k-hop undirected subgraph extraction from a seed set (subgraph.cpp):
-    * BFS frontier for `hops` supersteps; returns the induced edge set.
+    * BFS on [[Superstep.run]] for up to `hops` supersteps, stopping early
+    * once the frontier empties; returns the induced edge set.
     */
   def kHopSubgraph(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
       hops: Int): DataFrame = {
-    val und = LinkGraph.undirected(edges).select("src", "dst").distinct()
-      .localCheckpoint(true)
-    var reached = seeds.select(col("id")).distinct().localCheckpoint(true)
-    for (_ <- 1 to hops) {
-      val next = und.join(reached.withColumnRenamed("id", "src"),
-        Seq("src"), "left_semi").select(col("dst").as("id"))
-      reached = reached.unionAll(next).distinct().localCheckpoint(true)
+    // hash(src)-partitioned: the per-round frontier semi-join never
+    // re-exchanges the E-row side
+    val und = LinkGraph.undirected(edges).select("src", "dst")
+      .repartition(col("src")).distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    def step(state: DataFrame, iter: Int): DataFrame = {
+      val next = und.join(
+          state.filter(col("delta") > 0).select(col("id").as("src")),
+          Seq("src"), "left_semi")
+        .select(col("dst").as("id"), lit(1.0).as("delta"))
+      state.withColumn("delta", lit(0.0)).unionByName(next)
+        .groupBy("id").agg(min("delta").as("delta"))
     }
+    val reached = Superstep.run(
+      seeds.select(col("id")).distinct().withColumn("delta", lit(1.0)),
+      step, tol = 0.0, maxIters = hops, new LocalStore).state.select("id")
+    und.unpersist(false)
     edges
       .join(reached.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
       .join(reached.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
@@ -130,28 +143,27 @@ object GraphOps {
     import spark.implicits._
     val e = edges.select(col("src"), col("dst"), col("weight"))
       .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     e.count()
-    var dist = Seq((source, 0.0)).toDF("id", "dist").localCheckpoint(true)
-    var frontier = dist
-    var round = 0
-    while (frontier.limit(1).count() > 0) {
-      if (round >= maxRounds) throw new IllegalStateException(
-        s"sssp did not converge in $maxRounds rounds")
-      val cand = frontier.join(e, frontier("id") === e("src"))
+    // state (id, dist, delta); delta = 1 where dist improved (the frontier).
+    // One min-groupBy merges the old distances with the relaxations.
+    def step(state: DataFrame, iter: Int): DataFrame = {
+      val frontier = state.filter(col("delta") > 0)
+      val relaxed = frontier.join(e, frontier("id") === e("src"))
         .select(col("dst").as("id"), (col("dist") + col("weight")).as("nd"))
-        .groupBy("id").agg(min("nd").as("nd"))
-      val improved = cand.join(dist, Seq("id"), "left")
-        .filter(col("dist").isNull || col("nd") < col("dist"))
-        .select(col("id"), col("nd").as("dist"))
-        .localCheckpoint(true)
-      dist = graft.core.Dataflow.checkpointRebased(
-        dist.unionAll(improved).groupBy("id").agg(min("dist").as("dist")))
-      frontier = improved
-      round += 1
+      state.select(col("id"), col("dist").as("old"))
+        .unionByName(relaxed, allowMissingColumns = true)
+        .groupBy("id").agg(min("old").as("old"), min("nd").as("nd"))
+        .select(col("id"), least(col("old"), col("nd")).as("dist"),
+          when(col("nd") < coalesce(col("old"), lit(Double.PositiveInfinity)),
+            1.0).otherwise(0.0).as("delta"))
     }
+    val res = Superstep.run(Seq((source, 0.0, 1.0)).toDF("id", "dist", "delta"),
+      step, tol = 0.0, maxIters = maxRounds, new LocalStore)
     e.unpersist(false)
-    dist
+    if (!res.converged) throw new IllegalStateException(
+      s"sssp did not converge in $maxRounds rounds")
+    res.state.select("id", "dist")
   }
 
   /** Unrolled DuckDB oracle for [[sssp]]: `rounds` synchronous relaxation
@@ -230,17 +242,18 @@ object GraphOps {
   def seededLabelPropagation(spark: SparkSession, edges: DataFrame,
       seeds: DataFrame, iters: Int, alpha: Double = 0.0): DataFrame = {
     val seedDist = seeds.select(col("id"), col("label"), lit(1.0).as("p"))
-      .localCheckpoint(true)
-    val inW = edges.groupBy(col("dst")).agg(sum("weight").as("wsum"))
-      .localCheckpoint(true)
-    var dist = seedDist
-    for (_ <- 1 to iters) {
-      val msgs = dist.join(edges, dist("id") === edges("src"))
-        .select(col("dst"), col("label"), (col("p") * col("weight")).as("wp"))
-        .groupBy(col("dst"), col("label")).agg(sum("wp").as("wp"))
-        .join(inW, "dst")
-        .select(col("dst").as("id"), col("label"),
-          (col("wp") / col("wsum")).as("p"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // every round joins the edges: derive them once, each carrying its
+    // target's in-weight sum
+    val e = edges.select(col("src"), col("dst"), col("weight"),
+        sum("weight").over(Window.partitionBy("dst")).as("wsum"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    e.count()
+    def step(dist: DataFrame, iter: Int): DataFrame = {
+      val msgs = dist.join(e, dist("id") === e("src"))
+        .groupBy(col("dst").as("id"), col("label"), col("wsum"))
+        .agg(sum(col("p") * col("weight")).as("wp"))
+        .select(col("id"), col("label"), (col("wp") / col("wsum")).as("p"))
       val mixed =
         if (alpha == 0.0) msgs
         else dist.select(col("id"), col("label"), (col("p") * alpha).as("p"))
@@ -248,10 +261,14 @@ object GraphOps {
             (col("p") * (1 - alpha)).as("p")))
           .groupBy("id", "label").agg(sum("p").as("p"))
       // seeds stay frozen; non-seeds adopt the mixed distribution
-      dist = seedDist.unionAll(
+      seedDist.unionAll(
         mixed.join(seedDist.select(col("id")), Seq("id"), "left_anti"))
-        .localCheckpoint(true)
+        .withColumn("delta", lit(0.0))
     }
+    // fixed rounds (see Superstep)
+    val dist = Superstep.run(seedDist.withColumn("delta", lit(0.0)), step,
+      tol = -1.0, maxIters = iters, new LocalStore).state
+    seedDist.unpersist(false); e.unpersist(false)
     // hard assignment: most probable label, tie -> larger label
     dist.groupBy("id").agg(
       max_by(col("label"), struct(col("p"), col("label"))).as("label"),

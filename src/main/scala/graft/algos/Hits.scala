@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.core.LinkGraph
+import graft.engine.{LocalStore, Superstep}
 
 /** HITS (Kleinberg hubs & authorities) — link-analysis beyond the
   * reference's app set (it ships PageRank only), the other classic
@@ -42,9 +43,9 @@ object Hits {
       .sortWithinPartitions("dst").persist(StorageLevel.MEMORY_AND_DISK)
     eSrc.count(); eDst.count()
 
-    var state = LinkGraph.verticesPartitioned(spark, edges, parts)
-      .select(col("id"), lit(1.0).as("hub"), lit(1.0).as("auth"))
-      .localCheckpoint(true)
+    val init = LinkGraph.verticesPartitioned(spark, edges, parts)
+      .select(col("id"), lit(1.0).as("hub"), lit(1.0).as("auth"),
+        lit(0.0).as("delta"))
 
     def l2normalize(df: DataFrame, c: String): DataFrame = {
       val norm = df.agg(sqrt(sum(col(c) * col(c))).as("__n"))
@@ -52,7 +53,7 @@ object Hits {
         .withColumn(c, col(c) / col("__n")).drop("__n")
     }
 
-    for (_ <- 1 to iters) {
+    def step(state: DataFrame, iter: Int): DataFrame = {
       val auth = state.select(col("id"), col("hub"))
         .join(eSrc, state("id") === eSrc("src"))
         .groupBy(col("dst").as("id")).agg(sum("hub").as("auth"))
@@ -63,15 +64,17 @@ object Hits {
       val hub = withAuth.select(col("id"), col("auth"))
         .join(eDst, withAuth("id") === eDst("dst"))
         .groupBy(col("src").as("id")).agg(sum("auth").as("hub"))
-      state = l2normalize(
+      l2normalize(
         withAuth.select("id", "auth")
           .join(hub, Seq("id"), "left")
           .withColumn("hub", coalesce(col("hub"), lit(0.0))), "hub")
-        .select("id", "hub", "auth")
-        .localCheckpoint(true) // truncate: constant-size plan per iteration
+        .select(col("id"), col("hub"), col("auth"), lit(0.0).as("delta"))
     }
+
+    // fixed rounds (see Superstep)
+    val state = Superstep.run(init, step, -1.0, iters, new LocalStore).state
     eSrc.unpersist(false); eDst.unpersist(false)
-    state
+    state.select("id", "hub", "auth")
   }
 
   /** Unrolled ANSI-SQL oracle for [[run]] (DuckDB-runnable): the same

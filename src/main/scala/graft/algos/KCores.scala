@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.core.LinkGraph
+import graft.engine.{LocalStore, Superstep}
 
 /** k-core decomposition, matching the reference's kcores app
   * (/root/reference/toolkits/graph_analytics/kcores.cpp:81-142: iterative
@@ -26,18 +27,14 @@ import graft.core.LinkGraph
   */
 object KCores {
 
-  /** Per-round changed-vertex counts of this THREAD's most recent
-    * [[coreness]] run — diagnostic evidence that the frontier collapses
-    * (VERDICT r2 item 9). Thread-local: concurrent runs (parallel test
-    * suites sharing the JVM) must not read each other's diagnostics.
-    */
-  private[graft] val lastRoundChanged: ThreadLocal[List[Long]] =
-    ThreadLocal.withInitial(() => Nil)
-
-  /** (id, coreness) for every vertex WITH DEGREE >= 1 of the undirected
-    * graph (state is seeded from edge endpoints; isolated vertices — which
-    * can only appear if the caller's edge table mentions them nowhere — have
-    * coreness 0 by definition and are not listed; left-join
+  /** The h-index fixpoint on [[Superstep.run]] (empty-frontier stop rule);
+    * state is (id, core, delta). `metrics.map(_.active)` is the per-round
+    * changed-vertex count — the frontier collapse (VERDICT r2 item 9).
+    *
+    * Lists every vertex WITH DEGREE >= 1 of the undirected graph (state is
+    * seeded from edge endpoints; isolated vertices — which can only appear
+    * if the caller's edge table mentions them nowhere — have coreness 0 by
+    * definition and are not listed; left-join
     * [[graft.core.LinkGraph.vertices]] to add them back if needed).
     *
     * Frontier: a vertex's h-index can only change when a NEIGHBOR's value
@@ -46,8 +43,8 @@ object KCores {
     * recompute set collapses geometrically once the low-core periphery
     * settles, leaving rounds that touch just the contested core boundary.
     */
-  def coreness(spark: SparkSession, edges: DataFrame,
-      maxIters: Int = 200): DataFrame = {
+  def run(spark: SparkSession, edges: DataFrame,
+      maxIters: Int = 200): Superstep.RunResult = {
     val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val und = LinkGraph.undirected(edges.select("src", "dst", "weight"))
       .select("src", "dst").distinct()
@@ -63,17 +60,16 @@ object KCores {
       .persist(StorageLevel.MEMORY_AND_DISK)
     und.count(); undDst.count()
 
-    var state = und.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("core")) // core_0 = degree
-      .localCheckpoint(true)
-    var changedSet = state.select("id") // round 0: everyone just changed
-    var iter = 0
-    var changed = 1L
-    val rounds = List.newBuilder[Long]
-    while (changed > 0 && iter < maxIters) {
+    // core_0 = degree; round 0: everyone just changed
+    val init = und.groupBy(col("src").as("id"))
+      .agg(count(lit(1)).as("core"))
+      .withColumn("delta", lit(1.0))
+
+    def step(state: DataFrame, iter: Int): DataFrame = {
       // recompute h only where it can move: vertices with a changed neighbor
       val touched = undDst
-        .join(changedSet.select(col("id").as("dst")), Seq("dst"), "left_semi")
+        .join(state.filter(col("delta") > 0).select(col("id").as("dst")),
+          Seq("dst"), "left_semi")
         .select(col("src")).distinct()
       val activeEdges = und.join(touched, Seq("src"), "left_semi")
       val nbrVals = activeEdges
@@ -86,22 +82,23 @@ object KCores {
         .groupBy("id").agg(max(least(col("rn"), col("nval"))).as("h"))
       // left join: untouched vertices keep their core (h is monotone
       // non-increasing, so least() with the old value is the fixpoint rule)
-      val next = state.join(h, Seq("id"), "left")
+      state.join(h, Seq("id"), "left")
         .select(col("id"),
           least(col("core"), coalesce(col("h"), col("core"))).as("core"),
-          (col("core") > coalesce(col("h"), col("core"))).cast("long")
-            .as("chg"))
-        .localCheckpoint(true)
-      changed = next.agg(coalesce(sum("chg"), lit(0L))).head().getLong(0)
-      rounds += changed
-      changedSet = next.filter(col("chg") === 1).select("id")
-      state = next.select("id", "core")
-      iter += 1
+          when(col("core") > coalesce(col("h"), col("core")), 1.0)
+            .otherwise(0.0).as("delta"))
     }
-    lastRoundChanged.set(rounds.result())
+
+    val res = Superstep.run(init, step, tol = 0.0, maxIters, new LocalStore)
     und.unpersist(false); undDst.unpersist(false)
-    state.select(col("id"), col("core").as("coreness"))
+    res
   }
+
+  /** (id, coreness) at the fixpoint of [[run]]. */
+  def coreness(spark: SparkSession, edges: DataFrame,
+      maxIters: Int = 200): DataFrame =
+    run(spark, edges, maxIters).state
+      .select(col("id"), col("core").as("coreness"))
 
   /** Self-terminating DuckDB oracle: the same h-index fixpoint as a
     * recursive CTE (stops when a round changes nothing, like the engine).

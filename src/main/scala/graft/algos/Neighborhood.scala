@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.LinkGraph
+import graft.engine.{LocalStore, Superstep}
 
 /** Neighborhood-function analysis over the link graph — "how many vertices
   * are within t hops?" — the primitive behind effective-diameter and
@@ -40,9 +41,10 @@ object Neighborhood {
 
   /** Exact ball sizes from a landmark set: (seed, t, n_reached) for every
     * t in 0..maxT, n_reached = |{v : dist(seed, v) <= t}| over the
-    * undirected view. Delta iteration: the frontier is only the pairs first
-    * reached last round (anti-join against the reached set), so per-round
-    * shuffle volume tracks the BFS wavefront, not |seeds| × V.
+    * undirected view. Multi-source BFS on [[Superstep.run]] (empty-frontier
+    * stop rule): the frontier is only the pairs first reached last round
+    * (anti-join against the reached set), so per-round shuffle volume
+    * tracks the BFS wavefront, not |seeds| × V.
     */
   def landmarkBalls(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
       maxT: Int): DataFrame = {
@@ -52,24 +54,21 @@ object Neighborhood {
       .persist(StorageLevel.MEMORY_AND_DISK)
     und.count()
 
-    var reached = seeds.select(col("id").as("seed"), col("id"),
-      lit(0).as("dist")).localCheckpoint(true)
-    var frontier = reached.select("seed", "id")
-    var t = 1
-    var done = false
-    while (t <= maxT && !done) {
-      val cand = frontier.join(und, frontier("id") === und("src"))
+    // state (seed, id, dist, delta); delta = 1 for pairs first reached at
+    // superstep t = iter
+    def step(state: DataFrame, t: Int): DataFrame = {
+      val frontier = state.filter(col("delta") > 0)
+      val newly = frontier.join(und, frontier("id") === und("src"))
         .select(col("seed"), und("dst").as("id")).distinct()
-      val newly = cand
-        .join(reached.select("seed", "id"), Seq("seed", "id"), "left_anti")
-        .withColumn("dist", lit(t)).localCheckpoint(true)
-      done = newly.isEmpty
-      if (!done) {
-        reached = reached.unionByName(newly).localCheckpoint(true)
-        frontier = newly.select("seed", "id")
-      }
-      t += 1
+        .join(state.select("seed", "id"), Seq("seed", "id"), "left_anti")
+        .select(col("seed"), col("id"), lit(t).as("dist"), lit(1.0).as("delta"))
+      state.withColumn("delta", lit(0.0)).unionByName(newly)
     }
+    val reached = Superstep.run(
+      seeds.select(col("id").as("seed"), col("id"), lit(0).as("dist"),
+        lit(1.0).as("delta")),
+      step, tol = 0.0, maxIters = maxT, new LocalStore).state
+    und.unpersist(false)
     // cumulative counts for EVERY t in 0..maxT (BFS may exhaust early); the
     // per-(seed, dist) table is <= |seeds|·(maxT+1) rows — broadcastable.
     val perDist = reached.groupBy(col("seed"), col("dist"))

@@ -12,8 +12,8 @@ import scala.jdk.CollectionConverters._
   * can resume mid-iteration.
   */
 trait StateStore {
-  /** Materialize + lineage-truncate `state` for superstep `iter`; returns the
-    * frame to use downstream. MUST be eager. */
+  /** Superstep `iter`'s table, to use downstream. May be lazy: the first
+    * action on the result materializes it and truncates its lineage. */
   def persist(state: DataFrame, iter: Int): DataFrame
   /** Append a completed-superstep record (the `.deltalog` analog). */
   def log(m: SuperstepMetrics): Unit
@@ -21,6 +21,9 @@ trait StateStore {
   def resumePoint(): Option[(Int, DataFrame)]
   /** Drop cached/earlier state no longer needed (best-effort). */
   def release(state: DataFrame): Unit = ()
+  /** Per-partition sizes of superstep `iter`'s persisted table, where the
+    * store can measure them; a wrapping store passes the call through. */
+  def partitionMetrics(iter: Int): Seq[PartitionMetric] = Nil
 }
 
 final case class PartitionMetric(partition: Int, bytes: Long)
@@ -107,7 +110,7 @@ final class DurableStore(spark: SparkSession, dir: String,
     * a catalog-format deployment reports sizes from the format's own
     * metadata tables instead and this returns Nil harmlessly.
     */
-  def partitionMetrics(iter: Int): Seq[PartitionMetric] = {
+  override def partitionMetrics(iter: Int): Seq[PartitionMetric] = {
     val out = stateDir(iter)
     if (!Files.isDirectory(out)) return Nil
     Files.list(out).iterator().asScala.toSeq

@@ -13,11 +13,19 @@ import org.apache.spark.sql.functions._
   * when converged. Supports resume-from-manifest via [[DurableStore]].
   *
   * Convention: the state carries its own convergence signal as a `delta`
-  * column (per-vertex |change| — the reference's `ctx.log_change`,
-  * graphchi_context.hpp:78-105). The driver aggregates
-  * `(max(delta), count(delta > tol), count(*))` in one pass; `active` (rows
-  * still changing) doubles as the delta-iteration frontier size, mirroring
-  * the bitset scheduler (bitset_scheduler.hpp:38-104).
+  * column (the reference's `ctx.log_change`, graphchi_context.hpp:78-105).
+  * Each superstep aggregates `(max(delta), count(delta > tol), count(*))`
+  * in one pass; `active` doubles as the frontier size, mirroring the bitset
+  * scheduler (bitset_scheduler.hpp:38-104). Stop rules:
+  *   - max-Δ (`tol >= 0`, `delta` = per-row |change|): PageRank.
+  *   - empty frontier (`tol = 0`, `delta` = 1 for a row that changed or was
+  *     newly reached, else 0; a step reads its frontier as
+  *     `state.filter(delta > 0)`): CC, LPA, k-cores, SSSP, k-hop, landmark
+  *     BFS.
+  *   - fixed rounds (`tol < 0`, `delta` informational): exactly `maxIters`
+  *     supersteps — HITS, seeded LPA, PageRank.fixedIterations.
+  * A step only builds a plan; its static inputs are `persist()` caches
+  * declared before the loop.
   */
 object Superstep {
 
@@ -60,10 +68,7 @@ object Superstep {
         coalesce(sum(when(col("delta") > tol, 1L).otherwise(0L)), lit(0L)),
         count(lit(1))).head()
       val wall = (System.nanoTime() - t0) / 1e9
-      val parts = store match {
-        case d: DurableStore => d.partitionMetrics(iter)
-        case _               => Nil
-      }
+      val parts = store.partitionMetrics(iter)
       val m = SuperstepMetrics(
         iter, rows, parts.map(_.bytes).sum, maxDelta, active, wall, parts)
       store.log(m)

@@ -159,10 +159,14 @@ object KCoresJob {
     val spark = Jobs.session("graft-kcores", aqe = false)
     val edges = Jobs.loadEdges(spark, conf.getOrElse("edges", "derive:100000"))
     val out = conf.getOrElse("out", "/tmp/graft-kcores")
-    KCores.coreness(spark, edges,
+    val res = KCores.run(spark, edges,
       maxIters = conf.getOrElse("maxIters", "200").toInt)
+    res.state.select(col("id"), col("core").as("coreness"))
       .write.mode("overwrite").parquet(out)
-    println(s"""{"job":"kcores","out":"$out"}""")
+    // per-round changed-vertex counts: the recompute frontier's collapse
+    val active = res.metrics.map(_.active).mkString("[", ",", "]")
+    println(s"""{"job":"kcores","rounds":${res.supersteps},""" +
+      s""""converged":${res.converged},"active":$active,"out":"$out"}""")
     spark.stop()
   }
 }

@@ -47,9 +47,9 @@ class MoreAlgosSpec extends AnyFunSuite {
   }
 
   test("k-core frontier collapses across rounds") {
-    val got = KCores.coreness(spark, edgesDf)
-    val nV = got.count()
-    val rounds = KCores.lastRoundChanged.get()
+    val res = KCores.run(spark, edgesDf)
+    val nV = res.state.count()
+    val rounds = res.metrics.map(_.active)
     assert(rounds.nonEmpty && rounds.last == 0L,
       s"fixpoint not reached: $rounds")
     // after the first h-pass the recompute frontier must be a strict
