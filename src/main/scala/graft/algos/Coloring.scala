@@ -3,6 +3,7 @@ package graft.algos
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.{LocalStore, Superstep}
 
 /** Jones–Plassmann greedy graph coloring (Jones & Plassmann 1993): each
   * round, every uncolored vertex whose FIXED random priority beats all of
@@ -21,9 +22,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale shape per round: one edges⋈uncolored join for the neighborhood
   * priority max, one edges⋈colored join for the used-color sets (both
-  * map-side combinable aggregates), frontier-sized anti-joins — the
-  * PageRank-superstep family. State is stats-rebased per round
-  * (Dataflow.checkpointRebased).
+  * map-side combinable aggregates), one left join that writes the
+  * winners' colors — the PageRank-superstep family. The rounds are
+  * supersteps of [[Superstep.run]] (frontier stop rule): state (id, pri,
+  * color, delta), `delta` = 1 on still-uncolored vertices.
   *
   * [[jonesPlassmannLdf]] is the largest-degree-first variant (Hasenplaugh
   * et al., SPAA'14 "Ordering heuristics for parallel graph coloring"): the
@@ -68,12 +70,8 @@ object Coloring {
             hashPri.cast(dec)).as("pri"))
       else und.select(col("src").as("id")).distinct()
         .select(col("id"), hashPri.as("pri"))
-    var uncol = graft.core.Dataflow.checkpointRebased(init)
-    var colored: DataFrame = null // (id, color)
-    var round = 0
-    while (!uncol.isEmpty) {
-      require(round < maxRounds,
-        s"jonesPlassmann: not done after $maxRounds rounds")
+    def step(state: DataFrame, round: Int): DataFrame = {
+      val uncol = state.filter(col("delta") > 0)
       val nbrMax = und
         .join(uncol.select(col("id").as("dst"), col("pri").as("np")),
           Seq("dst"))
@@ -81,15 +79,13 @@ object Coloring {
       val winners = uncol.join(nbrMax, Seq("id"), "left")
         .filter(col("maxnp").isNull || col("pri") > col("maxnp"))
         .select(col("id"))
-      val used =
-        if (colored == null) winners.select(col("id"),
-          lit(null).cast("array<bigint>").as("used")).limit(0)
-        else und
-          .join(colored.select(col("id").as("dstc"), col("color")),
-            und("dst") === col("dstc"))
-          .join(winners.select(col("id").as("src")), Seq("src"))
-          .groupBy(col("src").as("id"))
-          .agg(collect_set(col("color")).as("used"))
+      val used = und
+        .join(state.filter(col("color").isNotNull)
+          .select(col("id").as("dstc"), col("color")),
+          und("dst") === col("dstc"))
+        .join(winners.select(col("id").as("src")), Seq("src"))
+        .groupBy(col("src").as("id"))
+        .agg(collect_set(col("color")).as("used"))
       // mex: the smallest value in 0..|used| missing from used — exact,
       // tiny per-vertex arrays (bounded by degree), identical in DuckDB
       val emptyU = expr("CAST(array() AS ARRAY<BIGINT>)")
@@ -99,18 +95,21 @@ object Coloring {
             sequence(lit(0L),
               size(coalesce(col("used"), emptyU)).cast("long")),
             x => !array_contains(coalesce(col("used"), emptyU), x))),
-          lit(0L)).as("color"))
-      colored = graft.core.Dataflow.checkpointRebased(
-        if (colored == null) newly else colored.unionByName(newly))
-      uncol = graft.core.Dataflow.checkpointRebased(
-        uncol.join(newly.select("id"), Seq("id"), "left_anti"))
-      round += 1
+          lit(0L)).as("won"))
+      state.join(newly, Seq("id"), "left")
+        .select(col("id"), col("pri"),
+          coalesce(col("color"), col("won")).as("color"),
+          when(col("color").isNull && col("won").isNull, 1.0).otherwise(0.0)
+            .as("delta"))
     }
+
+    val res = Superstep.run(
+      init.select(col("id"), col("pri"), lit(null).cast("long").as("color"),
+        lit(1.0).as("delta")),
+      step, tol = 0.0, maxRounds, new LocalStore)
     und.unpersist(false)
-    val out =
-      if (colored == null)
-        uncol.select(col("id"), lit(0L).as("color")).limit(0)
-      else colored
-    (out, round)
+    require(res.converged, s"jonesPlassmann: not done after $maxRounds rounds")
+    (res.state.filter(col("color").isNotNull).select("id", "color"),
+      res.supersteps)
   }
 }

@@ -3,6 +3,7 @@ package graft.algos
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.{LocalStore, Superstep}
 
 /** Luby's maximal-independent-set algorithm (Luby 1986), the third member
   * of the fixed-random-priority family next to [[Coloring]] (Jones–
@@ -23,11 +24,16 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale shape per round: one edges ⋈ active join for the neighborhood
   * priority max (map-side combinable), one frontier-sized neighbor
-  * expansion for the removal set, anti-join shrink — and unlike
-  * coloring, each round removes winners PLUS their whole neighborhoods,
-  * so the active set collapses geometrically even on hub-heavy graphs
-  * (a hub leaves the moment any neighbor wins; it never waits out its
-  * degree the way JP's random-priority contest makes it wait).
+  * expansion for the removal set, and one left join that flags the
+  * removed rows — and unlike coloring, each round removes winners PLUS
+  * their whole neighborhoods, so the active set collapses geometrically
+  * even on hub-heavy graphs (a hub leaves the moment any neighbor wins; it
+  * never waits out its degree the way JP's random-priority contest makes
+  * it wait).
+  *
+  * The rounds are supersteps of [[Superstep.run]] (frontier stop rule):
+  * state (id, pri, mis_round, delta), `delta` = 1 on still-active
+  * vertices, a winner's round written into its `mis_round`.
   *
   * Output: (id, mis_round) for MIS members only, mis_round ≥ 1.
   */
@@ -46,13 +52,12 @@ object Mis {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val pri = (GraphOps.lehmerHash(col("id"), lit(0L), seed) *
       4294967296L + (col("id") % 4294967296L)).as("pri")
-    var active = graft.core.Dataflow.checkpointRebased(
-      und.select(col("src").as("id")).distinct().select(col("id"), pri))
-    var mis: DataFrame = null // (id, mis_round)
-    var round = 0
-    while (!active.isEmpty) {
-      require(round < maxRounds, s"luby: not done after $maxRounds rounds")
-      round += 1
+    val init = und.select(col("src").as("id")).distinct()
+      .select(col("id"), pri, lit(null).cast("long").as("mis_round"),
+        lit(1.0).as("delta"))
+
+    def step(state: DataFrame, round: Int): DataFrame = {
+      val active = state.filter(col("delta") > 0)
       val nbrMax = und
         .join(active.select(col("id").as("dst"), col("pri").as("np")),
           Seq("dst"))
@@ -60,23 +65,23 @@ object Mis {
       val winners = active.join(nbrMax, Seq("id"), "left")
         .filter(col("maxnp").isNull || col("pri") > col("maxnp"))
         .select(col("id"))
-      val newly = winners.select(col("id"),
-        lit(round.toLong).as("mis_round"))
-      mis = graft.core.Dataflow.checkpointRebased(
-        if (mis == null) newly else mis.unionByName(newly))
-      val removed = winners
+      // winners and their neighbors leave; a winner carries its round
+      val removed = winners.select(col("id"), lit(round.toLong).as("won"))
         .unionAll(und
           .join(winners.select(col("id").as("src")), Seq("src"))
-          .select(col("dst").as("id")))
-        .distinct()
-      active = graft.core.Dataflow.checkpointRebased(
-        active.join(removed, Seq("id"), "left_anti"))
+          .select(col("dst").as("id"), lit(null).cast("long").as("won")))
+        .groupBy("id").agg(max(col("won")).as("won"), lit(true).as("rm"))
+      state.join(removed, Seq("id"), "left")
+        .select(col("id"), col("pri"),
+          coalesce(col("mis_round"), col("won")).as("mis_round"),
+          when(col("delta") > 0 && col("rm").isNull, 1.0).otherwise(0.0)
+            .as("delta"))
     }
+
+    val res = Superstep.run(init, step, tol = 0.0, maxRounds, new LocalStore)
     und.unpersist(false)
-    val out =
-      if (mis == null)
-        active.select(col("id"), lit(0L).as("mis_round")).limit(0)
-      else mis
-    (out, round)
+    require(res.converged, s"luby: not done after $maxRounds rounds")
+    (res.state.filter(col("mis_round").isNotNull)
+      .select("id", "mis_round"), res.supersteps)
   }
 }

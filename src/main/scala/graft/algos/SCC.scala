@@ -1,8 +1,9 @@
 package graft.algos
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Dataflow, LinkGraph}
+import graft.core.LinkGraph
+import graft.engine.{LocalStore, Superstep}
 
 /** Strongly-connected components via iterative forward-coloring + backward
   * confirmation — the same Salihoglu-Widom "coloring" scheme the reference
@@ -19,8 +20,7 @@ import graft.core.{Dataflow, LinkGraph}
   *     1. forward fixpoint: color(v) = max id that reaches v (incl. self) —
   *        delta-iterated: only vertices whose color changed last round emit
   *        (the reference's own scheduler is selective,
-  *        stronglyconnectedcomponents.cpp:146-407), with convergence checked
-  *        every [[CheckEvery]] rounds
+  *        stronglyconnectedcomponents.cpp:146-407)
   *     2. roots: color(v) == v
   *     3. backward fixpoint within each color class from its root — the
   *        confirmed set is one SCC (labeled by its root id)
@@ -44,22 +44,19 @@ import graft.core.{Dataflow, LinkGraph}
   * exact-match testable against a Tarjan oracle (and identical between the
   * distributed and driver-finish paths).
   *
+  * The trim, forward and backward fixpoints are [[Superstep.run]] loops
+  * (frontier stop rule): a round is one superstep with no count or
+  * checkpoint action of its own, and the round that leaves an empty
+  * frontier ends the fixpoint.
+  *
   * @param maxRounds peel-round budget (fail-loud)
   * @param driverFinishBelow collect-and-Tarjan threshold on remaining
   *   vertices+edges; 0 disables
-  * @param maxInnerRounds budget for each forward/backward/trim fixpoint —
-  *   a high-diameter graph spins O(V) inner rounds accumulating checkpoints
-  *   with no loud failure otherwise (ADVICE r3); exceeded → exception
-  *   naming the knob
+  * @param maxInnerRounds superstep budget for each trim/forward/backward
+  *   fixpoint — a high-diameter graph spins O(V) inner rounds with no loud
+  *   failure otherwise (ADVICE r3); exceeded → exception naming the knob
   */
 object SCC {
-
-  /** Convergence-check cadence of the forward phase: between checks the loop
-    * trusts the frontier, so quiescence costs at most CheckEvery-1 extra
-    * empty-frontier rounds (no E-row join work) while every round in the
-    * long pre-convergence stretch saves one blocking driver action.
-    */
-  private val CheckEvery = 2
 
   def run(spark: SparkSession, edges: DataFrame, maxRounds: Int = 50,
       driverFinishBelow: Long = 2000000L,
@@ -76,10 +73,16 @@ object SCC {
       result = if (result == null) df else result.unionAll(df)
       result = result.localCheckpoint(true)
     }
-    def innerBudgetCheck(r: Int, phase: String): Unit =
-      if (r >= maxInnerRounds) throw new IllegalStateException(
+    // one inner fixpoint on Superstep; its final state
+    def fixpoint(phase: String, init: DataFrame)(
+        step: (DataFrame, Int) => DataFrame): DataFrame = {
+      val res = Superstep.run(init, step, tol = 0.0, maxInnerRounds,
+        new LocalStore)
+      if (!res.converged) throw new IllegalStateException(
         s"SCC $phase fixpoint exceeded maxInnerRounds=$maxInnerRounds " +
           s"(high-diameter graph? raise maxInnerRounds or driverFinishBelow)")
+      res.state
+    }
 
     while (remaining > 0 && round < maxRounds) {
       // --- driver finish ------------------------------------------------
@@ -98,9 +101,9 @@ object SCC {
       // changed-only pattern as CC/k-cores. A provenance DAG still drains
       // completely here in diameter rounds; each round's join work is
       // frontier-sized against the static partitioned edge views.
-      // A long pure path would spin (one vertex per round) —
-      // innerBudgetCheck fails loudly, and the driver finish above absorbs
-      // any path that fits the threshold first.
+      // A long pure path would spin (one vertex per round) — the
+      // maxInnerRounds budget fails loudly, and the driver finish above
+      // absorbs any path that fits the threshold first.
       val tSrc = liveEdges.repartition(parts, col("src"))
         .sortWithinPartitions("src")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
@@ -111,53 +114,41 @@ object SCC {
         .agg(count(lit(1)).as("in"))
       val outDeg = tSrc.groupBy(col("src").as("id"))
         .agg(count(lit(1)).as("out"))
-      // deg state: hash-partitioned on id, updated with frontier messages.
-      // Per-round state is checkpointRebased, not plain localCheckpoint:
-      // dIn/dOut are aggregates over frontier×edges INNER joins (size
-      // estimate = product of children) and nextDeg left-joins deg with
-      // both, so an inherited estimate compounds ~3× in bit-length per trim
-      // round — a deep acyclic fringe (the long-path shapes trim exists
-      // for) would hit the BigInteger-stats meltdown Dataflow documents.
-      var deg = Dataflow.checkpointRebased(
-        live.join(inDeg, Seq("id"), "left")
+      // state (id, in, out, alive, delta), hash-partitioned on id: delta = 1
+      // on live vertices with no live in- or out-edge, which the next round
+      // peels (alive = false)
+      def trimmed(in: Column, out: Column, alive: Column): Seq[Column] = Seq(
+        in.as("in"), out.as("out"), alive.as("alive"),
+        when(alive && (in === 0 || out === 0), 1.0).otherwise(0.0)
+          .as("delta"))
+      val trim = fixpoint("trim", live.join(inDeg, Seq("id"), "left")
           .join(outDeg, Seq("id"), "left")
-          .select(col("id"), coalesce(col("in"), lit(0L)).as("in"),
-            coalesce(col("out"), lit(0L)).as("out"))
-          .repartition(parts, col("id")))
-      var frontier0 = Dataflow.checkpointRebased(
-        deg.filter(col("in") === 0 || col("out") === 0).select("id"))
-      var peeledTotal = 0L
-      var trimRound = 0
-      var frontierCnt = frontier0.count()
-      while (frontierCnt > 0) {
-        innerBudgetCheck(trimRound, "trim")
-        addResult(frontier0.select(col("id"), col("id").as("scc")))
-        peeledTotal += frontierCnt
+          .select(col("id") +: trimmed(coalesce(col("in"), lit(0L)),
+            coalesce(col("out"), lit(0L)), lit(true)): _*)
+          .repartition(parts, col("id"))) { (deg, _) =>
+        val peel = deg.filter(col("delta") > 0).select("id")
         // each peeled vertex kills its incident edges: decrement the other
         // endpoint's opposing degree (edges with both endpoints peeled
         // decrement a vertex that is already dead — harmless, it never
-        // re-enters the frontier because dead rows are dropped below)
-        val dIn = frontier0.join(tSrc, frontier0("id") === tSrc("src"))
+        // re-enters the frontier because only alive rows are flagged)
+        val dIn = peel.join(tSrc, peel("id") === tSrc("src"))
           .groupBy(col("dst").as("id")).agg(count(lit(1)).as("din"))
-        val dOut = frontier0.join(tDst, frontier0("id") === tDst("dst"))
+        val dOut = peel.join(tDst, peel("id") === tDst("dst"))
           .groupBy(col("src").as("id")).agg(count(lit(1)).as("dout"))
-        val nextDeg = deg
-          .join(frontier0.select(col("id").as("pid")), deg("id") === col("pid"),
-            "left_anti") // drop peeled rows: they are labeled already
-          .join(dIn, Seq("id"), "left")
+        deg.join(dIn, Seq("id"), "left")
           .join(dOut, Seq("id"), "left")
-          .select(col("id"), (col("in") - coalesce(col("din"), lit(0L))).as("in"),
-            (col("out") - coalesce(col("dout"), lit(0L))).as("out"))
-        val nextDegCp = Dataflow.checkpointRebased(nextDeg)
-        frontier0 = Dataflow.checkpointRebased(
-          nextDegCp.filter(col("in") === 0 || col("out") === 0).select("id"))
-        deg = nextDegCp
-        frontierCnt = frontier0.count()
-        trimRound += 1
+          .select(col("id") +: trimmed(
+            col("in") - coalesce(col("din"), lit(0L)),
+            col("out") - coalesce(col("dout"), lit(0L)),
+            col("alive") && col("delta") === 0): _*)
       }
-      if (peeledTotal > 0) {
-        live = deg.select("id").localCheckpoint(true)
-        remaining -= peeledTotal
+      // lazy checkpoint: the count materializes it
+      live = trim.filter(col("alive")).select("id").localCheckpoint(false)
+      val left = live.count()
+      if (left < remaining) {
+        addResult(trim.filter(!col("alive"))
+          .select(col("id"), col("id").as("scc")))
+        remaining = left
         liveEdges = liveEdges
           .join(live.select(col("id").as("ls")),
             liveEdges("src") === col("ls"), "left_semi")
@@ -189,69 +180,46 @@ object SCC {
       // --- 1. forward max-color fixpoint -------------------------------
       // Delta iteration (VERDICT r2 item 3): only vertices whose color
       // changed last round emit messages — the same changed-only frontier
-      // CC uses — and the convergence check runs every CheckEvery rounds
-      // instead of every round, cutting driver round-trips. Extra rounds
-      // after quiescence are joins over an EMPTY frontier (near-free).
-      var colors = live.select(col("id"), col("id").as("color"))
-        .repartition(parts, col("id"))
-        .localCheckpoint(true)
-      var fwdFrontier = colors // round 0: every vertex "just changed"
-      var fwdRound = 0
-      var fwdDone = false
-      while (!fwdDone) {
-        innerBudgetCheck(fwdRound, "forward")
-        val msgs = fwdFrontier.join(eSrc, fwdFrontier("id") === eSrc("src"))
+      // CC uses. State (id, color, delta), hash-partitioned on id.
+      val colors = fixpoint("forward", live
+          .select(col("id"), col("id").as("color"), lit(1.0).as("delta"))
+          .repartition(parts, col("id"))) { (colors, _) =>
+        val msgs = colors.filter(col("delta") > 0)
+          .join(eSrc, col("id") === eSrc("src"))
           .groupBy(col("dst")).agg(max(col("color")).as("mcolor"))
-        val next = colors.join(msgs, colors("id") === msgs("dst"), "left")
+        colors.join(msgs, colors("id") === msgs("dst"), "left")
           .select(colors("id"),
             greatest(col("color"), coalesce(col("mcolor"), col("color")))
               .as("color"),
-            (coalesce(col("mcolor"), col("color")) > col("color"))
-              .as("chg"))
-          .localCheckpoint(true) // the one materializing action per round
-        fwdFrontier = next.filter(col("chg")).select("id", "color")
-        colors = next.select("id", "color")
-        fwdRound += 1
-        if (fwdRound % CheckEvery == 0)
-          fwdDone =
-            next.agg(sum(when(col("chg"), 1L).otherwise(0L)))
-              .head().getLong(0) == 0L
+            when(coalesce(col("mcolor"), col("color")) > col("color"), 1.0)
+              .otherwise(0.0).as("delta"))
       }
 
       // --- 2+3. backward confirmation within color classes --------------
       // Same delta-iterated state-update shape as the forward phase: the
-      // confirmation state (id, color, scc) stays hash-partitioned on id
-      // across rounds (zero state re-exchange), only the frontier's
-      // predecessor candidates shuffle, and the "already confirmed" check is
-      // the scc column itself — no V-row visited-set anti-join per round.
-      var bstate = colors.select(col("id"), col("color"),
-        when(col("color") === col("id"), col("id")).as("scc"))
-        .localCheckpoint(true)
-      var frontier = bstate.filter(col("scc").isNotNull)
-        .select(col("id"), col("scc"))
-      var bRound = 0
-      var bDone = false
-      while (!bDone) {
-        innerBudgetCheck(bRound, "backward")
+      // confirmation state (id, color, scc, delta) stays hash-partitioned
+      // on id across rounds (zero state re-exchange), only the frontier's
+      // predecessor candidates shuffle, and the "already confirmed" check
+      // is the scc column itself — no V-row visited-set anti-join per
+      // round. Round 0's frontier is the roots, color(v) == v.
+      val bstate = fixpoint("backward", colors.select(col("id"),
+          col("color"), when(col("color") === col("id"), col("id")).as("scc"),
+          when(col("color") === col("id"), 1.0).otherwise(0.0).as("delta"))
+        ) { (bstate, _) =>
         // predecessor candidates of the newly-confirmed frontier
+        val frontier = bstate.filter(col("delta") > 0)
         val cand = frontier.join(eDst, frontier("id") === eDst("dst"))
           .select(col("src").as("cid"), col("scc").as("cscc"))
           .distinct()
         // a predecessor joins the SCC iff its forward color equals the scc
         // root; at most one cand row can satisfy color === cscc per vertex
-        val nxt = bstate.join(cand,
+        bstate.join(cand,
           bstate("id") === col("cid") && bstate("color") === col("cscc"),
           "left")
           .select(bstate("id"), bstate("color"),
             coalesce(bstate("scc"), col("cscc")).as("scc"),
-            (bstate("scc").isNull && col("cscc").isNotNull).as("chg"))
-          .localCheckpoint(true)
-        frontier = nxt.filter(col("chg")).select(col("id"), col("scc"))
-        bstate = nxt.select("id", "color", "scc")
-        bRound += 1
-        if (bRound % CheckEvery == 0)
-          bDone = nxt.agg(sum(when(col("chg"), 1L).otherwise(0L)))
-            .head().getLong(0) == 0L
+            when(bstate("scc").isNull && col("cscc").isNotNull, 1.0)
+              .otherwise(0.0).as("delta"))
       }
       val inScc = bstate.filter(col("scc").isNotNull).select("id", "scc")
         .localCheckpoint(true)

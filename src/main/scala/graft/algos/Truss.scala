@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.core.Dataflow
+import graft.engine.{LocalStore, Superstep}
 
 /** k-truss — the edge-centric cohesion analog of k-cores (beyond the
   * reference's app set, which peels vertices but not edges): the maximal
@@ -74,26 +75,30 @@ object Truss {
     * proportional to the REMOVED edges' triangle neighborhoods + an O(E)
     * scan, where the recount plan pays the full Σ_E min-deg intersection
     * every round. Small removal batches broadcast. BENCH.md records the
-    * measured A/B at 22 M edges.
+    * measured A/B at 22 M edges. The peel rounds are supersteps of
+    * [[Superstep.run]] (frontier stop rule).
     */
   def kTrussDecremental(spark: SparkSession, edges: DataFrame, k: Int,
-      maxRounds: Int = 200,
-      perRound: (Int, Long, Long) => Unit = (_, _, _) => ()): DataFrame = {
+      maxRounds: Int = 200): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     val e0 = TriangleCount.canonicalEdges(edges).localCheckpoint(true)
     val (supp0, o0) = support(e0)
-    var cur = Dataflow.checkpointRebased(
-      e0.join(supp0, Seq("u", "v"), "left")
-        .select(col("u"), col("v"),
-          coalesce(col("supp"), lit(0L)).as("supp")))
+    // state (u, v, supp, delta): delta = 1 on the edges the next round
+    // removes; a round drops them and subtracts their triangles
+    def flagged(state: DataFrame) = state.withColumn("delta",
+      when(col("supp") < k - 2, 1.0).otherwise(0.0))
+    val init = flagged(e0.join(supp0, Seq("u", "v"), "left")
+      .select(col("u"), col("v"), coalesce(col("supp"), lit(0L)).as("supp")))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val removed0 = init.filter(col("delta") > 0).count()
     o0.unpersist(false)
-    var round = 0
-    var nRemoved = cur.filter(col("supp") < k - 2).count()
-    while (nRemoved > 0) {
-      if (round >= maxRounds) throw new IllegalStateException(
-        s"k-truss did not converge in $maxRounds peel rounds")
-      perRound(round, cur.count(), nRemoved)
-      val removed = cur.filter(col("supp") < k - 2).select("u", "v")
+    val store = new LocalStore
+
+    def step(cur: DataFrame, round: Int): DataFrame = {
+      // Superstep logs superstep round-1 before it builds this round, so
+      // its `active` is this round's removal count
+      val nRemoved = store.metrics.lastOption.fold(removed0)(_.active)
+      val removed = cur.filter(col("delta") > 0).select("u", "v")
       val und = cur.select(col("u").as("a"), col("v").as("b"))
         .unionAll(cur.select(col("v").as("a"), col("u").as("b")))
       val deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
@@ -121,19 +126,25 @@ object Truss {
             - greatest(col("u"), col("v"), col("w"))).as("y"),
           greatest(col("u"), col("v"), col("w")).as("z"))
         .distinct()
-      val dec = tri.select(col("x").as("u"), col("y").as("v"))
-        .unionAll(tri.select(col("x").as("u"), col("z").as("v")))
-        .unionAll(tri.select(col("y").as("u"), col("z").as("v")))
-        .groupBy("u", "v").agg(count(lit(1)).as("dec"))
-      cur = Dataflow.checkpointRebased(
-        cur.filter(col("supp") >= k - 2)
-          .join(dec, Seq("u", "v"), "left")
-          .select(col("u"), col("v"),
-            (col("supp") - coalesce(col("dec"), lit(0L))).as("supp")))
-      round += 1
-      nRemoved = cur.filter(col("supp") < k - 2).count()
+      // one scan of tri for its three edges: a 3-way union would plan the
+      // removal-batch broadcast three times
+      val dec = tri.select(explode(array(
+          struct(col("x").as("u"), col("y").as("v")),
+          struct(col("x").as("u"), col("z").as("v")),
+          struct(col("y").as("u"), col("z").as("v")))).as("e"))
+        .groupBy(col("e.u").as("u"), col("e.v").as("v"))
+        .agg(count(lit(1)).as("dec"))
+      flagged(cur.filter(col("delta") === 0)
+        .join(dec, Seq("u", "v"), "left")
+        .select(col("u"), col("v"),
+          (col("supp") - coalesce(col("dec"), lit(0L))).as("supp")))
     }
-    cur.select("u", "v")
+
+    val res = Superstep.run(init, step, tol = 0.0, maxRounds, store)
+    init.unpersist(false)
+    if (!res.converged) throw new IllegalStateException(
+      s"k-truss did not converge in $maxRounds peel rounds")
+    res.state.select("u", "v")
   }
 
   /** Edges (u, v) of the k-truss of the undirected view of `edges`. */

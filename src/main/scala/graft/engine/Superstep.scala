@@ -18,14 +18,21 @@ import org.apache.spark.sql.functions._
   * in one pass; `active` doubles as the frontier size, mirroring the bitset
   * scheduler (bitset_scheduler.hpp:38-104). Stop rules:
   *   - max-Δ (`tol >= 0`, `delta` = per-row |change|): PageRank.
-  *   - empty frontier (`tol = 0`, `delta` = 1 for a row that changed or was
-  *     newly reached, else 0; a step reads its frontier as
+  *   - empty frontier (`tol = 0`, `delta` = 1 exactly on the rows the next
+  *     step acts on, else 0; a step reads its frontier as
   *     `state.filter(delta > 0)`): CC, LPA, k-cores, SSSP, k-hop, landmark
-  *     BFS.
+  *     BFS, Luby MIS, Jones–Plassmann coloring, decremental k-truss, and
+  *     SCC's trim, forward-colour and backward-confirm fixpoints.
   *   - fixed rounds (`tol < 0`, `delta` informational): exactly `maxIters`
   *     supersteps — HITS, seeded LPA, PageRank.fixedIterations.
   * A step only builds a plan; its static inputs are `persist()` caches
   * declared before the loop.
+  *
+  * Flag rows, don't drop them: a loop that accumulates an output (MIS
+  * members, colours, trimmed SCC singletons) keeps it as a column of the
+  * one state frame — a finished row stays with `delta` 0 and its result
+  * column set — and reads the output as a filter of the final state. A
+  * second frame would need its own checkpoint and count per round.
   */
 object Superstep {
 

@@ -26,10 +26,10 @@ import graft.text.TextOps._
   * touched, pair counts are maintained incrementally, and the argmax pair
   * comes from an ordered mirror (TreeSet) in O(log P). Measured by
   * DevBpeProbe: 1000+ merges in seconds where the job-per-merge loop
-  * extrapolated to hours. The distributed per-merge loop is retained as
-  * the fallback for vocabularies too large to collect (the threshold is
-  * vocabulary rows, a driver-memory bound — deliberately generous since a
-  * row is a word + its symbol array).
+  * extrapolated to hours. The collected table is bounded by
+  * [[MaxDriverVocab]] rows (a driver-memory bound — deliberately generous
+  * since a row is a word + its symbol array); a larger vocabulary fails
+  * loudly instead of falling back to a job-per-merge loop.
   *
   * Deviations from the reference tokenizers' behavior, documented:
   * no end-of-word marker (words are whitespace tokens already), and pair
@@ -40,9 +40,7 @@ import graft.text.TextOps._
   */
 object Bpe {
 
-  /** Vocabularies up to this many distinct words run the driver-local merge
-    * loop; larger ones fall back to the distributed per-merge loop.
-    */
+  /** Largest vocabulary (distinct words) [[train]] collects to the driver. */
   val MaxDriverVocab = 2000000L
 
   /** (word, freq, syms): the word-frequency table with each word split to
@@ -55,39 +53,25 @@ object Bpe {
       .select(col("word"), col("freq"),
         filter(split(col("word"), ""), s => s =!= "").as("syms"))
 
-  /** One greedy-leftmost application of merge (l, r) to a symbol array.
-    * try_element_at(acc, -1) is null on the empty accumulator, so the
-    * comparison is null -> otherwise-branch; no ANSI out-of-bounds risk.
-    */
-  private def applyMerge(syms: org.apache.spark.sql.Column,
-                         l: String, r: String): org.apache.spark.sql.Column =
-    aggregate(syms, array().cast("array<string>"), (acc, s) =>
-      when(try_element_at(acc, lit(-1)) === lit(l) && s === lit(r),
-        concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
-        .otherwise(concat(acc, array(s))))
-
   /** Train `numMerges` merges. Returns (merges, wordSyms):
     * merges = (rank, left_sym, right_sym, cnt) in learn order, tie-broken
     * deterministically (cnt desc, left asc, right asc — binary string
     * order); wordSyms = the final (word, freq, syms) symbolization, ready
     * for [[tokenize]]. Stops early (fewer rows) if no pair remains.
+    *
+    * The merges run in a driver-local incremental loop over the collected
+    * word-frequency table: overlapping-occurrence pair counts, greedy
+    * leftmost non-overlapping merge application, (cnt desc, l asc, r asc)
+    * binary-order tie-break, early stop when no pair remains.
+    *
+    * @throws IllegalArgumentException if the corpus has more than
+    *   [[MaxDriverVocab]] distinct words
     */
   def train(docs: DataFrame, numMerges: Int): (DataFrame, DataFrame) = {
-    val wf = wordFreqs(docs).localCheckpoint(true)
-    if (wf.count() <= MaxDriverVocab) trainDriver(wf, numMerges)
-    else trainDistributed(wf, numMerges)
-  }
-
-  /** Driver-local incremental merge loop over the collected word-frequency
-    * table. Exactly [[trainDistributed]]'s semantics: overlapping-occurrence
-    * pair counts, greedy leftmost non-overlapping merge application,
-    * (cnt desc, l asc, r asc) binary-order tie-break, early stop when no
-    * pair remains.
-    */
-  private def trainDriver(wf: DataFrame, numMerges: Int)
-      : (DataFrame, DataFrame) = {
-    val spark = wf.sparkSession
-    val rows = wf.collect()
+    val spark = docs.sparkSession
+    val rows = wordFreqs(docs).limit(MaxDriverVocab.toInt + 1).collect()
+    require(rows.length <= MaxDriverVocab, s"BPE vocabulary exceeds " +
+      s"MaxDriverVocab=$MaxDriverVocab distinct words")
     val n = rows.length
     val words = new Array[Array[String]](n)
     val freqs = new Array[Long](n)
@@ -179,47 +163,6 @@ object Bpe {
       .map(j => (rows(j).getString(0), freqs(j), words(j).toSeq))
       .toDF("word", "freq", "syms")
     (merges, wordSyms)
-  }
-
-  /** The distributed per-merge loop: pair counting is an explode + groupBy
-    * over ~|vocab| rows, the argmax pair is a 1-row driver read (bounded by
-    * numMerges, the Hits-norms pattern), the merge application a per-word
-    * array fold (higher-order `aggregate`, CodegenFallback-interpreted —
-    * fine on the vocabulary-sized table). One job + checkpoint per merge:
-    * only used when the vocabulary exceeds [[MaxDriverVocab]].
-    */
-  private def trainDistributed(wf0: DataFrame, numMerges: Int)
-      : (DataFrame, DataFrame) = {
-    val spark = wf0.sparkSession
-    var wf = wf0
-    val learned =
-      scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var done = false
-    for (rank <- 1 to numMerges if !done) {
-      val top = wf.filter(size(col("syms")) >= 2)
-        .select(col("freq"), explode(transform(
-          sequence(lit(1), size(col("syms")) - 1),
-          i => struct(element_at(col("syms"), i).as("l"),
-            element_at(col("syms"), i + 1).as("r")))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
-        .limit(1).collect() // 1 row, bounded by numMerges reads total
-      if (top.isEmpty) done = true
-      else {
-        val (l, r, c) = (top(0).getString(0), top(0).getString(1),
-          top(0).getLong(2))
-        learned += ((rank, l, r, c))
-        wf = wf.select(col("word"), col("freq"),
-          applyMerge(col("syms"), l, r).as("syms")).localCheckpoint(true)
-      }
-    }
-    import spark.implicits._
-    val merges = learned.toSeq
-      .toDF("rank", "left_sym", "right_sym", "cnt")
-      .select(col("rank").cast("long").as("rank"), col("left_sym"),
-        col("right_sym"), col("cnt"))
-    (merges, wf)
   }
 
   /** Tokenize the corpus with a trained symbolization: (doc_id, n_words,

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.algos.{GraphOps, Hits, KCores, Neighborhood}
+import graft.algos.{Coloring, GraphOps, Hits, KCores, Mis, Neighborhood,
+  SCC, Truss}
 
 /** The loops on [[graft.engine.Superstep.run]] run one Spark job per
   * superstep, and raw `localCheckpoint(` calls only shrink.
@@ -76,37 +77,103 @@ class SuperstepLoopsSpec extends AnyFunSuite {
     assert(jobsOf(Hits.run(spark, edges, 3)) == 2 + 3 * 6)
   }
 
-  test("localCheckpoint( appears only in Dataflow and unported files") {
-    // Files whose loops are not on Superstep yet. Porting a loop removes
-    // its file from this list; nothing is ever added.
-    val allowed = Set(
-      "DevBpeProbe.scala", "DevExplain.scala", "DevStatsProbe.scala",
-      "DevTrussProbe.scala", "DevVecProbe.scala",
-      "algos/Betweenness.scala", "algos/MinimumSpanningForest.scala",
-      "algos/Neighborhood.scala", "algos/RandomWalks.scala",
-      "algos/SCC.scala", "algos/Sampling.scala", "algos/Truss.scala",
-      "cf/SvdPlusPlus.scala", "cf/TimeSvdPlusPlus.scala",
-      "classify/AdPredictor.scala", "frap/FrapPipeline.scala",
-      "frap/WLRelabel.scala", "plans/CsrPageRank.scala",
-      "streaming/EventStream.scala", "text/Bpe.scala", "text/Dsir.scala",
-      "vectors/KMeans.scala", "vectors/Pq.scala")
+  test("second-family loops run one job per superstep plus their prep") {
+    import org.apache.spark.sql.functions.lit
+    def jobsOf(f: => Any): Int = withJobs(f)._2
+    // MoreAlgosSpec's k-truss fixture: K5 on 0..4, a lone triangle, a
+    // chain and a bridge triangle 4-10-13
+    val k5 = for (i <- 0L to 4L; j <- (i + 1) to 4L) yield (i, j)
+    val fixture = (k5 ++ Seq((10L, 11L), (11L, 12L), (10L, 12L),
+      (20L, 21L), (21L, 22L), (4L, 10L), (4L, 13L), (10L, 13L)))
+      .toDF("src", "dst").withColumn("weight", lit(1.0))
+
+    // Luby MIS and both coloring variants: no prep job (the undirected
+    // edges are a lazy cache, the init state is checkpointed by
+    // superstep 1's job), then one job per round
+    for (g <- Seq(fixture, path)) {
+      val ((_, misRounds), misJobs) = withJobs(Mis.run(g))
+      assert(misJobs == misRounds, s"MIS: $misRounds rounds")
+    }
+    for (ldf <- Seq(false, true)) {
+      val ((_, rounds), jobs) =
+        withJobs(Coloring.run(fixture, 64, 42L, largestFirst = ldf))
+      assert(rounds == 5 && jobs == rounds, s"coloring ldf=$ldf: $jobs jobs")
+    }
+
+    // decremental truss: two prep jobs (canonical edges, the initial
+    // support's removal count), then per peel round the superstep job and
+    // the broadcast of the removal batch. At k = 4 the fixture peels
+    // everything outside K5 in one round; a triangle strip peels its
+    // chords and end edges, then the path left behind: two rounds
+    assert(jobsOf(Truss.kTrussDecremental(spark, fixture, 4)) == 2 + 2 * 1)
+    val strip = (0L until 6L).flatMap(i => Seq((i, i + 1), (i, i + 2)))
+      .toDF("src", "dst")
+    assert(jobsOf(Truss.kTrussDecremental(spark, strip, 4)) == 2 + 2 * 2)
+
+    // SCC with the driver finish off, on SccSpec's two cycles and a bridge:
+    // 1->2->3->1, 3->4, 4->5->6->4, 6->7. Trim peels 7 (1 superstep),
+    // forward colours {1,2,3} -> 3 and {4,5,6} -> 6 (3), backward confirms
+    // both cycles from their roots (3). The other 16 jobs are the peel
+    // loop's own checkpoints and counts: 4 before the loop, 5 after trim,
+    // 2 static edge views, 5 to record the SCCs and peel them.
+    val scc = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L),
+      (4L, 5L), (5L, 6L), (6L, 4L), (6L, 7L)).toDF("src", "dst")
+    val (labels, sccJobs) = withJobs(
+      SCC.run(spark, scc, driverFinishBelow = 0L).as[(Long, Long)].collect())
+    assert(labels.toMap == Map(1L -> 3L, 2L -> 3L, 3L -> 3L,
+      4L -> 6L, 5L -> 6L, 6L -> 6L, 7L -> 7L))
+    assert(sccJobs == 16 + (1 + 3 + 3) + 1) // + 1: the collect
+  }
+
+  private def callSites(token: String): Map[String, Seq[String]] = {
     val root = Paths.get("src/main/scala/graft")
-    val files = Files.walk(root).iterator().asScala
+    Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    def lines(p: Path) = Files.readAllLines(p).asScala.toSeq
-    val sites = files.map(p => root.relativize(p).toString -> p)
-      .filter { case (_, p) => lines(p).exists(_.contains("localCheckpoint(")) }
-      .toMap - "core/Dataflow.scala"
+      .map(p => root.relativize(p).toString ->
+        Files.readAllLines(p).asScala.toSeq)
+      .filter { case (_, lines) => lines.exists(_.contains(token)) }
+      .toMap
+  }
+
+  /** Porting a loop removes its file from `allowed`; nothing is added. */
+  private def assertRatchet(token: String, exempt: Set[String],
+      allowed: Set[String]): Map[String, Seq[String]] = {
+    val sites = callSites(token) -- exempt
     assert(sites.keySet.diff(allowed).isEmpty,
-      s"new raw localCheckpoint( sites: ${sites.keySet.diff(allowed)}")
+      s"new raw $token sites: ${sites.keySet.diff(allowed)}")
     assert(allowed.diff(sites.keySet).isEmpty,
       s"ported, drop from the list: ${allowed.diff(sites.keySet)}")
+    sites
+  }
+
+  test("localCheckpoint( appears only in Dataflow and unported files") {
+    val sites = assertRatchet("localCheckpoint(", Set("core/Dataflow.scala"),
+      Set(
+        "DevBpeProbe.scala", "DevExplain.scala", "DevStatsProbe.scala",
+        "DevVecProbe.scala",
+        "algos/Betweenness.scala", "algos/MinimumSpanningForest.scala",
+        "algos/Neighborhood.scala", "algos/RandomWalks.scala",
+        "algos/SCC.scala", "algos/Sampling.scala", "algos/Truss.scala",
+        "cf/SvdPlusPlus.scala", "cf/TimeSvdPlusPlus.scala",
+        "classify/AdPredictor.scala", "frap/FrapPipeline.scala",
+        "frap/WLRelabel.scala", "plans/CsrPageRank.scala",
+        "streaming/EventStream.scala", "text/Dsir.scala",
+        "vectors/KMeans.scala", "vectors/Pq.scala"))
     // Neighborhood keeps raw checkpoints only in the ANF snapshot loop
-    val nb = lines(sites("algos/Neighborhood.scala"))
+    val nb = sites("algos/Neighborhood.scala")
     val anf = nb.indexWhere(_.contains("def registerStates("))
     val anfEnd = nb.indexWhere(_.trim.startsWith("/**"), anf)
     assert(anf >= 0 && anfEnd > anf)
     assert(nb.zipWithIndex.forall { case (l, i) =>
       !l.contains("localCheckpoint(") || (i > anf && i < anfEnd) })
+  }
+
+  test("checkpointRebased( appears only in the engine and unported files") {
+    assertRatchet("checkpointRebased(",
+      Set("core/Dataflow.scala", "engine/Checkpoints.scala"),
+      Set(
+        "DevStatsProbe.scala", "algos/Louvain.scala", "algos/Truss.scala",
+        "cf/SvdPlusPlus.scala", "cf/TimeSvdPlusPlus.scala",
+        "classify/AdPredictor.scala", "frap/FrapPipeline.scala"))
   }
 }
