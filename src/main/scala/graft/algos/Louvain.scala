@@ -129,15 +129,6 @@ object Louvain {
       moved = next.filter(col("moved")).count()
       comm = next.select(col("id"), col("c"), col("k"))
       round += 1
-      if (sys.env.contains("GRAFT_LOUVAIN_TRACE")) {
-        // sample moves only when tiny — never a corpus-sized collect
-        val mv = if (moved > 0 && moved <= 64)
-          next.filter(col("moved")).select("id", "c").collect()
-            .map(r => s"${r.getLong(0)}->${r.getLong(1)}").sorted.take(12)
-        else Array.empty[String]
-        System.err.println(
-          s"[louvain] round=$round moved=$moved ${mv.mkString(" ")}")
-      }
     }
     und.unpersist(false)
     val minLabel = comm.groupBy(col("c")).agg(min(col("id")).as("community"))

@@ -14,8 +14,8 @@ object Dataflow {
     * stats multiplication runs for minutes and blocks safepoints (observed:
     * SVD++ sweep 7 spending 100 s inside BigInteger.multiplyToomCook3;
     * the 22 M-edge Louvain probe's driver pinned a core inside
-    * SizeInBytesOnlyStatsPlanVisitor by round 14 — DevStatsProbe measures
-    * the digit count multiplying per round). Delta-iterated algos (CC,
+    * SizeInBytesOnlyStatsPlanVisitor by round 14 — SuperstepLoopsSpec
+    * shows the digit count multiplying per round). Delta-iterated algos (CC,
     * SCC, k-cores) dodge this structurally — semi/anti joins take the left
     * child's size, no product — but any loop that inner-joins its state
     * more than once per round cannot.

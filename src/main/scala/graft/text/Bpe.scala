@@ -24,8 +24,8 @@ import graft.text.TextOps._
   * by the distinct-word count, NOT the corpus size) is collected once and
   * the merges run in-memory — only words containing the merged pair are
   * touched, pair counts are maintained incrementally, and the argmax pair
-  * comes from an ordered mirror (TreeSet) in O(log P). Measured by
-  * DevBpeProbe: 1000+ merges in seconds where the job-per-merge loop
+  * comes from an ordered mirror (TreeSet) in O(log P). Measured
+  * (BENCH.md): 1000+ merges in seconds where the job-per-merge loop
   * extrapolated to hours. The collected table is bounded by
   * [[MaxDriverVocab]] rows (a driver-memory bound — deliberately generous
   * since a row is a word + its symbol array); a larger vocabulary fails

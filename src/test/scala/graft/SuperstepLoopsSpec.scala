@@ -2,13 +2,17 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.algos.{Coloring, GraphOps, Hits, KCores, Mis, Neighborhood,
   SCC, Truss}
+import graft.engine.{LocalStore, StateStore, Superstep, SuperstepMetrics}
 
 /** The loops on [[graft.engine.Superstep.run]] run one Spark job per
   * superstep, and raw `localCheckpoint(` calls only shrink.
@@ -149,8 +153,6 @@ class SuperstepLoopsSpec extends AnyFunSuite {
   test("localCheckpoint( appears only in Dataflow and unported files") {
     val sites = assertRatchet("localCheckpoint(", Set("core/Dataflow.scala"),
       Set(
-        "DevBpeProbe.scala", "DevExplain.scala", "DevStatsProbe.scala",
-        "DevVecProbe.scala",
         "algos/Betweenness.scala", "algos/MinimumSpanningForest.scala",
         "algos/Neighborhood.scala", "algos/RandomWalks.scala",
         "algos/SCC.scala", "algos/Sampling.scala", "algos/Truss.scala",
@@ -172,8 +174,56 @@ class SuperstepLoopsSpec extends AnyFunSuite {
     assertRatchet("checkpointRebased(",
       Set("core/Dataflow.scala", "engine/Checkpoints.scala"),
       Set(
-        "DevStatsProbe.scala", "algos/Louvain.scala", "algos/Truss.scala",
+        "algos/Louvain.scala", "algos/Truss.scala",
         "cf/SvdPlusPlus.scala", "cf/TimeSvdPlusPlus.scala",
         "classify/AdPredictor.scala", "frap/FrapPipeline.scala"))
+  }
+
+  test("def main( appears only in the measurement, oracle and job mains") {
+    assertRatchet("def main(", Set.empty,
+      Set("Bench.scala", "Verify.scala", "BenchExtra.scala", "jobs/Jobs.scala"))
+  }
+
+  /** A store that checkpoints with `ckpt` and records the digit count of
+    * each persisted state's size estimate. */
+  private final class DigitsStore(ckpt: (DataFrame, Int) => DataFrame)
+      extends StateStore {
+    val digits = ArrayBuffer.empty[Int]
+    override def persist(state: DataFrame, iter: Int): DataFrame = {
+      val p = ckpt(state, iter)
+      digits += p.queryExecution.optimizedPlan.stats.sizeInBytes.toString.length
+      p
+    }
+    override def log(m: SuperstepMetrics): Unit = ()
+    override def resumePoint(): Option[(Int, DataFrame)] = None
+  }
+
+  test("superstep state size estimates stay bounded (stats rebase)") {
+    // the state is referenced three times per round (two inner self-joins
+    // and a grouped left join): a plain checkpoint keeps the replaced
+    // plan's estimate, and an inner join multiplies its children's, so the
+    // digit count grows ~3x per round until the driver hangs in BigInteger
+    // products
+    def step(df: DataFrame, iter: Int): DataFrame = {
+      val a = df.select(col("id"), (col("v") + 1).as("v"))
+      a.join(df.select(col("id"), col("v").as("w")), Seq("id"))
+        .join(a.withColumnRenamed("v", "u"), Seq("id"))
+        .join(df.groupBy(col("v")).count().withColumnRenamed("v", "id"),
+          Seq("id"), "left")
+        .select(col("id"), (col("v") + col("w") + col("u")).as("v"),
+          lit(0.0).as("delta"))
+    }
+    def digits(ckpt: (DataFrame, Int) => DataFrame, supersteps: Int) = {
+      val store = new DigitsStore(ckpt)
+      val init = spark.range(1000)
+        .select(col("id"), col("id").as("v"), lit(0.0).as("delta"))
+      val r = Superstep.run(init, step, tol = -1.0, supersteps, store)
+      assert(r.supersteps == supersteps)
+      store.digits.toSeq
+    }
+    val rebased = digits(new LocalStore().persist, 8)
+    assert(rebased.size == 9 && rebased.forall(_ <= 19), rebased)
+    val plain = digits((df, _) => df.localCheckpoint(true), 3)
+    assert(plain.last > 19, plain)
   }
 }
