@@ -49,6 +49,16 @@ object KMeans {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0L), (acc, v) => acc + v)
 
+  /** The primitive twin of [[dist2]]: the same left-to-right sum, Long
+    * wrap included.
+    */
+  def dist2Local(a: Array[Long], b: Array[Long]): Long = {
+    var d = 0L
+    var j = 0
+    while (j < a.length) { val x = a(j) - b(j); d += x * x; j += 1 }
+    d
+  }
+
   /** floorDiv(s, n) for integer columns, written so Spark and DuckDB agree
     * for negative sums: subtract pmod first so the quotient is exact, then
     * divide (both engines produce the identical double — s−pmod(s,n) is a
@@ -59,44 +69,27 @@ object KMeans {
     ((s - pmod(s, n)) / n).cast("long")
 
   /** Nearest-centroid assignment of quantized vectors (vec_id, qv) against
-    * a (cid, cv) centroid table, as a primitive-array `mapPartitions` scan
-    * over a broadcast of the k centroids: zero shuffle rows, and the inner
-    * loop is unboxed long arithmetic. This is the documented
-    * mapPartitions-as-last-resort case: the declarative alternative (an
-    * `array_min` over `transform`/`aggregate` folds) plans the same
-    * zero-exchange shape but higher-order functions are CodegenFallback —
-    * interpreted, per-element boxed — and measured ~40× slower on the
-    * KmeansScaleProbe (src/test). Ties break toward the smaller cid:
-    * centroids are scanned in ascending-cid order with a strict `<`.
-    * The k-row collect is the same driver materialization a packed
-    * broadcast would do; k is a fixed model size, never O(N).
+    * a (cid, cv) centroid table: one [[Scan]] over a broadcast of the k
+    * centroids (k is a fixed model size, never O(N)) — zero shuffle rows,
+    * unboxed long arithmetic. The declarative alternative (an `array_min`
+    * over `transform`/`aggregate` folds) plans the same zero-exchange shape
+    * but is interpreted, and measured ~40× slower on the KmeansScaleProbe
+    * (src/test). Ties break toward the smaller cid.
     * Returns (vec_id, qv, cid, d2).
     */
   def assignTo(vecs: DataFrame, cents: DataFrame): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val cArr: Array[(Int, Array[Long])] =
-      cents.select(col("cid"), col("cv")).as[(Int, Array[Long])]
-        .collect().sortBy(_._1)
-    val bc = spark.sparkContext.broadcast(cArr)
-    vecs.select(col("vec_id"), col("qv")).as[(Long, Array[Long])]
-      .mapPartitions { it =>
-        val cs = bc.value
-        it.map { case (id, v) =>
-          var bestD = Long.MaxValue
-          var bestC = -1
-          var i = 0
-          while (i < cs.length) {
-            val cv = cs(i)._2
-            var d = 0L
-            var j = 0
-            while (j < v.length) { val x = v(j) - cv(j); d += x * x; j += 1 }
-            if (d < bestD) { bestD = d; bestC = cs(i)._1 }
-            i += 1
-          }
-          (id, v, bestC, bestD)
-        }
-      }.toDF("vec_id", "qv", "cid", "d2")
+    val cs = Scan.collect(cents.select(col("cid"), col("cv"))
+      .as[(Int, Array[Long])]).sortBy(_._1)
+    Scan.broadcastScan(cs, vecs.select(col("vec_id"), col("qv"))
+        .as[(Long, Array[Long])]) { (cs, it) =>
+      val d = new Array[Long](cs.length)
+      it.flatMap { case (id, v) =>
+        val b = Scan.nearest(d)(i => dist2Local(v, cs(i)._2))
+        Option.when(b >= 0)((id, v, cs(b)._1, d(b)))
+      }
+    }.toDF("vec_id", "qv", "cid", "d2")
   }
 
   /** The k seed centroids: cid 0..k-1 = the k lowest vec_ids' quantized
@@ -196,14 +189,9 @@ object KMeans {
         (dotQ.cast("double") /
           (sqrt(n2(col("qv")).cast("double")) *
            sqrt(n2(col("quv")).cast("double")))).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("vec_id"))
     // eager top-k materialization (queries×k rows) before the corpus cache
     // drops — see [[lloyd]]'s dead-persist note
-    val out = rer.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"),
-        floor(col("cos") * 1e6 + 0.5).cast("long").as("cos_q6"), col("rank"))
-      .localCheckpoint(true)
+    val out = Similarity.rankByCos(rer, k).localCheckpoint(true)
     q.unpersist(false)
     out
   }

@@ -22,14 +22,13 @@ import org.apache.spark.sql.functions._
   * ties break toward the smaller cid/vec_id. The DuckDB oracle replays
   * training, encoding, and ADC bit for bit.
   *
-  * Training cost shape: the assignment stream is N·m·ks narrow rows
-  * (vec_id, sub, cid, d2) against a BROADCAST m·ks-row codebook —
-  * map-side-combinable min(struct(d2, cid)), one shuffle of N·m rows per
-  * iteration; the update shuffles m·ks·(d/m) = ks·d rows. ADC scoring
-  * joins the m·ks-row distance-table broadcast to the code table and
-  * sums m rows per (query, vector) — the scan IS the top-k candidate
-  * stream, which is the point of PQ (compressed exhaustive, no recall
-  * cliff from pruning; compose with IVF cells when N demands it).
+  * Training cost shape: assignment scans the N·m subvectors against a
+  * BROADCAST m·ks-row codebook ([[assign]]), emitting N·m narrow rows
+  * (vec_id, sub, cid, d2); the update shuffles m·ks·(d/m) = ks·d rows.
+  * ADC scoring joins the m·ks-row distance-table broadcast to the code
+  * table and sums m rows per (query, vector) — the scan IS the top-k
+  * candidate stream, which is the point of PQ (compressed exhaustive, no
+  * recall cliff from pruning; compose with IVF cells when N demands it).
   */
 object Pq {
 
@@ -64,57 +63,27 @@ object Pq {
   }
 
   /** Nearest codebook entry per (vector, subspace): (vec_id, sub, cid,
-    * d2), ties toward the smaller cid.
-    *
-    * Round 6 (guide step 4; the KMeans.assignTo precedent): previously a
-    * broadcast join materializing N·m·ks rows through the interpreted
-    * (CodegenFallback) `KMeans.dist2` fold + a min(struct) aggregate; now
-    * a primitive-array partition scan over the broadcast codebooks —
-    * zero extra rows, unboxed long arithmetic. Exact-integer d2 with the
-    * identical (x−y)² left-to-right summation (Long wrap included) and an
-    * ascending-cid scan keeping the first minimum = the min(struct(d2,
-    * cid)) tie-break, so codes are identical by construction. Subspaces
-    * with no codebook entries emit nothing, like the inner join.
+    * d2), ties toward the smaller cid — one [[Scan]] over the broadcast
+    * codebooks. Subspaces with no codebook entries emit nothing, like an
+    * inner join.
     */
   def assign(sv: DataFrame, cb: DataFrame): DataFrame = {
     val spark = sv.sparkSession
     import spark.implicits._
-    val cbRows = cb.select(col("sub"), col("cid"), col("scv"))
-      .as[(Int, Int, Array[Long])].collect()
-    val maxSub = if (cbRows.isEmpty) -1 else cbRows.iterator.map(_._1).max
-    val bySub: Array[Array[(Int, Array[Long])]] =
-      Array.tabulate(maxSub + 1) { s =>
-        cbRows.filter(_._1 == s).sortBy(_._2).map(t => (t._2, t._3))
+    val cbRows = Scan.collect(cb.select(col("sub"), col("cid"), col("scv"))
+      .as[(Int, Int, Array[Long])])
+    val bySub = Array.tabulate(cbRows.map(_._1).maxOption.fold(0)(_ + 1)) { s =>
+      cbRows.filter(_._1 == s).sortBy(_._2).map(t => (t._2, t._3))
+    }
+    Scan.broadcastScan(bySub, sv.select(col("vec_id"), col("sub"), col("sqv"))
+        .as[(Long, Int, Array[Long])]) { (cbs, it) =>
+      val d = cbs.map(e => new Array[Long](e.length))
+      it.flatMap { case (id, sub, v) =>
+        val b = if (!cbs.indices.contains(sub)) -1
+          else Scan.nearest(d(sub))(i => KMeans.dist2Local(v, cbs(sub)(i)._2))
+        Option.when(b >= 0)((id, sub, cbs(sub)(b)._1, d(sub)(b)))
       }
-    val bc = spark.sparkContext.broadcast(bySub)
-    sv.select(col("vec_id"), col("sub"), col("sqv"))
-      .as[(Long, Int, Array[Long])]
-      .mapPartitions { it =>
-        val cbs = bc.value
-        it.flatMap { case (id, sub, v) =>
-          val entries =
-            if (sub >= 0 && sub < cbs.length) cbs(sub)
-            else Array.empty[(Int, Array[Long])]
-          if (entries.isEmpty) Iterator.empty
-          else {
-            var bestD = 0L
-            var bestC = 0
-            var first = true
-            var i = 0
-            while (i < entries.length) {
-              val w = entries(i)._2
-              var d = 0L
-              var j = 0
-              while (j < v.length) { val x = v(j) - w(j); d += x * x; j += 1 }
-              if (first || d < bestD) {
-                bestD = d; bestC = entries(i)._1; first = false
-              }
-              i += 1
-            }
-            Iterator.single((id, sub, bestC, bestD))
-          }
-        }
-      }.toDF("vec_id", "sub", "cid", "d2")
+    }.toDF("vec_id", "sub", "cid", "d2")
   }
 
   /** One joint Lloyd step over all m codebooks: assign, then exact
@@ -179,56 +148,21 @@ object Pq {
   /** EXACT grid-L2 top-k per query over the quantized corpus —
     * (query_id, vec_id), rank by (d2, vec_id), self-matches included
     * (mirroring the ADC scans, which score the query's own row too).
-    * Shared baseline of [[adcRecall]] and [[ivfAdcRecall]] (ADVICE r5:
-    * the two previously duplicated this scaffolding verbatim).
-    *
-    * Round 6: a primitive partition scan with an exact per-partition
-    * top-k heap per query replaces the N·|Q| crossJoin through the
-    * interpreted dist2 fold; integer d2 with the identical summation
-    * order, heap order = the window's own (d2 ASC, vec_id ASC), global
-    * top-k ⊆ union of partition top-ks ⇒ identical rows.
+    * Shared baseline of [[adcRecall]] and [[ivfAdcRecall]].
     */
   private def gridExactTopK(qv: DataFrame, qq: DataFrame, k: Int): DataFrame = {
     val spark = qv.sparkSession
     import spark.implicits._
-    val qArr: Array[(Long, Array[Long])] =
-      qq.as[(Long, Array[Long])].collect().sortBy(_._1)
-    val bc = spark.sparkContext.broadcast(qArr)
-    val pruned = qv.as[(Long, Array[Long])]
-      .mapPartitions { it =>
-        val qs = bc.value
-        if (qs.isEmpty) Iterator.empty
-        else {
-          // heap root = current WORST kept candidate (larger d2, then
-          // larger vec_id) under the final window's total order
-          val worstOnTop: Ordering[(Long, Long)] = new Ordering[(Long, Long)] {
-            def compare(a: (Long, Long), b: (Long, Long)): Int = {
-              val c = java.lang.Long.compare(a._1, b._1)
-              if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-            }
-          }
-          val heaps = Array.fill(qs.length)(
-            new scala.collection.mutable.PriorityQueue[(Long, Long)]()(worstOnTop))
-          it.foreach { case (id, v) =>
-            var i = 0
-            while (i < qs.length) {
-              val w = qs(i)._2
-              var d = 0L
-              var j = 0
-              while (j < v.length) { val x = v(j) - w(j); d += x * x; j += 1 }
-              val h = heaps(i)
-              if (h.size < k) h.enqueue((d, id))
-              else if (worstOnTop.compare((d, id), h.head) < 0) {
-                h.dequeue(); h.enqueue((d, id))
-              }
-              i += 1
-            }
-          }
-          qs.iterator.zipWithIndex.flatMap { case ((qid, _), i) =>
-            heaps(i).iterator.map { case (d, id) => (qid, id, d) }
-          }
+    val qs = Scan.collect(qq.as[(Long, Array[Long])])
+    val pruned = Scan.broadcastScan(qs, qv.as[(Long, Array[Long])]) {
+      (qs, it) => Scan.topK(it, qs.length, k) { case ((id, v), tops) =>
+        var q = 0
+        while (q < qs.length) {
+          tops(q).offer(KMeans.dist2Local(v, qs(q)._2), id)
+          q += 1
         }
-      }.toDF("query_id", "vec_id", "d2")
+      }.map { case (q, d2, id) => (qs(q)._1, id, d2) }
+    }.toDF("query_id", "vec_id", "d2")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("d2"), col("vec_id"))
     pruned.withColumn("rank", row_number().over(w))

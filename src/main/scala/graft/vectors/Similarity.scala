@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`Array[Float]`):
   * brute-force cosine top-k as the exact baseline, and a signed-random-
-  * projection (SRP) LSH-bucketed variant as the scale path. Dot products are
-  * `zip_with`/`aggregate` column expressions (codegen'd, no UDFs).
+  * projection (SRP) LSH-bucketed variant as the scale path. Corpus-sized
+  * scans run on [[Scan]]; candidate-bounded dot products are
+  * `zip_with`/`aggregate` column expressions (no UDFs).
   *
   * Scale notes: brute force is a broadcast of the (small) query set against
   * the corpus — linear scan, embarrassingly parallel, the right baseline up
@@ -18,39 +19,16 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Σ aᵢ·bᵢ as a column expression over two array columns. NOTE (round 6):
-    * higher-order array functions are CodegenFallback — interpreted,
-    * per-element boxed — so this form is kept only for candidate-bounded
-    * sites (LSH rerank, near-dup verification); the corpus-sized scans
-    * ([[bruteForceTopK]], [[ivfTopK]] assignment) use the primitive twins
-    * below, which reproduce the same left-to-right fold bit for bit.
+  /** Σ aᵢ·bᵢ as a column expression over two array columns. Higher-order
+    * array functions are CodegenFallback (interpreted, per-element boxed),
+    * so this form serves only candidate-bounded sites (LSH rerank, near-dup
+    * verification); the corpus-sized scans use its [[Scan.dot]] twin.
     */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
   def l2norm(a: Column): Column =
     sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v * v))
-
-  /** Primitive twin of [[dot]]: identical add/multiply order (products
-    * accumulated left to right from 0.0), so results are bit-identical to
-    * the Column form on the same doubles.
-    */
-  private[vectors] def dotLocal(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0
-    var j = 0
-    while (j < a.length) { s += a(j) * b(j); j += 1 }
-    s
-  }
-
-  /** Primitive twin of [[l2norm]] (same fold order; `math.sqrt` and the
-    * Column `sqrt` are the same correctly-rounded IEEE operation).
-    */
-  private[vectors] def l2normLocal(a: Array[Double]): Double = {
-    var s = 0.0
-    var j = 0
-    while (j < a.length) { s += a(j) * a(j); j += 1 }
-    math.sqrt(s)
-  }
 
   /** Deterministic ±1 hyperplanes: `bits` planes × `dim` components, keyed
     * by a namespace tag. Component sign = top bit of md5("srp:tag:b:d") —
@@ -65,109 +43,58 @@ object Similarity {
     }
   }
 
-  /** SRP-LSH bucket id per vector: bit i = [dot(v, plane_i) > 0]. */
+  /** SRP-LSH bucket id per vector: bit i = [dot(v, plane_i) > 0]. The
+    * Column form of [[Scan.srpSignature]], kept as its reference.
+    */
   def srpBucket(vec: Column, planes: Array[Array[Double]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
       when(dot(vec, typedLit(p.toSeq)) > 0, lit(1L << i)).otherwise(0L)
     }.reduce(_ + _)
 
-  /** All-tables SRP bucketing as one primitive partition scan:
-    * (id, t, b) rows for every table t — round 6, guide step 4. The
-    * Column form above evaluates tables·bits interpreted `dot` folds per
-    * row (72 per vector for the 12×6 default); this computes the same
-    * signs from the same left-to-right fold (bit-identical doubles ⇒
-    * identical `> 0` outcomes ⇒ identical buckets) in unboxed loops.
-    * Kept: [[srpBucket]] for the single-table near-dup path's probing
-    * variants and the oracle-documentation value of the Column form.
-    */
-  private def srpBucketsScan(df: DataFrame, idCol: String, vecCol: String,
-      planeSets: Seq[Array[Array[Double]]]): DataFrame = {
+  /** (id, t, b) rows: the SRP bucket b of every vector in every table t. */
+  private[graft] def srpBucketsScan(df: DataFrame, idCol: String,
+      vecCol: String, planeSets: Seq[Array[Array[Double]]]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(planeSets.toArray)
-    df.select(col(idCol), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val ps = bc.value
-        it.flatMap { case (id, v) =>
-          Iterator.tabulate(ps.length) { t =>
-            val planes = ps(t)
-            var b = 0L
-            var i = 0
-            while (i < planes.length) {
-              if (dotLocal(v, planes(i)) > 0) b |= (1L << i)
-              i += 1
-            }
-            (id, t, b)
-          }
-        }
-      }.toDF(idCol, "t", "b")
+    Scan.broadcastScan(planeSets.toArray, df.select(col(idCol),
+        col(vecCol).cast("array<double>")).as[(Long, Array[Double])]) {
+      (ps, it) => it.flatMap { case (id, v) =>
+        Iterator.tabulate(ps.length)(t => (id, t, Scan.srpSignature(v, ps(t))))
+      }
+    }.toDF(idCol, "t", "b")
   }
+
+  /** Each query's k best candidates by (cos DESC, vec_id ASC), cos
+    * quantized to 1e-6: (query_id, vec_id, cos_q6, rank).
+    */
+  private[vectors] def rankByCos(cand: DataFrame, k: Int): DataFrame =
+    cand.withColumn("rank", row_number().over(Window.partitionBy("query_id")
+        .orderBy(desc("cos"), asc("vec_id"))))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("vec_id"),
+        floor(col("cos") * 1e6 + 0.5).cast("long").as("cos_q6"), col("rank"))
 
   /** Exact cosine top-k of each query vector against the corpus.
     * (query_id, vec_id, cos_q6, rank) — ties broken by vec_id.
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    // Round 6 (guide step 4 + §2.3): the previous broadcast-NLJ form
-    // materialized N·|Q| joined rows, evaluated the interpreted
-    // zip_with/aggregate dot per row, and shuffled all N·|Q| rows into the
-    // rank window. This scan computes the same cosines in an unboxed
-    // primitive loop (same fold order → bit-identical doubles) and keeps an
-    // exact per-partition top-k per query (same total order as the window:
-    // cos DESC, vec_id ASC — Double.compare matches Spark's double ordering
-    // incl. NaN-greatest), so the window sees ≤ partitions·|Q|·k rows.
-    // Global top-k ⊆ union of partition top-ks, so results are unchanged.
     val spark = corpus.sparkSession
     import spark.implicits._
-    val qArr: Array[(Long, Array[Double], Double)] =
-      queries.select(col("vec_id"), col("embedding").cast("array<double>"))
-        .as[(Long, Array[Double])].collect()
-        .map { case (id, v) => (id, v, l2normLocal(v)) }
-    val bc = spark.sparkContext.broadcast(qArr)
-    val pruned = corpus.select(col("vec_id"),
-        col("embedding").cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val qs = bc.value
-        if (qs.isEmpty) Iterator.empty
-        else {
-          // heap root = current WORST kept candidate (smaller cos, then
-          // larger id); built per task so nothing but the broadcast and k
-          // cross the closure boundary
-          val worstOnTop: Ordering[(Double, Long)] = new Ordering[(Double, Long)] {
-            def compare(a: (Double, Long), b: (Double, Long)): Int = {
-              val c = java.lang.Double.compare(b._1, a._1)
-              if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-            }
-          }
-          val heaps = Array.fill(qs.length)(
-            new scala.collection.mutable.PriorityQueue[(Double, Long)]()(worstOnTop))
-          it.foreach { case (id, v) =>
-            val cn = l2normLocal(v)
-            var i = 0
-            while (i < qs.length) {
-              val (qid, qv, qn) = qs(i)
-              if (id != qid) {
-                val cand = (dotLocal(v, qv) / (cn * qn), id)
-                val h = heaps(i)
-                if (h.size < k) h.enqueue(cand)
-                else if (worstOnTop.compare(cand, h.head) < 0) {
-                  h.dequeue(); h.enqueue(cand)
-                }
-              }
-              i += 1
-            }
-          }
-          qs.iterator.zipWithIndex.flatMap { case ((qid, _, _), i) =>
-            heaps(i).iterator.map { case (cos, id) => (qid, id, cos) }
-          }
+    def vecs(df: DataFrame) = df.select(col("vec_id"),
+      col("embedding").cast("array<double>")).as[(Long, Array[Double])]
+    val qs = Scan.collect(vecs(queries))
+      .map { case (id, v) => (id, v, Scan.l2norm(v)) }
+    rankByCos(Scan.broadcastScan(qs, vecs(corpus)) { (qs, it) =>
+      Scan.topK(it, qs.length, k) { case ((id, v), tops) =>
+        val cn = Scan.l2norm(v)
+        var q = 0
+        while (q < qs.length) {
+          if (qs(q)._1 != id) tops(q).offer(
+            ~Scan.orderKey(Scan.dot(v, qs(q)._2) / (cn * qs(q)._3)), id)
+          q += 1
         }
-      }.toDF("query_id", "vec_id", "cos")
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("vec_id"))
-    pruned.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"),
-        floor(col("cos") * 1e6 + 0.5).cast("long").as("cos_q6"), col("rank"))
+      }.map { case (q, key, id) => (qs(q)._1, id, Scan.fromOrderKey(~key)) }
+    }.toDF("query_id", "vec_id", "cos"), k)
   }
 
   /** Multi-table SRP-LSH approximate top-k: `tables` independent hash
@@ -182,11 +109,6 @@ object Similarity {
       dim: Int = 64): DataFrame = {
     val planeSets = (0 until tables)
       .map(t => hyperplanes(bits, dim, t.toString))
-    // corpus/query bucketing via the primitive all-tables scan (round 6):
-    // the explode-of-srpBucket Column form paid tables·bits interpreted
-    // dot folds per row — the dominant cost of the whole query at corpus
-    // scale. Buckets are bit-identical (same fold, same sign test), so
-    // the candidate set — and the result — is unchanged.
     def bucketed(df: DataFrame, idCol: String, vecCol: String) =
       srpBucketsScan(df, idCol, vecCol, planeSets)
     val c = corpus.select(col("vec_id"),
@@ -201,11 +123,7 @@ object Similarity {
       .select("query_id", "vec_id").distinct()
       .join(c, "vec_id").join(q, "query_id")
       .withColumn("cos", dot(col("cv"), col("qv")) / (col("cn") * col("qn")))
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("vec_id"))
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"),
-        floor(col("cos") * 1e6 + 0.5).cast("long").as("cos_q6"), col("rank"))
+    rankByCos(cand, k)
   }
 
   /** IVF-flat approximate top-k — the inverted-file scale path: coarse
@@ -218,9 +136,8 @@ object Similarity {
     *
     * Scale shape: the centroid table is a FIXED-size broadcast (cell count
     * does not grow with N in a real deployment), so assignment is one
-    * broadcast-join + map-side-combinable `min_by` per vector — O(N·C) work,
-    * zero N×C shuffle rows; per-query probe cost is O(C + N·nprobe/C)
-    * instead of O(N).
+    * broadcast scan ([[ivfCells]]) — O(N·C) work, zero N×C shuffle rows;
+    * per-query probe cost is O(C + N·nprobe/C) instead of O(N).
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       centEvery: Int = 50, nprobe: Int = 3): DataFrame = {
@@ -236,48 +153,7 @@ object Similarity {
     // duplicate centroids) break toward the smaller cent_id, mirroring the
     // oracle's ORDER BY (d2, cent_id)
     def d2(vec: Column): Column = col("wn2") - lit(2.0) * dot(vec, col("w"))
-    // Corpus→cell assignment as a primitive partition scan over the
-    // broadcast cell table (round 6, guide step 4; the KMeans.assignTo
-    // precedent): the previous crossJoin+min_by form materialized N·C rows
-    // through an interpreted (CodegenFallback) aggregate-fold d2 per row
-    // plus an interpreted struct-ordered SortAggregate. Fold order
-    // (products left to right, d2 = ||w||² − 2·v·w) and the (d2, cent_id)
-    // tie-break (ascending-cent_id scan, strict <) are bit-identical, so
-    // every vector lands in the same cell and results are unchanged. The
-    // query-side probe ranking below keeps the declarative form — it runs
-    // over |Q|·C rows, not N·C.
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cArr: Array[(Long, Array[Double], Double)] =
-      cents.select(col("cent_id"), col("w")).as[(Long, Array[Double])]
-        .collect().sortBy(_._1)
-        .map { case (id, w) =>
-          var a = 0.0
-          var j = 0
-          while (j < w.length) { a += w(j) * w(j); j += 1 }
-          (id, w, a)
-        }
-    val bcCells = spark.sparkContext.broadcast(cArr)
-    val assign = c.select(col("vec_id"), col("cv")).as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val cs = bcCells.value
-        if (cs.isEmpty) Iterator.empty
-        else it.map { case (id, v) =>
-          var bestD = Double.PositiveInfinity
-          var bestC = 0L
-          var i = 0
-          while (i < cs.length) {
-            val w = cs(i)._2
-            var d = 0.0
-            var j = 0
-            while (j < v.length) { d += v(j) * w(j); j += 1 }
-            val dd = cs(i)._3 - 2.0 * d
-            if (dd < bestD) { bestD = dd; bestC = cs(i)._1 }
-            i += 1
-          }
-          (id, bestC)
-        }
-      }.toDF("vec_id", "cell")
+    val assign = ivfCells(c, cents)
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").cast("array<double>").as("qv"))
       .withColumn("qn", l2norm(col("qv")))
@@ -291,11 +167,28 @@ object Similarity {
       .select("query_id", "vec_id")
     val rer = cand.join(c, "vec_id").join(q, "query_id")
       .withColumn("cos", dot(col("cv"), col("qv")) / (col("cn") * col("qn")))
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("vec_id"))
-    rer.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"),
-        floor(col("cos") * 1e6 + 0.5).cast("long").as("cos_q6"), col("rank"))
+    rankByCos(rer, k)
+  }
+
+  /** Nearest cell (vec_id, cell) of every (vec_id, cv) vector among the
+    * (cent_id, w) cells by the `d2` of [[ivfTopK]], ties and NaNs ordered
+    * as its `ORDER BY (d2, cent_id)`.
+    */
+  private[graft] def ivfCells(c: DataFrame, cents: DataFrame): DataFrame = {
+    val spark = c.sparkSession
+    import spark.implicits._
+    val cs = Scan.collect(cents.select(col("cent_id"), col("w"))
+        .as[(Long, Array[Double])])
+      .sortBy(_._1).map { case (id, w) => (id, w, Scan.dot(w, w)) }
+    Scan.broadcastScan(cs, c.select(col("vec_id"), col("cv"))
+        .as[(Long, Array[Double])]) { (cs, it) =>
+      val d = new Array[Long](cs.length)
+      it.flatMap { case (id, v) =>
+        val b = Scan.nearest(d)(i =>
+          Scan.orderKey(cs(i)._3 - 2.0 * Scan.dot(v, cs(i)._2)))
+        Option.when(b >= 0)((id, cs(b)._1))
+      }
+    }.toDF("vec_id", "cell")
   }
 
   /** Embedding near-duplicate pairs: cosine >= threshold, found via shared
@@ -303,31 +196,15 @@ object Similarity {
     */
   def nearDupPairs(corpus: DataFrame, threshold: Double,
       bits: Int = 12, dim: Int = 64): DataFrame = {
-    val planes = hyperplanes(bits, dim, "nd")
-    // per-row norm + bucket as one primitive scan (round 6): same folds,
-    // same sign test as the l2norm/srpBucket Column forms — bit-identical
-    // n and bucket0, one unboxed pass instead of bits+1 interpreted folds
-    // per row. The Hamming-1 probing explode and the exact cosine
-    // verification below stay declarative (bucket arithmetic is codegen'd;
-    // the verification is candidate-bounded, not corpus-sized).
     val spark = corpus.sparkSession
     import spark.implicits._
-    val bcP = spark.sparkContext.broadcast(planes)
-    val c = corpus.select(col("vec_id"),
-        col("embedding").cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val ps = bcP.value
-        it.map { case (id, v) =>
-          var b = 0L
-          var i = 0
-          while (i < ps.length) {
-            if (dotLocal(v, ps(i)) > 0) b |= (1L << i)
-            i += 1
-          }
-          (id, v, l2normLocal(v), b)
-        }
-      }.toDF("vec_id", "v", "n", "bucket0")
+    val c = Scan.broadcastScan(hyperplanes(bits, dim, "nd"), corpus.select(
+        col("vec_id"), col("embedding").cast("array<double>"))
+        .as[(Long, Array[Double])]) { (ps, it) =>
+      it.map { case (id, v) =>
+        (id, v, Scan.l2norm(v), Scan.srpSignature(v, ps))
+      }
+    }.toDF("vec_id", "v", "n", "bucket0")
     // index each vector under its own bucket and all Hamming-1 buckets of
     // the *lower*-id side only (so each near pair meets at least once)
     val probed = c.select(col("vec_id"), col("v"), col("n"),

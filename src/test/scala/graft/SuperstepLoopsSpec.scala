@@ -179,6 +179,13 @@ class SuperstepLoopsSpec extends AnyFunSuite {
         "classify/AdPredictor.scala", "frap/FrapPipeline.scala"))
   }
 
+  test("broadcasts and mapPartitions scans go through the vector kernel") {
+    assertRatchet("sparkContext.broadcast(", Set.empty,
+      Set("vectors/Scan.scala"))
+    assertRatchet(".mapPartitions", Set.empty, Set("vectors/Scan.scala",
+      "plans/CsrPageRank.scala", "multimodal/Multimodal.scala"))
+  }
+
   test("def main( appears only in the measurement, oracle and job mains") {
     assertRatchet("def main(", Set.empty,
       Set("Bench.scala", "Verify.scala", "BenchExtra.scala", "jobs/Jobs.scala"))

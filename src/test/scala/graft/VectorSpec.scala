@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Tables
-import graft.vectors.Similarity
+import graft.vectors.{Scan, Similarity}
 
 class VectorSpec extends AnyFunSuite {
   lazy val spark = TestSessions.spark
@@ -98,6 +101,79 @@ class VectorSpec extends AnyFunSuite {
     val expected = emb.limit(50).select("vec_id").as[Long].collect()
       .map(id => (id, id + 1000000L)).toSet
     assert(expected.subsetOf(pairs), s"missed ${expected -- pairs}")
+  }
+
+  // ---- broadcast-scan kernel vs its Column forms on NaN/Inf input ---------
+
+  /** Deterministic sample of (vec_id, embedding) tables, ids from 1: 4-dim
+    * rows whose components mix finite values, 0.0, NaN, +Inf and −Inf,
+    * plus one all-NaN row. No row is all zeros (a zero norm divides by
+    * zero, which ANSI mode rejects in the Column forms).
+    */
+  private def nonFiniteTables(n: Int) = {
+    val comp = Gen.frequency(6 -> Gen.oneOf(-2.0, -1.0, -0.5, 0.5, 1.0, 2.0),
+      1 -> Gen.const(0.0), 1 -> Gen.const(Double.NaN),
+      1 -> Gen.const(Double.PositiveInfinity),
+      1 -> Gen.const(Double.NegativeInfinity))
+    val row = Gen.listOfN(4, comp).suchThat(_.exists(_ != 0.0))
+    (0 until n).flatMap(i => Gen.listOfN(24, row)
+        .apply(Gen.Parameters.default, Seed(7L + i)))
+      .map(rows => (rows :+ List.fill(4)(Double.NaN)).zipWithIndex
+        .map { case (v, i) => (i + 1L, v) }.toDF("vec_id", "embedding"))
+  }
+
+  test("property: srpSignature equals the srpBucket Column form on NaN/Inf") {
+    val planes = Similarity.hyperplanes(8, 4, "nan")
+    for (t <- nonFiniteTables(3)) {
+      val want = t.select(col("vec_id"),
+        Similarity.srpBucket(col("embedding"), planes)).as[(Long, Long)]
+      val got = Similarity.srpBucketsScan(t, "vec_id", "embedding",
+        Seq(planes)).select("vec_id", "b").as[(Long, Long)]
+      assert(got.collect().toMap == want.collect().toMap)
+    }
+  }
+
+  test("property: nearest cells equal crossJoin + min_by on NaN/Inf") {
+    for (t <- nonFiniteTables(3)) {
+      val c = t.select(col("vec_id"), col("embedding").as("cv"))
+      val cells = t.filter(col("vec_id") % 3 === 0)
+        .select(col("vec_id").as("cent_id"), col("embedding").as("w"))
+      val d2 = aggregate(col("w"), lit(0.0), (acc, x) => acc + x * x) -
+        lit(2.0) * Similarity.dot(col("cv"), col("w"))
+      val want = c.crossJoin(cells).withColumn("d2", d2).groupBy("vec_id")
+        .agg(min_by(col("cent_id"), struct(col("d2"), col("cent_id"))))
+        .as[(Long, Long)].collect().toMap
+      val got = Similarity.ivfCells(c, cells).as[(Long, Long)].collect().toMap
+      assert(got == want)
+    }
+  }
+
+  test("property: brute-force top-k equals crossJoin + window on NaN/Inf") {
+    for (t <- nonFiniteTables(3)) {
+      val q = t.filter(col("vec_id") % 4 === 0)
+      val cos = Similarity.dot(col("cv"), col("qv")) /
+        (Similarity.l2norm(col("cv")) * Similarity.l2norm(col("qv")))
+      val want = t.select(col("vec_id"), col("embedding").as("cv"))
+        .crossJoin(q.select(col("vec_id").as("query_id"),
+          col("embedding").as("qv")))
+        .filter(col("vec_id") =!= col("query_id"))
+        .withColumn("cos", cos)
+        .withColumn("rank", row_number().over(Window.partitionBy("query_id")
+          .orderBy(desc("cos"), asc("vec_id"))))
+      val got = Similarity.bruteForceTopK(t, q, 3)
+      assert(got.select("query_id", "vec_id", "rank").as[(Long, Long, Int)]
+        .collect().toSet == want.filter(col("rank") <= 3)
+        .select("query_id", "vec_id", "rank").as[(Long, Long, Int)]
+        .collect().toSet)
+    }
+  }
+
+  test("a small side over MaxBroadcastRows rows is refused") {
+    val queries = spark.range(Scan.MaxBroadcastRows + 1L)
+      .select(col("id").as("vec_id"), array(lit(1.0f)).as("embedding"))
+    val e = intercept[IllegalArgumentException](
+      Similarity.bruteForceTopK(emb, queries, 5))
+    assert(e.getMessage.contains("MaxBroadcastRows"))
   }
 
   // ---- integer-grid Lloyd k-means + SemDeDup ------------------------------
