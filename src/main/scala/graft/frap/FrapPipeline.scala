@@ -3,6 +3,8 @@ package graft.frap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.vectors.Scan
+
 /** End-to-end FRAP pipeline (the reference's main.cpp flow re-expressed):
   * distributed WL relabeling + kernel histograms + pairwise KL distance
   * matrix over all graphs at once ([[Kernels.klMatrix]] — the learning
@@ -42,84 +44,77 @@ object FrapPipeline {
   }
 
   /** Monitoring at scale: the radius test (detection fast path,
-    * main.cpp:322-341) for EVERY graph in `monitorCounts` as pure dataflow —
-    * profile centroids become a small sparse (cent, label, cnt) table and
-    * [[Kernels.klCross]] yields all graph×centroid distances without
-    * collecting a single count array, so the number of monitored graphs is
-    * unbounded by driver memory (VERDICT r2 "weak at 100×" #2: the G×D
-    * collect is now only needed for the rare recluster branch on flagged
-    * graphs, which normal-dominated production traffic keeps tiny).
+    * main.cpp:322-341) for EVERY graph in `monitorCounts`, in one scan of
+    * its graphs against the broadcast profile centroids — no count array
+    * is collected, so the number of monitored graphs is unbounded by driver
+    * memory (VERDICT r2 "weak at 100×" #2: the G×D collect is now only
+    * needed for the rare recluster branch on flagged graphs, which
+    * normal-dominated production traffic keeps tiny).
     *
     * Returns (graph_id, within_radius, min_distance) for EVERY graph present
     * in `monitorCounts` — including a graph whose labels are ALL outside the
     * frozen dictionary (the maximally novel behavior): it gets
     * within_radius = false with a null min_distance rather than silently
-    * vanishing from the result (the frozen-map restriction would otherwise
-    * drop its every row before the distance join).
+    * vanishing from the result.
     *
     * @param monitorCounts sparse (graph_id, label, cnt); labels NOT yet
-    *   restricted to the dictionary (the restriction happens here)
+    *   restricted to the dictionary (the restriction happens in the scan)
     * @param dict frozen dictionary (label, label_idx)
     */
   def monitorAtScale(spark: SparkSession, monitorCounts: DataFrame,
       profile: Frap.Profile, dict: DataFrame, dictSize: Int): DataFrame = {
     import spark.implicits._
-    val allIds = monitorCounts.select("graph_id").distinct()
-    val inDict = monitorCounts.join(dict.select("label"), "label")
-    val centRows = profile.centroids.zipWithIndex.flatMap { case (arr, ci) =>
-      arr.zipWithIndex.collect {
-        case (c, li) if c != 0 => (f"cent-$ci%03d", li.toLong, c.toLong)
+    val labels = Kernels.labelsOf(dict, dictSize)
+    // Both sides of the comparison sit on the same 1e-9 grid, as
+    // reclusterAtScale quantizes before its arg-min: a distance the driver
+    // oracle puts exactly on a radius lands on the radius's grid point, so
+    // the boundary case decides as the driver does. Widening the acceptance
+    // region instead (ADVICE r3: an epsilon on the radius test) shifted the
+    // decision boundary. Real detection margins (BENCH: abnormal
+    // min-distance ≈ 3.5 vs normal 0) dwarf the grid.
+    val cents = profile.centroids.zip(profile.radii).flatMap { case (arr, r) =>
+      val nz = Kernels.sparseCounts(arr, labels)
+      Option.when(nz.nonEmpty)((Kernels.klRow("", nz.map(_._1),
+        nz.map(_._2), dictSize), quantize(r)))
+    }.toArray
+    Scan.broadcastScan((labels.toSet, cents), Kernels.grouped(monitorCounts)) {
+      case ((inDict, cs), it) => it.map { case (id, ls, c) =>
+        val keep = ls.indices.filter(i => inDict(ls(i)))
+        if (keep.isEmpty || cs.isEmpty) (id, false, None)
+        else {
+          val g = Kernels.klRow(id, keep.map(i => ls(i)).toArray,
+            keep.map(i => c(i)).toArray, dictSize)
+          val ds = cs.map { case (cent, qr) =>
+            (quantize(math.max(Kernels.klDistance(dictSize)(g, cent), 0.0)), qr)
+          }
+          (id, ds.exists { case (d, qr) => d <= qr }, Some(ds.map(_._1).min))
+        }
       }
-    }
-    val cents = centRows.toDF("graph_id", "label_idx", "cnt")
-      .join(dict, "label_idx").select("graph_id", "label", "cnt")
-    val radii = profile.radii.zipWithIndex
-      .map { case (r, ci) => (f"cent-$ci%03d", r) }
-      .toDF("gb", "radius")
-    // Distributed float-sum ordering leaves a ~1e-15 residue on distances
-    // (the only-in-one correction terms subtract two sums accumulated in
-    // different orders — same phenomenon hellingerMatrix's integer-mass
-    // terms dodge). Rather than widening the acceptance region (ADVICE r3:
-    // an epsilon on the radius test shifted the decision boundary) or
-    // clamping only the exact-zero case (leaves a graph whose driver-exact
-    // distance EQUALS a nonzero radius flipping run-to-run), quantize BOTH
-    // sides of the comparison to the same 1e-9 grid, exactly as
-    // reclusterAtScale quantizes before its arg-min: any distance the
-    // driver oracle puts on the boundary lands on the same grid point as
-    // the radius, independent of sum order. Real detection margins (BENCH:
-    // abnormal min-distance ≈ 3.5 vs normal 0) dwarf the grid.
-    val qdist = round(greatest(col("dist"), lit(0.0)) * 1e9) / 1e9
-    val qradius = round(col("radius") * 1e9) / 1e9
-    val verdicts = Kernels.klCross(inDict, cents, dictSize)
-      .join(radii, "gb")
-      .withColumn("cdist", qdist)
-      .groupBy(col("ga").as("graph_id"))
-      .agg(
-        max(when(col("cdist") <= qradius, 1).otherwise(0)).as("w"),
-        min(col("cdist")).as("min_distance"))
-      .select(col("graph_id"), (col("w") === 1).as("within_radius"),
-        col("min_distance"))
-    allIds.join(verdicts, Seq("graph_id"), "left")
-      .select(col("graph_id"),
-        coalesce(col("within_radius"), lit(false)).as("within_radius"),
-        col("min_distance"))
+    }.toDF("graph_id", "within_radius", "min_distance")
   }
+
+  /** Spark's `round(x * 1e9) / 1e9` (HALF_UP on the shortest decimal). */
+  private def quantize(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x * 1e9)
+      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue / 1e9
 
   /** Distributed recluster branch of detection (main.cpp:344-387 /
     * Frap.detect's else-path): k-means over {profile members ∪ monitored}
-    * initialized from {centroids ∪ monitored}, entirely as dataflow —
-    * assignment via [[Kernels.klCross]] + arg-min, centroid update via
-    * grouped integer means, convergence via an exact sparse compare. The
-    * monitored graph isolated in a singleton cluster ⇒ abnormal. This was
-    * the last driver-side FRAP surface (VERDICT r3 item 6): with it, a
-    * flagged graph's verdict costs no count-array collect()s, so flagged
-    * volume is unbounded by driver memory. [[Frap.detect]] (the driver port
-    * of helper.cpp:307-413) remains in-tree as the semantics oracle —
-    * FrapSpec asserts the two paths agree.
+    * initialized from {centroids ∪ monitored} — assignment via
+    * [[Kernels.klCross]] + arg-min and centroid update via grouped integer
+    * means as dataflow; the centroids themselves (≤ C + 1 sparse rows, the
+    * broadcast side of every assignment) stay on the driver, where
+    * consecutive sets are compared. The monitored graph isolated in a
+    * singleton cluster ⇒ abnormal. With it, a flagged graph's verdict costs
+    * no count-array collect()s, so flagged volume is unbounded by driver
+    * memory. [[Frap.detect]] (the driver port of helper.cpp:307-413)
+    * remains in-tree as the semantics oracle — FrapSpec asserts the two
+    * paths agree.
     *
     * Distances are quantized to 1e-9 before the arg-min, as the learning
-    * path does: distributed float sums vary in final ulps run-to-run and
-    * assignment compares exactly.
+    * path does: the scan's sparse KL sum can differ from the driver's dense
+    * one in the last ulps, and assignment compares exactly.
     *
     * @param memberCounts sparse in-dictionary (graph_id, label, cnt) of the
     *   profile member graphs
@@ -139,24 +134,23 @@ object FrapPipeline {
     // init centroids: profile centroids (dense arrays → sparse rows) ∪
     // monitored; ids are zero-padded so lexicographic order = index order
     // (the driver's strict-< arg-min keeps the FIRST minimum)
-    val centRows = profile.centroids.zipWithIndex.flatMap { case (arr, ci) =>
-      arr.zipWithIndex.collect {
-        case (c, li) if c != 0 => (f"c$ci%04d", li.toLong, c.toLong)
-      }
-    }
+    val labels = Kernels.labelsOf(dict, dictSize)
     val monIdx = profile.centroids.size
-    var cents = centRows.toDF("graph_id", "label_idx", "cnt")
-      .join(dict, "label_idx").select("graph_id", "label", "cnt")
-      .unionAll(monCounts.select(lit(f"c$monIdx%04d").as("graph_id"),
-        col("label"), col("cnt")))
-      .localCheckpoint(true) // single multiplicative ref below: rebase on update
+    var cents: Seq[(String, String, Long)] =
+      profile.centroids.zipWithIndex.flatMap { case (arr, ci) =>
+        Kernels.sparseCounts(arr, labels).map { case (l, c) =>
+          (f"c$ci%04d", l, c)
+        }
+      } ++ Scan.collect(monCounts.select(lit(f"c$monIdx%04d"), col("label"),
+        col("cnt").cast("long")).as[(String, String, Long)])
     var assign: DataFrame = null
     var it = 0
     var converged = false
     while (!converged) {
       if (it >= maxIters) throw new IllegalStateException(
         s"reclusterAtScale did not converge in $maxIters k-means iterations")
-      val d = Kernels.klCross(points, cents, dictSize)
+      val centDf = cents.toDF("graph_id", "label", "cnt")
+      val d = Kernels.klCross(points, centDf, dictSize)
         .select(col("ga"), col("gb"),
           (round(col("dist") * 1e9) / 1e9).as("qdist"))
       assign = d.groupBy(col("ga").as("graph_id"))
@@ -172,17 +166,12 @@ object FrapPipeline {
           floor(col("s") / col("csize")).cast("long").as("cnt"))
         .filter(col("cnt") > 0)
       // an empty cluster keeps its previous centroid (helper.cpp:249)
-      val kept = cents.join(sizes.select(col("cent").as("graph_id")),
+      val kept = centDf.join(sizes.select(col("cent").as("graph_id")),
         Seq("graph_id"), "left_anti")
-      // rebase, not just checkpoint: cents feeds klCross's join-size product
-      // next iteration — inherited stats would double in bit-length per
-      // k-means round (see Dataflow.checkpointRebased)
-      val next = graft.core.Dataflow.checkpointRebased(sums.unionAll(kept))
-      converged = cents.select(col("graph_id"), col("label"), col("cnt"))
-        .unionAll(next)
-        .groupBy("graph_id", "label", "cnt").agg(count(lit(1)).as("n"))
-        .filter(col("n") =!= 2).limit(1).count() == 0L
-      cents = next
+      val next = Kernels.collectSmall(
+        sums.unionAll(kept).as[(String, String, Long)])
+      converged = next.toSet == cents.toSet
+      cents = next.toSeq
       it += 1
     }
     val monCluster = assign.filter(col("graph_id") === monId(0))
@@ -268,11 +257,11 @@ object FrapPipeline {
       inDict.filter(col("graph_id").isInCollection(learnIds)), dictSize)
       .collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-    // quantized to 1e-9 before clustering: distributed sums can vary in
-    // final ulps run-to-run (shuffle-fetch merge order), and kmeansPrior
-    // assigns/converges on EXACT float comparisons — the quantum restores
-    // the driver path's run-to-run reproducibility except in the
-    // measure-zero case of a distance within an ulp of a quantum boundary
+    // quantized to 1e-9 before clustering: the scan's sparse KL sums can
+    // differ from the driver's dense sums in final ulps, and kmeansPrior
+    // assigns/converges on EXACT float comparisons — the quantum makes the
+    // two paths agree except in the measure-zero case of a distance within
+    // an ulp of a quantum boundary
     def d(a: String, b: String) = {
       val v = if (a < b) dm((a, b)) else dm((b, a))
       math.rint(v * 1e9) / 1e9

@@ -5,11 +5,13 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{Dataset, Encoder}
 
-/** The vector family's one broadcast-scan kernel: a small driver-side
-  * array (query set, centroid table, codebooks, hyperplanes) is broadcast
-  * and one typed `mapPartitions` scans the big side in unboxed loops — no
-  * N·|small| join rows and no interpreted (CodegenFallback) higher-order
-  * folds. Callers keep only their own distance arithmetic.
+/** The one broadcast-scan kernel of the vector family and of FRAP's
+  * distance stage (`frap.Kernels` pair matrices, `FrapPipeline`'s radius
+  * test): a small driver-side array (query set, centroid table, codebooks,
+  * hyperplanes, per-graph label rows) is broadcast and one typed
+  * `mapPartitions` scans the big side in unboxed loops — no N·|small| join
+  * rows and no interpreted (CodegenFallback) higher-order folds. Callers
+  * keep only their own distance arithmetic.
   *
   * Invariants the callers rely on:
   *   - [[dot]] and [[l2norm]] fold left to right from 0.0, the order of
@@ -62,6 +64,14 @@ object Scan {
     * `sqrt` are the same correctly-rounded IEEE operation).
     */
   def l2norm(a: Array[Double]): Double = math.sqrt(dot(a, a))
+
+  /** The primitive twin of `Similarity.cosine`: 0.0 when the norm product
+    * is 0, else dot / (na · nb).
+    */
+  def cosine(dot: Double, na: Double, nb: Double): Double = {
+    val nn = na * nb
+    if (nn == 0.0) 0.0 else dot / nn
+  }
 
   /** A long whose signed order is Spark's order of doubles: -0.0 maps to
     * 0.0's key and every NaN to one key above +Inf. `~orderKey(x)` ranks

@@ -30,6 +30,14 @@ object Similarity {
   def l2norm(a: Column): Column =
     sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v * v))
 
+  /** Cosine from a dot product and two norms, 0.0 when the norm product is
+    * 0 (an all-zero vector, or an underflowing product): one rule on every
+    * path, where a plain division would fail the query under ANSI mode.
+    * [[Scan.cosine]] is its primitive twin.
+    */
+  def cosine(dot: Column, na: Column, nb: Column): Column =
+    when(na * nb === 0.0, lit(0.0)).otherwise(dot / (na * nb))
+
   /** Deterministic ±1 hyperplanes: `bits` planes × `dim` components, keyed
     * by a namespace tag. Component sign = top bit of md5("srp:tag:b:d") —
     * uniform, decorrelated, and recomputable by the DuckDB oracle
@@ -89,8 +97,8 @@ object Similarity {
         val cn = Scan.l2norm(v)
         var q = 0
         while (q < qs.length) {
-          if (qs(q)._1 != id) tops(q).offer(
-            ~Scan.orderKey(Scan.dot(v, qs(q)._2) / (cn * qs(q)._3)), id)
+          if (qs(q)._1 != id) tops(q).offer(~Scan.orderKey(
+            Scan.cosine(Scan.dot(v, qs(q)._2), cn, qs(q)._3)), id)
           q += 1
         }
       }.map { case (q, key, id) => (qs(q)._1, id, Scan.fromOrderKey(~key)) }
@@ -122,7 +130,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id").distinct()
       .join(c, "vec_id").join(q, "query_id")
-      .withColumn("cos", dot(col("cv"), col("qv")) / (col("cn") * col("qn")))
+      .withColumn("cos", cosine(dot(col("cv"), col("qv")), col("cn"), col("qn")))
     rankByCos(cand, k)
   }
 
@@ -166,7 +174,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id")
     val rer = cand.join(c, "vec_id").join(q, "query_id")
-      .withColumn("cos", dot(col("cv"), col("qv")) / (col("cn") * col("qn")))
+      .withColumn("cos", cosine(dot(col("cv"), col("qv")), col("cn"), col("qn")))
     rankByCos(rer, k)
   }
 
@@ -218,7 +226,7 @@ object Similarity {
     l.join(r, "bucket")
       .filter(col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
+        cosine(dot(col("va"), col("vb")), col("na"), col("nb")).as("cos"))
       .filter(col("cos") >= threshold)
       .groupBy("vec_a", "vec_b")
       .agg(floor(max(col("cos")) * 1e6 + 0.5).cast("long").as("cos_q6"))

@@ -1,6 +1,11 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.frap._
 
@@ -131,6 +136,87 @@ class FrapSpec extends AnyFunSuite {
     assert(math.abs(got.head._3 - want) < 1e-12,
       s"got ${got.head._3}, want $want")
     assert(!got.head._3.isNaN && !got.head._3.isInfinite)
+  }
+
+  test("Hellinger and Euclidean matrices equal the driver formula exactly") {
+    val counts = WLRelabel.kernelCounts(WLRelabel.run(
+      ProvGen.corpus(spark, nNormal = 4, nAbnormal = 1), iters = 2)).cache()
+    val dict = Kernels.dictionary(counts)
+    val dsize = dict.count().toInt
+    val arr = Kernels.countArrays(counts, dict, dsize).collect()
+      .map(r => r.getString(0) -> r.getSeq[Int](1).toArray).toMap
+    for ((m, got) <- Seq(
+        Kernels.Hellinger -> Kernels.hellingerMatrix(counts),
+        Kernels.Euclidean -> Kernels.euclideanMatrix(counts))) {
+      val pairs = got.as[(String, String, Double)].collect()
+      assert(pairs.length == arr.size * (arr.size - 1) / 2)
+      pairs.foreach { case (a, b, d) =>
+        assert(d == Kernels.distance(m, arr(a), arr(b)), s"method $m ($a, $b)")
+      }
+    }
+    counts.unpersist(false)
+  }
+
+  test("identical counts are exactly 0.0 apart in klMatrix and monitorAtScale") {
+    // identical counts under ids g1 and g2; g3 alone holds label c, so the
+    // g1/g2 pair also has a label in neither graph
+    val counts = Seq(
+      ("g1", "a", 3L), ("g1", "b", 1L), ("g1", "d", 2L),
+      ("g2", "a", 3L), ("g2", "b", 1L), ("g2", "d", 2L),
+      ("g3", "a", 1L), ("g3", "c", 4L)).toDF("graph_id", "label", "cnt")
+    val km = Kernels.klMatrix(counts, 4).as[(String, String, Double)]
+      .collect().map(r => (r._1, r._2) -> r._3).toMap
+    assert(km(("g1", "g2")) == 0.0)
+    assert(km(("g1", "g3")) > 0.0 && km(("g2", "g3")) == km(("g1", "g3")))
+    val dict = Kernels.dictionary(counts)
+    val arr = Kernels.countArrays(counts, dict, 4).collect()
+      .map(r => r.getString(0) -> r.getSeq[Int](1).toArray).toMap
+    val profile = Frap.Profile(Vector(arr("g3"), arr("g1")),
+      Vector(0.0, 0.0), Vector(arr("g3"), arr("g1")))
+    val got = FrapPipeline.monitorAtScale(spark,
+      counts.filter(col("graph_id") === "g2"), profile, dict, 4)
+      .as[(String, Boolean, Option[Double])].collect()
+    assert(got.toSeq == Seq(("g2", true, Some(0.0))))
+  }
+
+  /** The executed plan of every query `body` runs. */
+  private def executedPlans(body: => Unit): Seq[String] = {
+    val plans = ArrayBuffer.empty[String]
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try { body; ListenerDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    plans.synchronized(plans.toSeq)
+  }
+
+  test("klMatrix and monitorAtScale execute no join") {
+    val counts = WLRelabel.kernelCounts(WLRelabel.run(
+      ProvGen.corpus(spark, nNormal = 6, nAbnormal = 1), iters = 2))
+      .localCheckpoint()
+    val learn = (0 until 5).map(i => f"normal-$i%03d")
+    val dict = Kernels.dictionary(
+      counts.filter(col("graph_id").isInCollection(learn)))
+    val dsize = dict.count().toInt
+    val arr = Kernels.countArrays(counts, dict, dsize).collect()
+      .map(r => r.getString(0) -> r.getSeq[Int](1).toArray).toMap
+    val profile = Frap.learnProfile(learn.map(arr(_)).toVector)
+    val joins = Seq("SortMergeJoin", "BroadcastHashJoin",
+      "BroadcastNestedLoopJoin", "CartesianProduct", "ShuffledHashJoin")
+    for ((name, run) <- Seq[(String, () => Unit)](
+        "klMatrix" -> (() => Kernels.klMatrix(
+          counts.filter(col("graph_id").isInCollection(learn)), dsize)
+          .collect()),
+        "monitorAtScale" -> (() => FrapPipeline.monitorAtScale(spark, counts,
+          profile, dict, dsize).collect()))) {
+      val plans = executedPlans(run())
+      assert(plans.nonEmpty, name)
+      plans.foreach(p => joins.foreach(j =>
+        assert(!p.contains(j), s"$name runs a $j:\n$p")))
+    }
   }
 
   test("monitorAtScale radius test matches the driver detection fast path") {

@@ -176,7 +176,7 @@ class SuperstepLoopsSpec extends AnyFunSuite {
       Set(
         "algos/Louvain.scala", "algos/Truss.scala",
         "cf/SvdPlusPlus.scala", "cf/TimeSvdPlusPlus.scala",
-        "classify/AdPredictor.scala", "frap/FrapPipeline.scala"))
+        "classify/AdPredictor.scala"))
   }
 
   test("broadcasts and mapPartitions scans go through the vector kernel") {

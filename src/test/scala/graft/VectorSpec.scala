@@ -107,8 +107,8 @@ class VectorSpec extends AnyFunSuite {
 
   /** Deterministic sample of (vec_id, embedding) tables, ids from 1: 4-dim
     * rows whose components mix finite values, 0.0, NaN, +Inf and −Inf,
-    * plus one all-NaN row. No row is all zeros (a zero norm divides by
-    * zero, which ANSI mode rejects in the Column forms).
+    * plus one all-NaN row. No row is all zeros: the crossJoin reference
+    * below divides by the norm product, which ANSI mode rejects at zero.
     */
   private def nonFiniteTables(n: Int) = {
     val comp = Gen.frequency(6 -> Gen.oneOf(-2.0, -1.0, -0.5, 0.5, 1.0, 2.0),
@@ -166,6 +166,28 @@ class VectorSpec extends AnyFunSuite {
         .select("query_id", "vec_id", "rank").as[(Long, Long, Int)]
         .collect().toSet)
     }
+  }
+
+  test("zero-norm rows: cosine 0.0 on all four ANN paths") {
+    val t = Seq((1L, Seq(0f, 0f, 0f, 0f)), (2L, Seq(1f, 2f, -1f, 0.5f)),
+      (3L, Seq(0f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "vec_id", "cos_q6", "rank")
+        .as[(Long, Long, Long, Int)].collect().toSet
+    // every pair holds a zero row: all ties, broken by vec_id
+    val brute = ranked(Similarity.bruteForceTopK(t, t, 2))
+    assert(brute == Set((1L, 2L, 0L, 1), (1L, 3L, 0L, 2), (2L, 1L, 0L, 1),
+      (2L, 3L, 0L, 2), (3L, 1L, 0L, 1), (3L, 2L, 0L, 2)))
+    // every vector is a cell and every cell is probed: exhaustive
+    assert(ranked(Similarity.ivfTopK(t, t, 2, centEvery = 1, nprobe = 3))
+      == brute)
+    // the two zero rows share SRP bucket 0 in every table
+    val lsh = ranked(Similarity.lshTopK(t, t, 2, dim = 4))
+    assert(Set((1L, 3L), (3L, 1L)).subsetOf(lsh.map(r => (r._1, r._2))))
+    assert(lsh.forall(_._3 == 0L))
+    val nd = Similarity.nearDupPairs(t, threshold = 0.0, dim = 4)
+      .as[(Long, Long, Long)].collect()
+    assert(nd.contains((1L, 3L, 0L)) && nd.forall(_._3 == 0L))
   }
 
   test("a small side over MaxBroadcastRows rows is refused") {
