@@ -50,9 +50,14 @@ object ConnectedComponents {
     und.count() // materialize once
 
     // state: (id, label, delta) — delta=1.0 while the vertex just changed
-    // (its neighbors must be re-examined), 0.0 once stable.
-    val init = LinkGraph.verticesPartitioned(spark, edges, parts)
-      .select(col("id"), col("id").as("label"), lit(1.0).as("delta"))
+    // (its neighbors must be re-examined), 0.0 once stable. The vertices are
+    // und's sources (the oracle's `verts`), grouped on the cached und with
+    // no second edge scan and no exchange. The label is `min(src)`, not an
+    // alias of id: an alias makes the rebased checkpoint advertise
+    // hashpartitioning(label), and superstep 1's scatter join would then
+    // exchange the state again.
+    val init = und.groupBy(col("src").as("id"))
+      .agg(min(col("src")).as("label"), lit(1.0).as("delta"))
 
     def step(state: DataFrame, iter: Int): DataFrame = {
       // Frontier: only vertices that changed last round emit their label.

@@ -48,8 +48,9 @@ object LabelPropagation {
       if (numPartitions > 0) numPartitions
       else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
-    // Single-exchange prep + lineage truncation, exactly as
-    // [[ConnectedComponents.run]] (see the comment there; guide §2.4).
+    // The undirected edges (one E-row exchange) and the init state (grouped
+    // on the cached und, hash-partitioned by id) are built as in
+    // [[ConnectedComponents.run]]; see the comments there.
     val und = LinkGraph.undirected(edges.select("src", "dst", "weight"))
       .select("src", "dst")
       .repartition(parts, col("src"))
@@ -58,8 +59,8 @@ object LabelPropagation {
       .persist(StorageLevel.MEMORY_AND_DISK)
     und.count() // materialize once
 
-    val init = LinkGraph.verticesPartitioned(spark, edges, parts)
-      .select(col("id"), col("id").as("label"), lit(1.0).as("delta"))
+    val init = und.groupBy(col("src").as("id"))
+      .agg(min(col("src")).as("label"), lit(1.0).as("delta"))
 
     def step(state: DataFrame, iter: Int): DataFrame = {
       val msgs = state.select(col("id"), col("label"))

@@ -18,9 +18,10 @@ object Kernels {
 
   /** Spark's string order (UTF-8 bytes), the order of `orderBy` and
     * `sort_array`: dictionary indices and every row's labels follow it, so
-    * a row's labels are in dictionary order.
+    * a row's labels are in dictionary order. [[WLRelabel]] sorts neighbor
+    * signatures in it.
     */
-  private val LabelOrder: Ordering[String] =
+  private[frap] val LabelOrder: Ordering[String] =
     (a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
 
   /** Frozen label dictionary from the learning graphs: (label, label_idx)

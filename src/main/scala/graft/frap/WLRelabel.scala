@@ -1,11 +1,14 @@
 package graft.frap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.commons.codec.digest.DigestUtils
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Weisfeiler–Lehman-style iterative vertex relabeling over typed provenance
   * graphs — the Spark dataflow form of the reference's VertexRelabel program
-  * (/root/reference/myapps/vertex.cpp:30-347, string prototype
+  * (myapps/vertex.cpp:30-347, string prototype
   * camflow/vertexrelabel.cpp:94-147): initial label = vertex type; each
   * round a vertex's new label encodes (own label, sorted incoming
   * (label, edgeType) multiset, sorted outgoing (label, edgeType) multiset).
@@ -15,70 +18,71 @@ import org.apache.spark.sql.functions._
   * insert_relabel) and alternates update/swap supersteps; here labels are
   * md5 digests of the same canonical strings — a deterministic, coordination-
   * free bijection of the dictionary codes, under which label histograms (and
-  * therefore every kernel distance) are invariant. All graphs relabel
-  * *concurrently* in one Dataset keyed by graphId instead of one engine run
-  * per graph (main.cpp:113-119) — that is the Spark-native scale win.
+  * therefore every kernel distance) are invariant. Each graph relabels in
+  * one typed pass over its own edges (all rounds in memory), as each graph
+  * is one engine run in the reference (main.cpp:113-119).
   *
-  * Input edge schema: (graph_id, src, dst, src_type, dst_type, edge_type).
+  * Memory contract: one graph's edges sit in one task. A graph must fit a
+  * task's heap, as it must fit one GraphChi engine run in the reference.
+  *
+  * Input edge schema: (graph_id, src, dst, src_type, dst_type, edge_type);
+  * the types are read as Spark casts them to string.
   */
 object WLRelabel {
 
-  /** Initial labels: vertex type as claimed by any incident edge
-    * (vertex.cpp:104-120 reads the type off an out-edge's new_src or an
-    * in-edge's new_dst).
-    */
-  def initialLabels(edges: DataFrame): DataFrame =
-    edges.select(col("graph_id"), col("src").as("id"),
-      col("src_type").cast("string").as("label"))
-      .unionAll(edges.select(col("graph_id"), col("dst").as("id"),
-        col("dst_type").cast("string").as("label")))
-      .groupBy("graph_id", "id")
-      .agg(min("label").as("label"))
-
-  /** One WL round: md5("self|in1 in2 ...|out1 out2 ...") with sorted
-    * "label#edgeType" neighbor signatures.
-    */
-  def step(labels: DataFrame, edges: DataFrame): DataFrame = {
-    val lbl = labels.select(col("graph_id"), col("id"), col("label"))
-    // rename edge columns before joining: `labels` derives from `edges`, so
-    // unaliased column refs would be an ambiguous self-join
-    val e = edges.select(col("graph_id").as("eg"), col("src"), col("dst"),
-      col("edge_type"))
-    val inMsgs = lbl
-      .join(e, lbl("graph_id") === col("eg") && lbl("id") === col("src"))
-      .select(col("eg").as("graph_id"), col("dst").as("id"),
-        concat_ws("#", col("label"), col("edge_type")).as("sig"))
-      .groupBy("graph_id", "id")
-      .agg(concat_ws(" ", sort_array(collect_list("sig"))).as("in_sig"))
-    val outMsgs = lbl
-      .join(e, lbl("graph_id") === col("eg") && lbl("id") === col("dst"))
-      .select(col("eg").as("graph_id"), col("src").as("id"),
-        concat_ws("#", col("label"), col("edge_type")).as("sig"))
-      .groupBy("graph_id", "id")
-      .agg(concat_ws(" ", sort_array(collect_list("sig"))).as("out_sig"))
-    lbl
-      .join(inMsgs, Seq("graph_id", "id"), "left")
-      .join(outMsgs, Seq("graph_id", "id"), "left")
-      .select(col("graph_id"), col("id"),
-        md5(concat_ws("|",
-          col("label"),
-          coalesce(col("in_sig"), lit("")),
-          coalesce(col("out_sig"), lit("")))).as("label"))
-  }
+  /** One input edge, its types cast to string. */
+  final case class TypedEdge(graph_id: String, src: Long, dst: Long,
+      src_type: String, dst_type: String, edge_type: String)
 
   /** Run `iters` WL rounds; returns (graph_id, id, iter, label) for every
     * iteration 0..iters (iteration 0 = initial type labels). The union over
     * iterations is what feeds the kernel histograms, mirroring the
     * reference's per-update label_map inserts (kernelmaps.cpp:54-62).
+    * Lazy: one `groupByKey(graph_id)` exchange, no join.
     */
   def run(edges: DataFrame, iters: Int): DataFrame = {
-    var labels = initialLabels(edges).localCheckpoint(true)
-    var acc = labels.withColumn("iter", lit(0))
-    for (t <- 1 to iters) {
-      labels = step(labels, edges).localCheckpoint(true)
-      acc = acc.unionAll(labels.withColumn("iter", lit(t)))
+    import edges.sparkSession.implicits._
+    edges.select(col("graph_id"), col("src"), col("dst"),
+        col("src_type").cast("string").as("src_type"),
+        col("dst_type").cast("string").as("dst_type"),
+        col("edge_type").cast("string").as("edge_type"))
+      .as[TypedEdge].groupByKey(_.graph_id)
+      .flatMapGroups((g, es) => relabel(g, es.toArray, iters))
+      .toDF("graph_id", "id", "iter", "label")
+  }
+
+  /** Spark's `concat_ws`: nulls are skipped. */
+  private def concatWs(sep: String, xs: String*): String =
+    xs.filter(_ != null).mkString(sep)
+
+  /** One graph's rounds. The initial label is the smallest type any
+    * incident edge claims (vertex.cpp:104-120 reads it off an out-edge's
+    * new_src or an in-edge's new_dst). A round's label is
+    * md5("self|in1 in2 ...|out1 out2 ...") over "label#edgeType" neighbor
+    * signatures in Spark's string order. A null graph_id matches no edge,
+    * as a SQL join on graph_id would, so its vertices get no signatures.
+    */
+  private def relabel(g: String, es: Array[TypedEdge], iters: Int)
+      : Iterator[(String, Long, Int, String)] = {
+    val ids = (es.map(_.src) ++ es.map(_.dst)).distinct
+    val index = ids.zipWithIndex.toMap
+    val (src, dst) = (es.map(e => index(e.src)), es.map(e => index(e.dst)))
+    val init = new Array[String](ids.length)
+    for ((v, t) <- src.zip(es.map(_.src_type)) ++ dst.zip(es.map(_.dst_type))
+        if t != null && (init(v) == null || Kernels.LabelOrder.lt(t, init(v))))
+      init(v) = t
+    def round(labels: Array[String]): Array[String] = {
+      val in, out = Array.fill(ids.length)(List.empty[String])
+      if (g != null) for (k <- es.indices) {
+        in(dst(k)) ::= concatWs("#", labels(src(k)), es(k).edge_type)
+        out(src(k)) ::= concatWs("#", labels(dst(k)), es(k).edge_type)
+      }
+      def sig(xs: List[String]) = xs.sorted(Kernels.LabelOrder).mkString(" ")
+      Array.tabulate(ids.length)(v => DigestUtils.md5Hex(
+        concatWs("|", labels(v), sig(in(v)), sig(out(v))).getBytes(UTF_8)))
     }
-    acc.select("graph_id", "id", "iter", "label")
+    Iterator.iterate(init)(round).take(iters + 1).zipWithIndex
+      .flatMap { case (ls, t) => ls.indices.map(v => (g, ids(v), t, ls(v))) }
   }
 
   /** Per-graph label histogram over all WL iterations:

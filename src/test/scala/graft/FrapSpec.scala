@@ -3,15 +3,21 @@ package graft
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.graft.ListenerDrain
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.frap._
 
 class FrapSpec extends AnyFunSuite {
   lazy val spark = TestSessions.spark
   import spark.implicits._
+  import TestSessions.withJobs
 
   test("count_distribution back-off: sums to 1, zeros get mass") {
     val d = Kernels.countDistribution(Array(4, 0, 4, 0), backOff = true)
@@ -54,6 +60,53 @@ class FrapSpec extends AnyFunSuite {
       g -> xs.map(x => (x._2, x._3)).toSet
     }
     assert(byGraph("n") != byGraph("x"))
+  }
+
+  test("typed WL relabeling equals the Column-form reference exactly") {
+    // U+E000 sorts before U+1F600 in UTF-8 bytes (Spark's string order)
+    // and after its surrogate pair in UTF-16
+    val types = Gen.oneOf[String](null, "a", "b", "a#b", "\uE000",
+      "\uD83D\uDE00", "x\uE001")
+    val edge = for {
+      g <- Gen.oneOf[String]("g0", "g1", "g2", null)
+      s <- Gen.choose(0L, 5L); d <- Gen.choose(0L, 5L)
+      st <- types; dt <- types; et <- types
+    } yield (g, s, d, st, dt, et)
+    // every seed also gets a self-loop, a parallel edge, vertex 1 in two
+    // graphs, an all-null-typed edge and a null graph_id
+    val fixed = Seq(("g0", 1L, 1L, "\uE000", null, "\uD83D\uDE00"),
+      ("g1", 1L, 2L, "b", "a", null), ("g1", 1L, 2L, "b", "a", null),
+      ("g1", 2L, 3L, null, null, null), (null, 3L, 4L, "a", "b", "a"))
+    val generated = (1L to 3L).map { seed =>
+      (Gen.listOfN(30, edge).apply(Gen.Parameters.default, Seed(seed)).get ++
+        fixed).toDF("graph_id", "src", "dst", "src_type", "dst_type",
+          "edge_type")
+    }
+    def rows(df: DataFrame) = df.collect().map(r => (Option(r.getString(0)),
+      r.getLong(1), r.getInt(2), Option(r.getString(3)))).sorted.toSeq
+    for (edges <- generated :+ ProvGen.corpus(spark, 3, 1)) {
+      // the Column form's rounds do not depend on `iters`, so its
+      // iters = k result is its iters = 4 result up to iteration k
+      val ref = WLColumnForm.run(edges, 4)
+      val want = rows(ref)
+      for (k <- 0 to 4) {
+        val got = WLRelabel.run(edges, k)
+        assert(got.schema == ref.schema)
+        assert(rows(got) == want.filter(_._3 <= k), s"iters = $k")
+      }
+    }
+  }
+
+  test("WL relabeling is lazy: one job, two exchanges, no join") {
+    val edges = ProvGen.corpus(spark, nNormal = 3, nAbnormal = 1)
+    val (wl, runJobs) = withJobs(WLRelabel.run(edges, 3))
+    assert(runJobs == 0)
+    val (plans, jobs) = withJobs(executedPlans(
+      WLRelabel.kernelCounts(wl).collect()))
+    assert(jobs == 1 && plans.size == 1, s"$jobs jobs, ${plans.size} plans")
+    val plan = plans.head
+    assert(plan.collect { case e: ShuffleExchangeExec => e }.size == 2, plan)
+    assert(plan.collect { case j: BaseJoinExec => j }.isEmpty, plan)
   }
 
   test("distributed Euclidean matrix matches the driver-side formula") {
@@ -180,11 +233,11 @@ class FrapSpec extends AnyFunSuite {
   }
 
   /** The executed plan of every query `body` runs. */
-  private def executedPlans(body: => Unit): Seq[String] = {
-    val plans = ArrayBuffer.empty[String]
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = ArrayBuffer.empty[SparkPlan]
     val l = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.synchronized(plans += qe.executedPlan.toString)
+        plans.synchronized(plans += qe.executedPlan)
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(l)
@@ -212,7 +265,7 @@ class FrapSpec extends AnyFunSuite {
           .collect()),
         "monitorAtScale" -> (() => FrapPipeline.monitorAtScale(spark, counts,
           profile, dict, dsize).collect()))) {
-      val plans = executedPlans(run())
+      val plans = executedPlans(run()).map(_.toString)
       assert(plans.nonEmpty, name)
       plans.foreach(p => joins.foreach(j =>
         assert(!p.contains(j), s"$name runs a $j:\n$p")))
@@ -357,5 +410,57 @@ class FrapSpec extends AnyFunSuite {
     assert(byId("bad-000").abnormal || !byId("bad-000").withinRadius,
       s"abnormal instance not flagged: ${byId("bad-000")}")
     assert(byId("bad-000").minDistance > byId("normal-010").minDistance)
+  }
+}
+
+/** The Column form of [[WLRelabel.run]]: per round, two joins and two
+  * `collect_list` aggregates. The reference the typed pass must equal.
+  */
+object WLColumnForm {
+
+  def initialLabels(edges: DataFrame): DataFrame =
+    edges.select(col("graph_id"), col("src").as("id"),
+      col("src_type").cast("string").as("label"))
+      .unionAll(edges.select(col("graph_id"), col("dst").as("id"),
+        col("dst_type").cast("string").as("label")))
+      .groupBy("graph_id", "id")
+      .agg(min("label").as("label"))
+
+  def step(labels: DataFrame, edges: DataFrame): DataFrame = {
+    val lbl = labels.select(col("graph_id"), col("id"), col("label"))
+    // rename edge columns before joining: `labels` derives from `edges`, so
+    // unaliased column refs would be an ambiguous self-join
+    val e = edges.select(col("graph_id").as("eg"), col("src"), col("dst"),
+      col("edge_type"))
+    val inMsgs = lbl
+      .join(e, lbl("graph_id") === col("eg") && lbl("id") === col("src"))
+      .select(col("eg").as("graph_id"), col("dst").as("id"),
+        concat_ws("#", col("label"), col("edge_type")).as("sig"))
+      .groupBy("graph_id", "id")
+      .agg(concat_ws(" ", sort_array(collect_list("sig"))).as("in_sig"))
+    val outMsgs = lbl
+      .join(e, lbl("graph_id") === col("eg") && lbl("id") === col("dst"))
+      .select(col("eg").as("graph_id"), col("src").as("id"),
+        concat_ws("#", col("label"), col("edge_type")).as("sig"))
+      .groupBy("graph_id", "id")
+      .agg(concat_ws(" ", sort_array(collect_list("sig"))).as("out_sig"))
+    lbl
+      .join(inMsgs, Seq("graph_id", "id"), "left")
+      .join(outMsgs, Seq("graph_id", "id"), "left")
+      .select(col("graph_id"), col("id"),
+        md5(concat_ws("|",
+          col("label"),
+          coalesce(col("in_sig"), lit("")),
+          coalesce(col("out_sig"), lit("")))).as("label"))
+  }
+
+  def run(edges: DataFrame, iters: Int): DataFrame = {
+    var labels = initialLabels(edges).localCheckpoint(true)
+    var acc = labels.withColumn("iter", lit(0))
+    for (t <- 1 to iters) {
+      labels = step(labels, edges).localCheckpoint(true)
+      acc = acc.unionAll(labels.withColumn("iter", lit(t)))
+    }
+    acc.select("graph_id", "id", "iter", "label")
   }
 }

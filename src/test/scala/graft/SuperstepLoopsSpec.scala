@@ -1,17 +1,17 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.algos.{Coloring, GraphOps, Hits, KCores, Mis, Neighborhood,
-  SCC, Truss}
+import graft.algos.{Coloring, ConnectedComponents, GraphOps, Hits, KCores,
+  LabelPropagation, Mis, Neighborhood, SCC, Truss}
 import graft.engine.{LocalStore, StateStore, Superstep, SuperstepMetrics}
 
 /** The loops on [[graft.engine.Superstep.run]] run one Spark job per
@@ -20,31 +20,7 @@ import graft.engine.{LocalStore, StateStore, Superstep, SuperstepMetrics}
 class SuperstepLoopsSpec extends AnyFunSuite {
   lazy val spark = TestSessions.spark
   import spark.implicits._
-
-  /** `f`'s result and the jobs started while it runs (static plans: AQE
-    * and auto-broadcast off, so the only broadcasts are explicit hints). */
-  private def withJobs[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val prev = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.autoBroadcastJoinThreshold").map(k => k -> spark.conf.get(k))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.graft.ListenerDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val a = f
-      org.apache.spark.graft.ListenerDrain(sc)
-      (a, jobs.get())
-    } finally {
-      sc.removeSparkListener(listener)
-      prev.foreach { case (k, v) => spark.conf.set(k, v) }
-    }
-  }
+  import TestSessions.withJobs
 
   // undirected/directed path 1-2-3-4-5: a BFS or relaxation from vertex 1
   // reaches one new vertex per superstep for 4 supersteps, and the 5th
@@ -129,6 +105,40 @@ class SuperstepLoopsSpec extends AnyFunSuite {
     assert(sccJobs == 16 + (1 + 3 + 3) + 1) // + 1: the collect
   }
 
+  /** A [[LocalStore]] that keeps the executed plan of superstep 1. */
+  private final class FirstStepPlan extends StateStore {
+    private val local = new LocalStore
+    var plan: SparkPlan = _
+    override def persist(state: DataFrame, iter: Int): DataFrame = {
+      if (iter == 1) plan = state.queryExecution.executedPlan
+      local.persist(state, iter)
+    }
+    override def log(m: SuperstepMetrics): Unit = ()
+    override def resumePoint(): Option[(Int, DataFrame)] = None
+    override def release(state: DataFrame): Unit = local.release(state)
+  }
+
+  test("superstep 1 of LPA and CC exchanges no state") {
+    // an exchange on the state side repartitions the checkpointed state
+    // leaf directly, through unary operators only
+    def stateExchanges(plan: SparkPlan): Seq[SparkPlan] = {
+      def reachesState(p: SparkPlan): Boolean = p match {
+        case _: RDDScanExec => true
+        case _: ShuffleExchangeExec => false
+        case _ => p.children.size == 1 && reachesState(p.children.head)
+      }
+      plan.collect { case e: ShuffleExchangeExec if reachesState(e.child) => e }
+    }
+    for ((name, run) <- Seq[(String, StateStore => Any)](
+        "LPA" -> (s => LabelPropagation.run(spark, path, 2, s)),
+        "CC" -> (s => ConnectedComponents.run(spark, path, 10, s)))) {
+      val store = new FirstStepPlan
+      withJobs(run(store))
+      assert(store.plan != null, name)
+      assert(stateExchanges(store.plan).isEmpty, s"$name:\n${store.plan}")
+    }
+  }
+
   private def callSites(token: String): Map[String, Seq[String]] = {
     val root = Paths.get("src/main/scala/graft")
     Files.walk(root).iterator().asScala
@@ -158,7 +168,7 @@ class SuperstepLoopsSpec extends AnyFunSuite {
         "algos/SCC.scala", "algos/Sampling.scala", "algos/Truss.scala",
         "cf/SvdPlusPlus.scala", "cf/TimeSvdPlusPlus.scala",
         "classify/AdPredictor.scala", "frap/FrapPipeline.scala",
-        "frap/WLRelabel.scala", "plans/CsrPageRank.scala",
+        "plans/CsrPageRank.scala",
         "streaming/EventStream.scala", "text/Dsir.scala",
         "vectors/KMeans.scala", "vectors/Pq.scala"))
     // Neighborhood keeps raw checkpoints only in the ANF snapshot loop

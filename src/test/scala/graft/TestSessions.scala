@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole test JVM. */
@@ -16,6 +20,31 @@ object TestSessions {
     s
   }
   val Sf0001 = "/root/testdata/sf0.001"
+
+  /** `f`'s result and the jobs started while it runs (static plans: AQE
+    * and auto-broadcast off, so the only broadcasts are explicit hints). */
+  def withJobs[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val prev = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.autoBroadcastJoinThreshold").map(k => k -> spark.conf.get(k))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = f
+      ListenerDrain(sc)
+      (a, jobs.get())
+    } finally {
+      sc.removeSparkListener(listener)
+      prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
+  }
 }
 
 /** Plain-Scala reference implementations ("oracles") of the graph
