@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.LinkGraph
 
@@ -39,10 +38,7 @@ object Betweenness {
 
   def bounded(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
       maxT: Int): DataFrame = {
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val und = LinkGraph.undirected(edges).select("src", "dst").distinct()
-      .repartition(parts, col("src")).sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val und = LinkGraph.edgeView(edges, "src", undirected = true)
     und.count()
 
     // ---- forward: per-level frontiers with path counts ------------------

@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.core.LinkGraph
 import graft.engine.{LocalStore, StateStore, Superstep}
 
@@ -26,27 +25,9 @@ object ConnectedComponents {
       spark: SparkSession,
       edges: DataFrame,
       maxIters: Int = 50,
-      store: StateStore = new LocalStore,
-      numPartitions: Int = 0): Superstep.RunResult = {
+      store: StateStore = new LocalStore): Superstep.RunResult = {
 
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-
-    // ONE E-row exchange (guide §2.4): repartition by src FIRST, then dedup —
-    // hashpartitioning(src) satisfies the distinct aggregate's
-    // ClusteredDistribution(src, dst) (hash exprs ⊆ clustering), so the
-    // aggregate adds no exchange. The previous distinct-then-repartition
-    // order exchanged the 2E-row symmetric union twice. The columnar
-    // persist() cache stays (round-6 A/B at 176 M edges: an RDD-checkpoint
-    // cache of the E-row static side is several-fold larger and loses scan
-    // vectorization — 2.5x slower supersteps).
-    val und = LinkGraph.undirected(edges.select("src", "dst", "weight"))
-      .select("src", "dst")
-      .repartition(parts, col("src"))
-      .distinct()
-      .sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val und = LinkGraph.edgeView(edges, "src", undirected = true)
     und.count() // materialize once
 
     // state: (id, label, delta) — delta=1.0 while the vertex just changed

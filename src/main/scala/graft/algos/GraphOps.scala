@@ -100,10 +100,8 @@ object GraphOps {
   def kHopSubgraph(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
       hops: Int): DataFrame = {
     // hash(src)-partitioned: the per-round frontier semi-join never
-    // re-exchanges the E-row side
-    val und = LinkGraph.undirected(edges).select("src", "dst")
-      .repartition(col("src")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // re-exchanges the E-row side; superstep 1's job materializes it
+    val und = LinkGraph.edgeView(edges, "src", undirected = true)
     def step(state: DataFrame, iter: Int): DataFrame = {
       val next = und.join(
           state.filter(col("delta") > 0).select(col("id").as("src")),
@@ -141,6 +139,9 @@ object GraphOps {
   def sssp(spark: SparkSession, edges: DataFrame, source: Long,
       maxRounds: Int = 50): DataFrame = {
     import spark.implicits._
+    // not LinkGraph.edgeView: its sort within partitions made the sf0.01
+    // noop sweep slower (median 2.28 -> 2.47 s) and gained nothing at
+    // sf0.1 (BENCH.md)
     val e = edges.select(col("src"), col("dst"), col("weight"))
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)

@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.core.LinkGraph
 import graft.engine.{LocalStore, Superstep}
 
@@ -28,22 +27,16 @@ object Hits {
 
   /** Run `iters` HITS iterations; returns (id, hub, auth). */
   def run(spark: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // The edge list is cached in BOTH orientations (round 6, guide §2.4):
+    // The edge list is laid out in BOTH orientations (round 6, guide §2.4):
     // the auth gather joins on src, the hub gather on dst — a single
     // src-partitioned cache forced a full E-row exchange (and sort) of the
-    // edge side by dst EVERY iteration. Two pre-sorted columnar caches cost
-    // one extra E-sized cache once and make both per-iteration gather
-    // joins exchange-free and sort-free — the same static-side trade
-    // PageRank's share table makes (columnar persist, not localCheckpoint:
-    // see preparedShares' 176 M-edge A/B note).
-    val eSrc = edges.select("src", "dst").repartition(parts, col("src"))
-      .sortWithinPartitions("src").persist(StorageLevel.MEMORY_AND_DISK)
-    val eDst = edges.select("src", "dst").repartition(parts, col("dst"))
-      .sortWithinPartitions("dst").persist(StorageLevel.MEMORY_AND_DISK)
+    // edge side by dst EVERY iteration. One extra E-sized cache makes both
+    // per-iteration gather joins exchange-free and sort-free.
+    val eSrc = LinkGraph.edgeView(edges.select("src", "dst"), "src")
+    val eDst = LinkGraph.edgeView(edges.select("src", "dst"), "dst")
     eSrc.count(); eDst.count()
 
-    val init = LinkGraph.verticesPartitioned(spark, edges, parts)
+    val init = LinkGraph.vertices(edges)
       .select(col("id"), lit(1.0).as("hub"), lit(1.0).as("auth"),
         lit(0.0).as("delta"))
 

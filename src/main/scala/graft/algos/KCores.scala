@@ -3,7 +3,6 @@ package graft.algos
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.core.LinkGraph
 import graft.engine.{LocalStore, Superstep}
 
@@ -45,20 +44,8 @@ object KCores {
     */
   def run(spark: SparkSession, edges: DataFrame,
       maxIters: Int = 200): Superstep.RunResult = {
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val und = LinkGraph.undirected(edges.select("src", "dst", "weight"))
-      .select("src", "dst").distinct()
-      .repartition(parts, col("src"))
-      .sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // second static view partitioned by dst for the changed-neighbor probe
-    // (SCC's eSrc/eDst pattern): without it the per-round touched semi-join
-    // re-exchanges all E rows on dst even when the frontier is tiny
-    val undDst = und
-      .repartition(parts, col("dst"))
-      .sortWithinPartitions("dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    und.count(); undDst.count()
+    val und = LinkGraph.edgeView(edges, "src", undirected = true)
+    und.count()
 
     // core_0 = degree; round 0: everyone just changed
     val init = und.groupBy(col("src").as("id"))
@@ -66,11 +53,14 @@ object KCores {
       .withColumn("delta", lit(1.0))
 
     def step(state: DataFrame, iter: Int): DataFrame = {
-      // recompute h only where it can move: vertices with a changed neighbor
-      val touched = undDst
-        .join(state.filter(col("delta") > 0).select(col("id").as("dst")),
-          Seq("dst"), "left_semi")
-        .select(col("src")).distinct()
+      // recompute h only where it can move: vertices with a changed
+      // neighbor. und is symmetric, so they are the dst side of the changed
+      // vertices' edges — a probe on the src-partitioned view that
+      // exchanges only frontier-sized rows
+      val touched = und
+        .join(state.filter(col("delta") > 0).select(col("id").as("src")),
+          Seq("src"), "left_semi")
+        .select(col("dst").as("src")).distinct()
       val activeEdges = und.join(touched, Seq("src"), "left_semi")
       val nbrVals = activeEdges
         .join(state.select(col("id").as("nid"), col("core").as("nval")),
@@ -90,7 +80,7 @@ object KCores {
     }
 
     val res = Superstep.run(init, step, tol = 0.0, maxIters, new LocalStore)
-    und.unpersist(false); undDst.unpersist(false)
+    und.unpersist(false)
     res
   }
 

@@ -3,7 +3,6 @@ package graft.algos
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.core.LinkGraph
 import graft.engine.{LocalStore, StateStore, Superstep}
 
@@ -41,22 +40,11 @@ object LabelPropagation {
       spark: SparkSession,
       edges: DataFrame,
       iters: Int = 10,
-      store: StateStore = new LocalStore,
-      numPartitions: Int = 0): Superstep.RunResult = {
+      store: StateStore = new LocalStore): Superstep.RunResult = {
 
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-
-    // The undirected edges (one E-row exchange) and the init state (grouped
-    // on the cached und, hash-partitioned by id) are built as in
-    // [[ConnectedComponents.run]]; see the comments there.
-    val und = LinkGraph.undirected(edges.select("src", "dst", "weight"))
-      .select("src", "dst")
-      .repartition(parts, col("src"))
-      .distinct()
-      .sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // the init state (grouped on the cached und, hash-partitioned by id) is
+    // built as in [[ConnectedComponents.run]]; see the comment there
+    val und = LinkGraph.edgeView(edges, "src", undirected = true)
     und.count() // materialize once
 
     val init = und.groupBy(col("src").as("id"))
@@ -95,7 +83,9 @@ object LabelPropagation {
       // no repartition: apply join preserves the state side's hash(id)
     }
 
-    Superstep.run(init, step, tol = 0.0, maxIters = iters, store)
+    val res = Superstep.run(init, step, tol = 0.0, maxIters = iters, store)
+    und.unpersist(false)
+    res
   }
 
   /** Unrolled SQL oracle: `iters` synchronous LPA rounds with the same

@@ -5,7 +5,6 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.LinkGraph
 import graft.engine.{LocalStore, Superstep}
@@ -48,10 +47,7 @@ object Neighborhood {
     */
   def landmarkBalls(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
       maxT: Int): DataFrame = {
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val und = LinkGraph.undirected(edges).select("src", "dst").distinct()
-      .repartition(parts, col("src")).sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val und = LinkGraph.edgeView(edges, "src", undirected = true)
     und.count()
 
     // state (seed, id, dist, delta); delta = 1 for pairs first reached at
@@ -177,10 +173,7 @@ object Neighborhood {
     import spark.implicits._
     require(logM >= 4 && logM <= 16, s"logM=$logM out of range")
     val m = 1 << logM
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val und = LinkGraph.undirected(edges).select("src", "dst").distinct()
-      .repartition(parts, col("src")).sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val und = LinkGraph.edgeView(edges, "src", undirected = true)
     und.count()
 
     val init = LinkGraph.vertices(edges).as[Long].map { id =>
@@ -195,7 +188,8 @@ object Neighborhood {
     }.toDF("id", "regs")
 
     val rm = regMaxUdaf(spark, m)
-    var state = init.repartition(parts, col("id")).localCheckpoint(true)
+    var state = init.repartition(LinkGraph.partitions(spark), col("id"))
+      .localCheckpoint(true)
     var frontier = state
     val snaps = ArrayBuffer[(Int, DataFrame)]((0, state))
     var t = 1
@@ -215,6 +209,7 @@ object Neighborhood {
       snaps += ((t, state)) // stable state repeats once the frontier empties
       t += 1
     }
+    und.unpersist(false)
     snaps.toSeq
   }
 

@@ -37,24 +37,19 @@ object PageRank {
       .select(col("src"), col("dst"), (lit(1.0) / col("od")).as("share"))
   }
 
-  /** Share table ready for the superstep loop: hash(src)-partitioned, sorted
-    * by src within partitions, materialized. ONE E-row
+  /** Share table ready for the superstep loop: the layout of
+    * [[LinkGraph.edgeView]] (hash(src)-partitioned, sorted by src, a
+    * columnar cache), materialized, but built as its own chain. ONE E-row
     * exchange (guide §2.4): the outdeg aggregate consumes the same exchange
     * as the edge stream (ReuseExchange dedupes the identical subtree), where
     * the previous shares() + repartition chain exchanged the E-row side
     * twice — once into the outdeg join, once more for the explicit
     * repartition (measured: PR prep 4.8 s vs 4.6 s for all 7 supersteps at
     * sf0.1). The explicit local sort is removed by RemoveRedundantSorts
-    * whenever the join already produced src order. The table stays a
-    * persist() COLUMNAR cache, not a localCheckpoint: a round-6 A/B at the
-    * 176 M-edge probe read 550 K eps with an RDD-checkpointed share table
-    * (deserialized UnsafeRow blocks, several-fold larger than the
-    * compressed columnar cache and scanned without vectorization) vs the
-    * recorded 1.37 M eps columnar floor — at E-row scale the columnar
-    * cache IS the optimization, and its InMemoryRelation stats also reset
-    * Catalyst's size estimates for free.
+    * whenever the join already produced src order.
     */
-  def preparedShares(edges: DataFrame, parts: Int): DataFrame = {
+  def preparedShares(edges: DataFrame): DataFrame = {
+    val parts = LinkGraph.partitions(edges.sparkSession)
     val e = edges.select(col("src"), col("dst")).repartition(parts, col("src"))
     val od = e.groupBy(col("src")).agg(count(lit(1)).as("od"))
     val sh = e.join(od, "src")
@@ -76,24 +71,19 @@ object PageRank {
       tol: Double = 1e-6,
       maxIters: Int = 100,
       store: StateStore = new LocalStore,
-      numPartitions: Int = 0,
       saltBuckets: Int = 0): Superstep.RunResult = {
-
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
     // Pre-sorted within hash partitions: the cached relation advertises
     // partitioning + outputOrdering, so the per-superstep sort-merge scatter
     // join never re-sorts the E-row side — only the V-row sums side sorts
     // each round.
-    val sh = preparedShares(edges, parts)
+    val sh = preparedShares(edges)
 
     // The state itself is the vertex list: (id, rank, delta), hash-partitioned
     // by id. Keeping state and shares co-partitioned on the vertex id makes
     // the scatter join exchange-free; the only shuffle per superstep is the
     // gather groupBy(dst), and the apply join reuses its partitioning.
-    val init = LinkGraph.verticesPartitioned(spark, edges, parts)
+    val init = LinkGraph.vertices(edges)
       .select(col("id"), lit(1.0).as("rank"), lit(Double.MaxValue).as("delta"))
 
     def step(state: DataFrame, iter: Int): DataFrame = {
@@ -193,14 +183,13 @@ object PageRank {
       seeds: Seq[Long],
       iters: Int): DataFrame = {
     require(seeds.nonEmpty, "personalized PageRank needs a non-empty seed set")
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val sh = preparedShares(edges, parts)
+    val sh = preparedShares(edges)
 
     val seedMass = 1.0 / seeds.size
     def seedRank(id: org.apache.spark.sql.Column) =
       when(id.isin(seeds: _*), lit(seedMass)).otherwise(lit(0.0))
 
-    val init = LinkGraph.verticesPartitioned(spark, edges, parts)
+    val init = LinkGraph.vertices(edges)
       .select(col("id"), seedRank(col("id")).as("rank"),
         lit(Double.MaxValue).as("delta"))
 

@@ -61,7 +61,7 @@ object SCC {
   def run(spark: SparkSession, edges: DataFrame, maxRounds: Int = 50,
       driverFinishBelow: Long = 2000000L,
       maxInnerRounds: Int = 2000): DataFrame = {
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val parts = LinkGraph.partitions(spark)
     var liveEdges = edges.select("src", "dst").distinct().localCheckpoint(true)
     var live = LinkGraph.vertices(edges).localCheckpoint(true)
     var result: DataFrame = null
@@ -104,12 +104,8 @@ object SCC {
       // A long pure path would spin (one vertex per round) — the
       // maxInnerRounds budget fails loudly, and the driver finish above
       // absorbs any path that fits the threshold first.
-      val tSrc = liveEdges.repartition(parts, col("src"))
-        .sortWithinPartitions("src")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      val tDst = liveEdges.repartition(parts, col("dst"))
-        .sortWithinPartitions("dst")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      val tSrc = LinkGraph.edgeView(liveEdges, "src")
+      val tDst = LinkGraph.edgeView(liveEdges, "dst")
       val inDeg = tDst.groupBy(col("dst").as("id"))
         .agg(count(lit(1)).as("in"))
       val outDeg = tSrc.groupBy(col("src").as("id"))
@@ -165,16 +161,12 @@ object SCC {
         remaining = 0
       }
       if (remaining > 0) {
-      // Static per-peel edge views, partitioned + sorted ONCE per direction
-      // (PageRank's static-side pattern): every inner-round join below then
-      // reuses the edge partitioning and shuffles only frontier-sized data,
-      // instead of re-exchanging the full E-row side each round.
-      val eSrc = liveEdges.repartition(parts, col("src"))
-        .sortWithinPartitions("src")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val eDst = liveEdges.repartition(parts, col("dst"))
-        .sortWithinPartitions("dst")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // Static per-peel edge views, one per direction: every inner-round
+      // join below then reuses the edge partitioning and shuffles only
+      // frontier-sized data, instead of re-exchanging the full E-row side
+      // each round.
+      val eSrc = LinkGraph.edgeView(liveEdges, "src")
+      val eDst = LinkGraph.edgeView(liveEdges, "dst")
       eSrc.count(); eDst.count()
 
       // --- 1. forward max-color fixpoint -------------------------------

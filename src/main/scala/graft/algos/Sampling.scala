@@ -36,10 +36,7 @@ object Sampling {
   def neighborSample(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
       fanouts: Seq[Int], seed: Long = 42L): DataFrame = {
     require(fanouts.nonEmpty, "need at least one hop fanout")
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val und = LinkGraph.undirected(edges).select("src", "dst").distinct()
-      .repartition(parts, col("src")).sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val und = LinkGraph.edgeView(edges, "src", undirected = true)
     und.count()
 
     var frontier = seeds.select(col("id").as("src")).distinct()
@@ -60,6 +57,7 @@ object Sampling {
       frontier = ranked.select(col("dst").as("src")).distinct()
         .localCheckpoint(true)
     }
+    und.unpersist(false)
     out.reduce(_ unionAll _)
   }
 

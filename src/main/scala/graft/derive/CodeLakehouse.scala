@@ -63,7 +63,7 @@ object CodeLakehouse {
       nRepos: Int = 100, partitions: Int = 0): DataFrame = {
     val parts =
       if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      else graft.core.LinkGraph.partitions(spark)
     val ord = col("id")
     val base = spark.range(0, nFiles, 1, parts)
 

@@ -26,7 +26,8 @@ import org.apache.spark.sql.functions._
   *   - fixed rounds (`tol < 0`, `delta` informational): exactly `maxIters`
   *     supersteps — HITS, seeded LPA, PageRank.fixedIterations.
   * A step only builds a plan; its static inputs are `persist()` caches
-  * declared before the loop.
+  * declared before the loop, laid out by [[graft.core.LinkGraph.edgeView]]
+  * where the loop joins on an edge key.
   *
   * Flag rows, don't drop them: a loop that accumulates an output (MIS
   * members, colours, trimmed SCC singletons) keeps it as a column of the

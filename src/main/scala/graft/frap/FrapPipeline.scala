@@ -21,28 +21,6 @@ object FrapPipeline {
   final case class Verdict(graphId: String, withinRadius: Boolean,
       abnormal: Boolean, minDistance: Double)
 
-  /** Dense count arrays for every graph in `edges`, over a dictionary built
-    * from the `learnIds` graphs only (the frozen learning relabel_map).
-    * Returns (arrays by graphId, dictionary size).
-    */
-  def arrays(edges: DataFrame, learnIds: Seq[String], iters: Int)
-      : (Map[String, Array[Int]], Int) = {
-    val wl = WLRelabel.run(edges, iters)
-    val counts = WLRelabel.kernelCounts(wl)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dict = Kernels.dictionary(
-      counts.filter(col("graph_id").isInCollection(learnIds)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dictSize = dict.count().toInt
-    val arr = Kernels.countArrays(counts, dict, dictSize)
-      .collect()
-      .map(r => r.getString(0) ->
-        r.getSeq[Int](1).toArray)
-      .toMap
-    counts.unpersist(false); dict.unpersist(false)
-    (arr, dictSize)
-  }
-
   /** Monitoring at scale: the radius test (detection fast path,
     * main.cpp:322-341) for EVERY graph in `monitorCounts`, in one scan of
     * its graphs against the broadcast profile centroids — no count array

@@ -101,11 +101,9 @@ object CsrPageRank {
     * endpoints; semantics identical to graft.algos.PageRank (rank_0 = 1.0,
     * dangling vertices keep their rank).
     */
-  def run(spark: SparkSession, edges: DataFrame, tol: Double, maxIters: Int,
-      numPartitions: Int = 0): Result = {
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+  def run(spark: SparkSession, edges: DataFrame, tol: Double,
+      maxIters: Int): Result = {
+    val parts = graft.core.LinkGraph.partitions(spark)
     val part = new HashPartitioner(parts)
 
     val blocks = buildBlocks(edges, parts)
@@ -172,11 +170,5 @@ object CsrPageRank {
     }
     blocks.unpersist(false); vertices.unpersist(false)
     Result(ranks, iter, converged, deltas.toSeq, stepSecs.toSeq)
-  }
-
-  /** DataFrame view of the final ranks: (id, rank). */
-  def toDf(spark: SparkSession, res: Result): DataFrame = {
-    import spark.implicits._
-    res.ranks.toDF("id", "rank")
   }
 }

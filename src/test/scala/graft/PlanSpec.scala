@@ -32,10 +32,8 @@ class PlanSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val edges = LinkGraph.edges(spark, TestSessions.Sf0001)
-      val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val sh = PageRank.shares(edges).repartition(parts, col("src"))
-        .sortWithinPartitions("src")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val parts = LinkGraph.partitions(spark)
+      val sh = LinkGraph.edgeView(PageRank.shares(edges), "src")
       sh.count()
       val state = LinkGraph.vertices(edges).repartition(parts, col("id"))
         .select(col("id"), lit(1.0).as("rank"),
@@ -64,10 +62,8 @@ class PlanSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val edges = LinkGraph.edges(spark, TestSessions.Sf0001)
-      val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val und = LinkGraph.undirected(edges).select("src", "dst").distinct()
-        .repartition(parts, col("src")).sortWithinPartitions("src")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val parts = LinkGraph.partitions(spark)
+      val und = LinkGraph.edgeView(edges, "src", undirected = true)
       und.count()
       val state = LinkGraph.vertices(edges).repartition(parts, col("id"))
         .select(col("id"), col("id").as("label"), lit(1.0).as("delta"))

@@ -4,14 +4,18 @@ import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.graft.CachedEntries
 import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.algos.{Coloring, ConnectedComponents, GraphOps, Hits, KCores,
-  LabelPropagation, Mis, Neighborhood, SCC, Truss}
+import graft.algos.{Betweenness, Coloring, ConnectedComponents, GraphOps,
+  Hits, KCores, LabelPropagation, Mis, Neighborhood, PageRank, SCC,
+  Sampling, Truss}
 import graft.engine.{LocalStore, StateStore, Superstep, SuperstepMetrics}
 
 /** The loops on [[graft.engine.Superstep.run]] run one Spark job per
@@ -21,6 +25,7 @@ class SuperstepLoopsSpec extends AnyFunSuite {
   lazy val spark = TestSessions.spark
   import spark.implicits._
   import TestSessions.withJobs
+  import org.apache.spark.graft.ListenerDrain
 
   // undirected/directed path 1-2-3-4-5: a BFS or relaxation from vertex 1
   // reaches one new vertex per superstep for 4 supersteps, and the 5th
@@ -35,10 +40,10 @@ class SuperstepLoopsSpec extends AnyFunSuite {
 
     def jobsOf(f: => Any): Int = withJobs(f)._2
 
-    // k-cores: two prep counts (und, undDst)
+    // k-cores: one prep count (und)
     val (kc, kcJobs) = withJobs(KCores.run(spark, edges))
     assert(kc.converged)
-    assert(kcJobs == 2 + kc.supersteps, s"k-cores: ${kc.supersteps} steps")
+    assert(kcJobs == 1 + kc.supersteps, s"k-cores: ${kc.supersteps} steps")
 
     // SSSP: one prep count; 5 supersteps
     assert(jobsOf(GraphOps.sssp(spark, edges, 1L)) == 1 + 5)
@@ -139,6 +144,65 @@ class SuperstepLoopsSpec extends AnyFunSuite {
     }
   }
 
+  test("loops on a session that never sets the partition count") {
+    // every RDD a loop persists — its static edge views and each
+    // superstep's checkpointed state — has the session's effective count,
+    // Spark's default 200 here
+    val key = "spark.sql.shuffle.partitions"
+    val sc = spark.sparkContext
+    spark.conf.unset(key)
+    try {
+      val parts = spark.sessionState.conf.numShufflePartitions
+      val persisted = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+      val listener = new SparkListener {
+        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+          e.stageInfo.rddInfos.filter(_.storageLevel != StorageLevel.NONE)
+            .foreach(r => persisted.add(r.numPartitions))
+      }
+      sc.addSparkListener(listener)
+      try {
+        for ((name, run) <- Seq[(String, () => DataFrame)](
+            "PageRank" -> (() =>
+              PageRank.run(spark, path, tol = -1.0, maxIters = 2).state),
+            "personalized PageRank" -> (() =>
+              PageRank.personalizedFixed(spark, path, Seq(1L), 2)),
+            "HITS" -> (() => Hits.run(spark, path, 2)),
+            "CC" -> (() => ConnectedComponents.run(spark, path).state))) {
+          persisted.clear()
+          val (state, _) = withJobs(run())
+          ListenerDrain(sc)
+          assert(state.count() == 5, name)
+          assert(state.rdd.getNumPartitions == parts, name)
+          assert(persisted.asScala.toSet == Set(parts), name)
+        }
+      } finally sc.removeSparkListener(listener)
+    } finally spark.conf.set(key, "4")
+  }
+
+  test("no loop leaves a cached view behind") {
+    val seeds = Seq(1L).toDF("id")
+    for ((name, run) <- Seq[(String, () => Any)](
+        "CC" -> (() => ConnectedComponents.run(spark, path)),
+        "LPA" -> (() => LabelPropagation.run(spark, path, 3)),
+        "k-cores" -> (() => KCores.run(spark, path)),
+        "HITS" -> (() => Hits.run(spark, path, 2)),
+        "SSSP" -> (() => GraphOps.sssp(spark, path, 1L)),
+        "k-hop" -> (() => GraphOps.kHopSubgraph(spark, path, seeds, 3)),
+        "landmark BFS" -> (() =>
+          Neighborhood.landmarkBalls(spark, path, seeds, 3)),
+        "hyperBall" -> (() => Neighborhood.hyperBall(spark, path, 4, 3)),
+        "betweenness" -> (() => Betweenness.bounded(spark, path, seeds, 3)),
+        "neighbor sample" -> (() =>
+          Sampling.neighborSample(spark, path, seeds, Seq(2, 2))))) {
+      val before = CachedEntries(spark)
+      run() match { // a lazy result still computes without the views
+        case df: Dataset[_] => assert(df.count() > 0, name)
+        case _ =>
+      }
+      assert(CachedEntries(spark) == before, name)
+    }
+  }
+
   private def callSites(token: String): Map[String, Seq[String]] = {
     val root = Paths.get("src/main/scala/graft")
     Files.walk(root).iterator().asScala
@@ -194,6 +258,13 @@ class SuperstepLoopsSpec extends AnyFunSuite {
       Set("vectors/Scan.scala"))
     assertRatchet(".mapPartitions", Set.empty, Set("vectors/Scan.scala",
       "plans/CsrPageRank.scala", "multimodal/Multimodal.scala"))
+  }
+
+  test("the partition count is read only by LinkGraph and the sessions") {
+    assertRatchet("spark.sql.shuffle.partitions", Set.empty,
+      Set("core/LinkGraph.scala", "Bench.scala", "BenchExtra.scala",
+        "Verify.scala", "jobs/Jobs.scala"))
+    assert(callSites("numPartitions").isEmpty)
   }
 
   test("def main( appears only in the measurement, oracle and job mains") {
