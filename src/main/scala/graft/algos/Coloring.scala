@@ -53,6 +53,10 @@ object Coloring {
   /** Variant returning the round count too (probes, specs). */
   def run(edges: DataFrame, maxRounds: Int, seed: Long,
       largestFirst: Boolean): (DataFrame, Int) = {
+    // not LinkGraph.edgeView (sf0.01 noop sweep, interleaved with this
+    // view, BENCH.md): keyed on src, graph_mis ran ~20 % slower best-of-6;
+    // keyed on dst, graph_mis and both colorings ran 1-4 % slower
+    // best-of-20
     val und = edges
       .select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))

@@ -22,11 +22,7 @@ object Frap {
   final case class Profile(
       centroids: Vector[Array[Int]],
       radii: Vector[Double],              // max distance from centroid
-      memberArrays: Vector[Array[Int]],
-      // learn-set positions of memberArrays (same order): lets dataflow
-      // callers (FrapPipeline.reclusterAtScale) map members back to graph
-      // ids without re-deriving the kept-cluster membership
-      memberIdx: Vector[Int] = Vector.empty)
+      memberArrays: Vector[Array[Int]])
 
   final case class Detection(
       distances: Vector[Double],
@@ -106,6 +102,12 @@ object Frap {
   def kmeans(seeds: Vector[Int], arrays: Vector[Array[Int]]): Clustering =
     kmeansFrom(seeds.map(arrays(_)).toVector, arrays)
 
+  /** Iterations after which [[kmeansFrom]] throws: KL assignment with
+    * integer means need not reach a fixpoint, and the reference's loop has
+    * no bound.
+    */
+  private val MaxKmeansIters = 50
+
   /** kmeans_monitor: same loop but initialized from explicit centroids
     * (helper.cpp:307-413).
     */
@@ -116,7 +118,11 @@ object Frap {
     var centroids = init.map(_.clone())
     var result: Clustering = null
     var converged = false
+    var it = 0
     while (!converged) {
+      if (it == MaxKmeansIters) throw new IllegalStateException(
+        s"k-means did not converge in $MaxKmeansIters iterations")
+      it += 1
       val members = Array.fill(k)(Vector.newBuilder[Int])
       val mdists = Array.fill(k)(Vector.newBuilder[Double])
       val groups = Array.fill(k)(Vector.newBuilder[Array[Int]])
@@ -184,27 +190,29 @@ object Frap {
       centroids = keep.map(clustering.centroids(_)).toVector,
       radii = keep.map(i => clustering.distances(i).max).toVector,
       memberArrays = keep.flatMap(i =>
-        clustering.clusters(i).map(arrays(_))).toVector,
-      memberIdx = keep.flatMap(i => clustering.clusters(i)).toVector)
+        clustering.clusters(i).map(arrays(_))).toVector)
   }
 
   /** Detection (main.cpp:322-387): inside any cluster radius → normal; else
-    * recluster profile members + monitor with centroids ∪ {monitor};
-    * monitor isolated in a singleton cluster ⇒ abnormal.
+    * [[recluster]] decides.
     */
   def detect(profile: Profile, monitored: Array[Int]): Detection = {
     val dists = profile.centroids.map(c =>
       Kernels.distance(Kernels.KullbackLeibler, c, monitored))
     val within = dists.zip(profile.radii).exists { case (d, r) => d <= r }
-    if (within) Detection(dists, withinRadius = true, reclustered = false,
-      abnormal = false)
-    else {
-      val arrays = profile.memberArrays :+ monitored
-      val init = profile.centroids :+ monitored
-      val re = kmeansFrom(init, arrays)
-      val monitorIdx = profile.memberArrays.size
-      val abnormal = re.clusters.exists(c => c.size == 1 && c.head == monitorIdx)
-      Detection(dists, withinRadius = false, reclustered = true, abnormal)
-    }
+    Detection(dists, withinRadius = within, reclustered = !within,
+      abnormal = !within && recluster(profile, monitored))
+  }
+
+  /** The recluster branch of detection (main.cpp:344-387): k-means over the
+    * profile members ∪ {monitored}, initialized from the centroids ∪
+    * {monitored}. True iff the monitored graph ends alone in its cluster
+    * (abnormal).
+    */
+  def recluster(profile: Profile, monitored: Array[Int]): Boolean = {
+    val re = kmeansFrom(profile.centroids :+ monitored,
+      profile.memberArrays :+ monitored)
+    val monitorIdx = profile.memberArrays.size
+    re.clusters.exists(c => c.size == 1 && c.head == monitorIdx)
   }
 }

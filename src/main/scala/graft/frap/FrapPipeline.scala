@@ -9,15 +9,20 @@ import graft.vectors.Scan
   * distributed WL relabeling + kernel histograms + pairwise KL distance
   * matrix over all graphs at once ([[Kernels.klMatrix]] — the learning
   * distance stage never collects G×D arrays), then driver-side k-means
-  * clustering/profiling/detection. The k-means stage still runs on collected
-  * count arrays for the learn/monitor graphs only — faithful to the
-  * reference's single-process centroid arithmetic (integer means,
-  * helper.cpp:193-305) and bounded by (learn+monitor graphs) × D, a
-  * documented, contained driver cost; the corpus-proportional stages (WL,
-  * histograms, distances) are all distributed.
+  * clustering/profiling/detection ([[Frap]]). The k-means stage runs on
+  * collected count arrays for the learn graphs and the graphs that reach
+  * the recluster branch only — faithful to the reference's single-process
+  * centroid arithmetic (integer means, helper.cpp:193-305) and bounded by
+  * (learn + recluster graphs) × D, a documented, contained driver cost; the
+  * corpus-proportional stages (WL, histograms, distances, the radius test)
+  * are all distributed.
+  *
+  * A monitored graph with no label in the frozen dictionary is outside
+  * every radius and abnormal, with no distance.
   */
 object FrapPipeline {
 
+  /** `minDistance` is NaN for a graph with no in-dictionary label. */
   final case class Verdict(graphId: String, withinRadius: Boolean,
       abnormal: Boolean, minDistance: Double)
 
@@ -43,13 +48,12 @@ object FrapPipeline {
       profile: Frap.Profile, dict: DataFrame, dictSize: Int): DataFrame = {
     import spark.implicits._
     val labels = Kernels.labelsOf(dict, dictSize)
-    // Both sides of the comparison sit on the same 1e-9 grid, as
-    // reclusterAtScale quantizes before its arg-min: a distance the driver
-    // oracle puts exactly on a radius lands on the radius's grid point, so
-    // the boundary case decides as the driver does. Widening the acceptance
-    // region instead (ADVICE r3: an epsilon on the radius test) shifted the
-    // decision boundary. Real detection margins (BENCH: abnormal
-    // min-distance ≈ 3.5 vs normal 0) dwarf the grid.
+    // Both sides of the comparison sit on the same 1e-9 grid: a distance
+    // the driver oracle puts exactly on a radius lands on the radius's grid
+    // point, so the boundary case decides as the driver does. Widening the
+    // acceptance region instead (ADVICE r3: an epsilon on the radius test)
+    // shifted the decision boundary. Real detection margins (BENCH:
+    // abnormal min-distance ≈ 3.5 vs normal 0) dwarf the grid.
     val cents = profile.centroids.zip(profile.radii).flatMap { case (arr, r) =>
       val nz = Kernels.sparseCounts(arr, labels)
       Option.when(nz.nonEmpty)((Kernels.klRow("", nz.map(_._1),
@@ -77,106 +81,29 @@ object FrapPipeline {
     else java.math.BigDecimal.valueOf(x * 1e9)
       .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue / 1e9
 
-  /** Distributed recluster branch of detection (main.cpp:344-387 /
-    * Frap.detect's else-path): k-means over {profile members ∪ monitored}
-    * initialized from {centroids ∪ monitored} — assignment via
-    * [[Kernels.klCross]] + arg-min and centroid update via grouped integer
-    * means as dataflow; the centroids themselves (≤ C + 1 sparse rows, the
-    * broadcast side of every assignment) stay on the driver, where
-    * consecutive sets are compared. The monitored graph isolated in a
-    * singleton cluster ⇒ abnormal. With it, a flagged graph's verdict costs
-    * no count-array collect()s, so flagged volume is unbounded by driver
-    * memory. [[Frap.detect]] (the driver port of helper.cpp:307-413)
-    * remains in-tree as the semantics oracle — FrapSpec asserts the two
-    * paths agree.
-    *
-    * Distances are quantized to 1e-9 before the arg-min, as the learning
-    * path does: the scan's sparse KL sum can differ from the driver's dense
-    * one in the last ulps, and assignment compares exactly.
-    *
-    * @param memberCounts sparse in-dictionary (graph_id, label, cnt) of the
-    *   profile member graphs
-    * @param monCounts same shape, exactly one monitored graph
-    * @return true iff the monitored graph ends isolated (abnormal)
-    */
-  def reclusterAtScale(spark: SparkSession, memberCounts: DataFrame,
-      monCounts: DataFrame, profile: Frap.Profile, dict: DataFrame,
-      dictSize: Int, maxIters: Int = 50): Boolean = {
-    import spark.implicits._
-    val monId = monCounts.select("graph_id").distinct().as[String].collect()
-    require(monId.length == 1, s"one monitored graph expected: ${monId.toSeq}")
-    // point set: members under their own ids + the monitored graph
-    val points = memberCounts.unionAll(monCounts)
-      .groupBy("graph_id", "label").agg(sum("cnt").as("cnt"))
-      .localCheckpoint(true)
-    // init centroids: profile centroids (dense arrays → sparse rows) ∪
-    // monitored; ids are zero-padded so lexicographic order = index order
-    // (the driver's strict-< arg-min keeps the FIRST minimum)
-    val labels = Kernels.labelsOf(dict, dictSize)
-    val monIdx = profile.centroids.size
-    var cents: Seq[(String, String, Long)] =
-      profile.centroids.zipWithIndex.flatMap { case (arr, ci) =>
-        Kernels.sparseCounts(arr, labels).map { case (l, c) =>
-          (f"c$ci%04d", l, c)
-        }
-      } ++ Scan.collect(monCounts.select(lit(f"c$monIdx%04d"), col("label"),
-        col("cnt").cast("long")).as[(String, String, Long)])
-    var assign: DataFrame = null
-    var it = 0
-    var converged = false
-    while (!converged) {
-      if (it >= maxIters) throw new IllegalStateException(
-        s"reclusterAtScale did not converge in $maxIters k-means iterations")
-      val centDf = cents.toDF("graph_id", "label", "cnt")
-      val d = Kernels.klCross(points, centDf, dictSize)
-        .select(col("ga"), col("gb"),
-          (round(col("dist") * 1e9) / 1e9).as("qdist"))
-      assign = d.groupBy(col("ga").as("graph_id"))
-        .agg(min_by(col("gb"), struct(col("qdist"), col("gb"))).as("cent"))
-        .localCheckpoint(true)
-      val sizes = assign.groupBy("cent").agg(count(lit(1)).as("csize"))
-      val sums = assign.join(points, "graph_id")
-        .groupBy(col("cent"), col("label")).agg(sum("cnt").as("s"))
-        .join(sizes, "cent")
-        // integer mean, exactly as the reference (helper.cpp int division);
-        // zero rows drop so the sparse form stays ≡ dense-with-zeros
-        .select(col("cent").as("graph_id"), col("label"),
-          floor(col("s") / col("csize")).cast("long").as("cnt"))
-        .filter(col("cnt") > 0)
-      // an empty cluster keeps its previous centroid (helper.cpp:249)
-      val kept = centDf.join(sizes.select(col("cent").as("graph_id")),
-        Seq("graph_id"), "left_anti")
-      val next = Kernels.collectSmall(
-        sums.unionAll(kept).as[(String, String, Long)])
-      converged = next.toSet == cents.toSet
-      cents = next.toSeq
-      it += 1
-    }
-    val monCluster = assign.filter(col("graph_id") === monId(0))
-      .select("cent").as[String].collect()(0)
-    assign.filter(col("cent") === monCluster).count() == 1L
-  }
-
   /** Full detection at scale: the distributed radius test for every
-    * monitored graph ([[monitorAtScale]]), then the distributed recluster
-    * for each flagged one — [[run]]'s Verdict surface with zero count-array
-    * collects anywhere. The per-flagged-graph loop is driver-side control
-    * flow only (normal-dominated traffic keeps flagged counts tiny; each
-    * iteration is pure dataflow).
+    * monitored graph ([[monitorAtScale]]), then [[Frap.recluster]] on the
+    * driver for each flagged one — [[run]]'s Verdict surface as
+    * (graph_id, within_radius, abnormal, min_distance). Only the flagged
+    * graphs' count arrays are collected, in one guarded collect (each is
+    * D ints, and D is driver-bounded: the centroids are D-wide driver
+    * arrays); normal-dominated traffic keeps the flagged set tiny. The job
+    * count does not depend on the k-means iterations or the number of
+    * flagged graphs.
     */
-  def detectAtScale(spark: SparkSession, memberCounts: DataFrame,
-      monitorCounts: DataFrame, profile: Frap.Profile, dict: DataFrame,
-      dictSize: Int): DataFrame = {
+  def detectAtScale(spark: SparkSession, monitorCounts: DataFrame,
+      profile: Frap.Profile, dict: DataFrame, dictSize: Int): DataFrame = {
     import spark.implicits._
     val radius = monitorAtScale(spark, monitorCounts, profile, dict, dictSize)
-      .localCheckpoint(true)
-    val flagged = radius.filter(!col("within_radius"))
-      .select("graph_id").as[String].collect()
-    val inDict = monitorCounts.join(dict.select("label"), "label")
-    val abnormal = flagged.map { g =>
-      g -> reclusterAtScale(spark, memberCounts,
-        inDict.filter(col("graph_id") === g), profile, dict, dictSize)
-    }.toSeq.toDF("graph_id", "ab")
+    val flagged = Scan.collect(radius.filter(!col("within_radius"))
+      .select("graph_id").as[String])
+    val arrays = Scan.collect(Kernels.countArrays(
+        monitorCounts.filter(col("graph_id").isInCollection(flagged)),
+        dict, dictSize).as[(String, Array[Int])]).toMap
+    // a graph absent from `arrays` has no in-dictionary label: abnormal
+    val abnormal = flagged.map(g =>
+      g -> arrays.get(g).forall(Frap.recluster(profile, _))).toSeq
+      .toDF("graph_id", "ab")
     radius.join(abnormal, Seq("graph_id"), "left")
       .select(col("graph_id"), col("within_radius"),
         coalesce(col("ab"), lit(false)).as("abnormal"), col("min_distance"))
@@ -262,8 +189,11 @@ object FrapPipeline {
     val profile = Frap.learnProfileFromDistances(
       learnIds.map(arr(_)).toVector, flat)
     monitorIds.map { g =>
-      val det = Frap.detect(profile, arr(g))
-      Verdict(g, det.withinRadius, det.abnormal, det.distances.min)
+      arr.get(g).fold(Verdict(g, withinRadius = false, abnormal = true,
+          Double.NaN)) { a =>
+        val det = Frap.detect(profile, a)
+        Verdict(g, det.withinRadius, det.abnormal, det.distances.min)
+      }
     }
   }
 }

@@ -123,18 +123,6 @@ object Kernels {
     }
   }
 
-  /** k-sigma outlier trim over a value column — the reference's legacy
-    * normalized-kernel filter (/root/reference/myapps/main.cpp:522-557,
-    * vertexlabel_static.cpp:1251-1280): keep rows within mean ± k·stddev.
-    */
-  def outlierTrim(df: DataFrame, valueCol: String, k: Double = 2.0): DataFrame = {
-    val row = df.agg(
-      avg(col(valueCol)).as("mu"),
-      stddev_pop(col(valueCol)).as("sigma")).head()
-    val (mu, sigma) = (row.getDouble(0), row.getDouble(1))
-    df.filter(col(valueCol).between(mu - k * sigma, mu + k * sigma))
-  }
-
   // ---- distributed distances: one sparse row per graph, one pair scan ------
 
   /** One graph's sparse weights: `labels` in [[LabelOrder]], `p(i)` the
@@ -202,27 +190,18 @@ object Kernels {
   def klDistance(dictSize: Int)(a: GraphRow, b: GraphRow): Double =
     pairSum(a, b, dictSize)((p, q) => (p - q) * math.log(p / q))
 
-  /** (ga, gb, dist) for every `big` row against every `small` row (only
-    * ga < gb when `upperOnly`), in one scan with `small` broadcast.
-    */
-  private def scanPairs(small: Array[GraphRow], big: Dataset[GraphRow],
-      upperOnly: Boolean)(dist: (GraphRow, GraphRow) => Double): DataFrame = {
-    import big.sparkSession.implicits._
-    Scan.broadcastScan(small, big) { (bs, it) =>
-      it.flatMap(a => bs.iterator
-        .filter(b => !upperOnly || LabelOrder.lt(a.id, b.id))
-        .map(b => (a.id, b.id, dist(a, b))))
-    }.toDF("ga", "gb", "dist")
-  }
-
   /** (ga, gb, dist) for every pair ga < gb of the `rows` graphs: the rows
     * are collected once and scanned against their own broadcast.
     */
   private def pairMatrix(rows: Dataset[GraphRow])(
       dist: (GraphRow, GraphRow) => Double): DataFrame = {
+    import rows.sparkSession.implicits._
     val all = collectSmall(rows)
-    scanPairs(all, rows.sparkSession.createDataset(all.toSeq)(rows.encoder),
-      upperOnly = true)(dist)
+    val big = rows.sparkSession.createDataset(all.toSeq)(rows.encoder)
+    Scan.broadcastScan(all, big) { (bs, it) =>
+      it.flatMap(a => bs.iterator.filter(b => LabelOrder.lt(a.id, b.id))
+        .map(b => (a.id, b.id, dist(a, b))))
+    }.toDF("ga", "gb", "dist")
   }
 
   /** Pairwise Hellinger distances (ga < gb, dist) from sparse counts, over
@@ -248,15 +227,6 @@ object Kernels {
     */
   def klMatrix(kernelCounts: DataFrame, dictSize: Int): DataFrame =
     pairMatrix(klRows(kernelCounts, dictSize))(klDistance(dictSize))
-
-  /** Symmetric-KL distances between every graph of `aCounts` and every
-    * graph of `bCounts` (same shape and semantics as [[klMatrix]]), with
-    * the `bCounts` rows broadcast. Output (ga, gb, dist), ga from `aCounts`.
-    */
-  def klCross(aCounts: DataFrame, bCounts: DataFrame,
-      dictSize: Int): DataFrame =
-    scanPairs(collectSmall(klRows(bCounts, dictSize)),
-      klRows(aCounts, dictSize), upperOnly = false)(klDistance(dictSize))
 
   /** Pairwise Euclidean distances (ga < gb, dist) from sparse counts; over
     * dictionary-ordered labels bit-identical to [[distance]].

@@ -308,10 +308,9 @@ class FrapSpec extends AnyFunSuite {
     assert(nv("novel-000")._3.isEmpty, "all-novel graph has no distance")
   }
 
-  test("distributed recluster matches the driver detect() verdicts") {
-    val edges = ProvGen.corpus(spark, nNormal = 11, nAbnormal = 1)
+  test("detectAtScale matches detect() in a job count fixed by neither k-means nor flags") {
+    val edges = ProvGen.corpus(spark, nNormal = 11, nAbnormal = 3)
     val learn = (0 until 10).map(i => f"normal-$i%03d")
-    val monitor = Seq("normal-010", "bad-000")
     val counts = WLRelabel.kernelCounts(WLRelabel.run(edges, 4)).cache()
     val dict = Kernels.dictionary(
       counts.filter(col("graph_id").isInCollection(learn))).cache()
@@ -319,27 +318,30 @@ class FrapSpec extends AnyFunSuite {
     val arr = Kernels.countArrays(counts, dict, dsize).collect()
       .map(r => r.getString(0) -> r.getSeq[Int](1).toArray).toMap
     val profile = Frap.learnProfile(learn.map(arr(_)).toVector)
-    // member counts: the kept learn graphs, via Profile.memberIdx
-    val memberIds = profile.memberIdx.map(learn(_))
-    assert(profile.memberArrays.indices.forall(i =>
-      profile.memberArrays(i).sameElements(arr(memberIds(i)))),
-      "memberIdx must map memberArrays back to their learn graphs")
-    val inDict = counts.join(dict.select("label"), "label")
-    val got = FrapPipeline.detectAtScale(spark,
-      inDict.filter(col("graph_id").isInCollection(memberIds)),
-      counts.filter(col("graph_id").isInCollection(monitor)),
-      profile, dict, dsize)
+    // no label in the dictionary: outside every radius, abnormal, no distance
+    val novel = Seq(("novel-000", "label-not-in-any-dictionary", 5L))
+      .toDF("graph_id", "label", "cnt")
+    def detect(monitor: Seq[String]) = withJobs(FrapPipeline.detectAtScale(
+      spark, counts.filter(col("graph_id").isInCollection(monitor))
+        .unionByName(novel), profile, dict, dsize)
       .as[(String, Boolean, Boolean, Option[Double])].collect()
-      .map(r => r._1 -> r).toMap
-    monitor.foreach { g =>
+      .map(r => r._1 -> r).toMap)
+    val few = Seq("normal-010", "bad-000")
+    val all = arr.keys.toSeq.sorted
+    val (got, jobs) = detect(few)
+    val (gotAll, jobsAll) = detect(all)
+    for ((ids, res) <- Seq(few -> got, all -> gotAll); g <- ids) {
       val det = Frap.detect(profile, arr(g))
-      assert(got(g)._2 == det.withinRadius, s"$g within_radius")
-      assert(got(g)._3 == det.abnormal,
-        s"$g abnormal: dataflow ${got(g)._3} vs driver ${det.abnormal}")
+      assert((res(g)._2, res(g)._3) == (det.withinRadius, det.abnormal), g)
     }
-    // the planted corpus must actually exercise the recluster branch
-    assert(!Frap.detect(profile, arr("bad-000")).withinRadius,
-      "bad-000 should be outside every radius (recluster branch)")
+    assert(got("novel-000") == (("novel-000", false, true, None)))
+    assert(gotAll("novel-000") == (("novel-000", false, true, None)))
+    // the planted corpus exercises the recluster branch, on more flagged
+    // graphs (and more k-means runs) in `all` than in `few`
+    assert(Frap.detect(profile, arr("bad-000")).reclustered)
+    val flagged = all.count(g => !gotAll(g)._2)
+    assert(flagged >= 3, s"only $flagged of ${all.size} graphs flagged")
+    assert(jobs == 6 && jobsAll == jobs, s"$jobs / $jobsAll jobs")
     counts.unpersist(false); dict.unpersist(false)
   }
 
@@ -400,11 +402,16 @@ class FrapSpec extends AnyFunSuite {
   }
 
   test("end-to-end FRAP: held-out normal passes, abnormal is flagged") {
+    // novel-001's vertex and edge types occur in no learn graph, so none
+    // of its labels is in the dictionary
     val edges = ProvGen.corpus(spark, nNormal = 11, nAbnormal = 1)
+      .unionByName(Seq(ProvGen.ProvEdge("novel-001", 1, 2, 7, 8, 9)).toDF())
     val learn = (0 until 10).map(i => f"normal-$i%03d")
     val verdicts = FrapPipeline.run(edges, learn,
-      Seq("normal-010", "bad-000"), iters = 4)
+      Seq("normal-010", "bad-000", "novel-001"), iters = 4)
     val byId = verdicts.map(v => v.graphId -> v).toMap
+    val nv = byId("novel-001")
+    assert(!nv.withinRadius && nv.abnormal && nv.minDistance.isNaN, nv)
     assert(!byId("normal-010").abnormal,
       s"held-out normal flagged: ${byId("normal-010")}")
     assert(byId("bad-000").abnormal || !byId("bad-000").withinRadius,

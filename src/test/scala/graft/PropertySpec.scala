@@ -87,11 +87,4 @@ class PropertySpec extends AnyFunSuite {
       .as[(Long, Long, Double)].collect().toSet
     assert(got == Set((1L, 2L, 0.5), (3L, 4L, 1.5))) // self-edge dropped
   }
-
-  test("k-sigma outlier trim keeps the bulk, drops the spike") {
-    val df = (Seq.fill(50)(10.0) ++ Seq(1000.0)).toDF("v")
-    val kept = graft.frap.Kernels.outlierTrim(df, "v", k = 2.0)
-      .as[Double].collect()
-    assert(kept.length == 50 && kept.forall(_ == 10.0))
-  }
 }

@@ -231,8 +231,7 @@ class SuperstepLoopsSpec extends AnyFunSuite {
         "algos/Neighborhood.scala", "algos/RandomWalks.scala",
         "algos/SCC.scala", "algos/Sampling.scala", "algos/Truss.scala",
         "cf/SvdPlusPlus.scala", "cf/TimeSvdPlusPlus.scala",
-        "classify/AdPredictor.scala", "frap/FrapPipeline.scala",
-        "plans/CsrPageRank.scala",
+        "classify/AdPredictor.scala", "plans/CsrPageRank.scala",
         "streaming/EventStream.scala", "text/Dsir.scala",
         "vectors/KMeans.scala", "vectors/Pq.scala"))
     // Neighborhood keeps raw checkpoints only in the ANF snapshot loop
