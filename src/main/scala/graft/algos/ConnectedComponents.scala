@@ -44,8 +44,9 @@ object ConnectedComponents {
       // Frontier: only vertices that changed last round emit their label.
       val frontier = state.filter(col("delta") > 0)
         .select(col("id"), col("label"))
+      val view = LinkGraph.scatterView(und, state, "id")
       val msgs = frontier
-        .join(und, frontier("id") === und("src"))
+        .join(view, frontier("id") === view("src"))
         .groupBy(col("dst"))
         .agg(min(col("label")).as("mlabel"))
       state.join(msgs, state("id") === msgs("dst"), "left")

@@ -51,8 +51,9 @@ object LabelPropagation {
       .agg(min(col("src")).as("label"), lit(1.0).as("delta"))
 
     def step(state: DataFrame, iter: Int): DataFrame = {
+      val view = LinkGraph.scatterView(und, state, "id")
       val msgs = state.select(col("id"), col("label"))
-        .join(und, state("id") === und("src"))
+        .join(view, state("id") === view("src"))
         .select(col("dst"), col("label"))
       // most frequent label, tie -> larger label. Computed as the codegen
       // hash-aggregate + rank-window chain instead of

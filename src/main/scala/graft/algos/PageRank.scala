@@ -87,8 +87,9 @@ object PageRank {
       .select(col("id"), lit(1.0).as("rank"), lit(Double.MaxValue).as("delta"))
 
     def step(state: DataFrame, iter: Int): DataFrame = {
+      val view = LinkGraph.scatterView(sh, state, "id")
       val scattered = state.select(col("id"), col("rank"))
-        .join(sh, state("id") === sh("src"))
+        .join(view, state("id") === view("src"))
       val sums =
         if (saltBuckets > 0)
           graft.core.Skew.saltedSum(
@@ -194,8 +195,9 @@ object PageRank {
         lit(Double.MaxValue).as("delta"))
 
     def step(state: DataFrame, iter: Int): DataFrame = {
+      val view = LinkGraph.scatterView(sh, state, "id")
       val scattered = state.select(col("id"), col("rank"))
-        .join(sh, state("id") === sh("src"))
+        .join(view, state("id") === view("src"))
       val sums = scattered.groupBy(col("dst"))
         .agg(sum(col("rank") * col("share")).as("insum"))
       val prev = state.select(col("id"), col("rank").as("prev"))

@@ -31,7 +31,7 @@ object Dataflow {
   /** @param eager false defers materialization to the first action on the
     *   result (RDD.localCheckpoint marks the RDD; the checkpoint happens at
     *   the end of the first job that computes it) — used by the superstep
-    *   driver so the convergence aggregate's job materializes, caches and
+    *   driver so the job of its convergence fold materializes, caches and
     *   lineage-truncates the state in one pass. The stats rebase is
     *   independent of eagerness: it only rewraps the same marked RDD.
     */

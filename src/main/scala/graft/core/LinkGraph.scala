@@ -1,6 +1,9 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -135,7 +138,10 @@ object LinkGraph {
     * `key` within each, and persisted lazily: the caller materializes it
     * with its own action and unpersists it once the loop's result is
     * materialized. A superstep that joins its key-partitioned state on
-    * `key` then neither exchanges nor sorts the E-row side.
+    * `key` then neither exchanges nor sorts the E-row side, once the join
+    * takes the view through [[scatterView]]; the planner alone would
+    * broadcast a view under the auto-broadcast threshold again in every
+    * superstep.
     *
     * `undirected` gives the deduplicated symmetric (src, dst) form in ONE
     * E-row exchange: repartitioning first satisfies the distinct
@@ -157,5 +163,26 @@ object LinkGraph {
         .repartition(parts, col(key)).distinct()
       else edges.repartition(parts, col(key))
     laid.sortWithinPartitions(key).persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** `view` (an [[edgeView]] layout) as a superstep's scatter join of
+    * `state` on `state(key)` should take it. When the state's leaf — the
+    * store's rebased checkpoint — advertises the view's layout, hash
+    * partitioning on `key` into [[partitions]] partitions, the view is
+    * hinted to a sort-merge join, which then needs neither an exchange nor
+    * a broadcast. Otherwise the join is left to the planner: a state read
+    * back from a durable table, or checkpointed under AQE, advertises no
+    * partitioning, and a hinted join would exchange and sort the state.
+    */
+  def scatterView(view: DataFrame, state: DataFrame, key: String): DataFrame = {
+    val parts = partitions(state.sparkSession)
+    val laidOut = state.queryExecution.analyzed.collectLeaves() match {
+      case Seq(leaf: LogicalRDD) => leaf.outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), n) => a.name == key && n == parts
+        case _ => false
+      }
+      case _ => false
+    }
+    if (laidOut) view.hint("merge") else view
   }
 }

@@ -12,8 +12,10 @@ import scala.jdk.CollectionConverters._
   * can resume mid-iteration.
   */
 trait StateStore {
-  /** Superstep `iter`'s table, to use downstream. May be lazy: the first
-    * action on the result materializes it and truncates its lineage. */
+  /** Superstep `iter`'s table, to use downstream. Called before any job of
+    * the superstep runs. May be lazy: the first job over the result — the
+    * driver's convergence fold — materializes it and truncates its
+    * lineage. */
   def persist(state: DataFrame, iter: Int): DataFrame
   /** Append a completed-superstep record (the `.deltalog` analog). */
   def log(m: SuperstepMetrics): Unit
@@ -36,11 +38,14 @@ final case class SuperstepMetrics(
     active: Long,
     wallSec: Double,
     partitions: Seq[PartitionMetric]) {
+  /** One JSON object; a non-finite delta (a NaN or infinite change) is
+    * written as `null`, which JSON has no number for. */
   def toJson: String = {
     val parts = partitions
       .map(p => s"""{"p":${p.partition},"bytes":${p.bytes}}""")
       .mkString("[", ",", "]")
-    s"""{"iter":$iter,"rows":$rows,"bytes":$bytes,"delta":$delta,""" +
+    val d = if (delta.isNaN || delta.isInfinite) "null" else delta.toString
+    s"""{"iter":$iter,"rows":$rows,"bytes":$bytes,"delta":$d,""" +
       s""""active":$active,"wall_sec":$wallSec,"partitions":$parts}"""
   }
 }
@@ -50,26 +55,19 @@ final case class SuperstepMetrics(
   */
 final class LocalStore extends StateStore {
   private var history: List[SuperstepMetrics] = Nil
-  // LAZY checkpoint (round 6, guide §1/§2): the superstep driver always
-  // follows persist() with a one-pass convergence aggregate; a lazy local
-  // checkpoint lets that aggregate's job materialize + cache + truncate
-  // the state in the SAME job, halving the per-superstep job count (the
-  // eager form paid a dedicated materialization job, then re-read the
-  // cache for the aggregate). RDD.localCheckpoint marks the RDD and
-  // checkpoints at the end of the first job that computes it, so lineage
-  // truncation still happens every superstep.
+  // A lazy local checkpoint: the driver's convergence fold is the first
+  // job over the result, so it computes, caches and lineage-truncates the
+  // state in one pass (RDD.localCheckpoint marks the RDD and checkpoints
+  // it at the end of the first job that computes it).
   //
-  // Stats-REBASED (graft.core.Dataflow.checkpointRebased): a plain
-  // localCheckpoint preserves the replaced plan's ESTIMATED sizeInBytes,
-  // and a superstep that references its state twice (scatter + apply)
-  // doubles that estimate's BigInteger bit length every superstep; worse,
-  // a caller that restarts a Superstep loop inside its own loop (MSF runs
-  // CC once per Boruvka round) compounds the products across restarts
-  // until the driver pins a core in BigInteger.multiplyToomCook3
-  // (observed exactly that in round 6 when the prep tables moved from
-  // persist() — whose InMemoryRelation stats reset the estimates — to
-  // localCheckpoint, which preserves them). Rebasing every superstep
-  // keeps all loop-leaf stats at the bounded engine default.
+  // Stats-rebased (graft.core.Dataflow.checkpointRebased): a plain
+  // localCheckpoint keeps the replaced plan's estimated sizeInBytes, and a
+  // superstep that references its state twice (scatter + apply) doubles
+  // that estimate's BigInteger bit length every superstep — compounded
+  // across restarts when a caller reruns a loop inside its own loop (MSF
+  // runs CC once per Boruvka round), until the driver pins a core in
+  // BigInteger.multiplyToomCook3. Rebasing every superstep keeps all
+  // loop-leaf stats at the bounded engine default.
   override def persist(state: DataFrame, iter: Int): DataFrame =
     graft.core.Dataflow.checkpointRebased(state, eager = false)
   override def log(m: SuperstepMetrics): Unit = history ::= m
@@ -99,9 +97,12 @@ final class DurableStore(spark: SparkSession, dir: String,
   private def stateDir(iter: Int): Path =
     Paths.get(fmt.location(stateTable(iter)))
 
+  /** Writes the table and reads it back with the schema just written, so
+    * no schema-inference job runs. Reading back, rather than handing on
+    * the written frame, keeps nothing of the superstep cached. */
   override def persist(state: DataFrame, iter: Int): DataFrame = {
     fmt.overwrite(state, stateTable(iter))
-    fmt.read(spark, stateTable(iter))
+    fmt.read(spark, stateTable(iter), Some(state.schema))
   }
 
   /** Per-partition bytes of superstep `iter`'s parquet files. Knowingly

@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table-format seam: every durable table graft writes (superstep state,
   * generated fixtures, job outputs that need re-reading) goes through this
@@ -25,7 +26,11 @@ trait TableFormat {
     */
   def createIfAbsent(df: => DataFrame, table: String): Unit
 
-  def read(spark: SparkSession, table: String): DataFrame
+  /** `table`'s rows. `schema`, when given, is the schema the table was
+    * written with, and the read trusts it instead of inferring one (for
+    * parquet, inference is a Spark job of its own). */
+  def read(spark: SparkSession, table: String,
+      schema: Option[StructType] = None): DataFrame
 
   /** True iff `table` exists AND its last write committed completely — a
     * half-written table (writer killed mid-flight) must read as absent, or
@@ -100,8 +105,9 @@ final class ParquetFormat(val root: String) extends TableFormat {
     } finally if (locked) lock.delete()
   }
 
-  override def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(location(table))
+  override def read(spark: SparkSession, table: String,
+      schema: Option[StructType]): DataFrame =
+    schema.foldLeft(spark.read)(_.schema(_)).parquet(location(table))
 
   override def exists(table: String): Boolean =
     new java.io.File(location(table), "_SUCCESS").isFile
@@ -190,8 +196,10 @@ final class SnapshotParquetFormat(val root: String) extends TableFormat {
     }
   }
 
-  override def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(currentSnap(table).getOrElse(throw new
+  override def read(spark: SparkSession, table: String,
+      schema: Option[StructType]): DataFrame =
+    schema.foldLeft(spark.read)(_.schema(_)).parquet(currentSnap(table)
+      .getOrElse(throw new
         java.util.NoSuchElementException(s"no committed snapshot: $table"))
       .getAbsolutePath)
 

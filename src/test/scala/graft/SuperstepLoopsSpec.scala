@@ -1,14 +1,20 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, SHUFFLE_MERGE}
 import org.apache.spark.sql.graft.CachedEntries
 import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+  ShuffleExchangeExec}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,7 +22,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.algos.{Betweenness, Coloring, ConnectedComponents, GraphOps,
   Hits, KCores, LabelPropagation, Mis, Neighborhood, PageRank, SCC,
   Sampling, Truss}
-import graft.engine.{LocalStore, StateStore, Superstep, SuperstepMetrics}
+import graft.engine.{DurableStore, LocalStore, StateStore, Superstep,
+  SuperstepMetrics}
 
 /** The loops on [[graft.engine.Superstep.run]] run one Spark job per
   * superstep, and raw `localCheckpoint(` calls only shrink.
@@ -110,12 +117,15 @@ class SuperstepLoopsSpec extends AnyFunSuite {
     assert(sccJobs == 16 + (1 + 3 + 3) + 1) // + 1: the collect
   }
 
-  /** A [[LocalStore]] that keeps the executed plan of superstep 1. */
+  /** A [[LocalStore]] that keeps the executed plan of superstep 1 and the
+    * frame of every superstep. */
   private final class FirstStepPlan extends StateStore {
     private val local = new LocalStore
     var plan: SparkPlan = _
+    val steps = ArrayBuffer.empty[DataFrame]
     override def persist(state: DataFrame, iter: Int): DataFrame = {
       if (iter == 1) plan = state.queryExecution.executedPlan
+      if (iter > 0) steps += state
       local.persist(state, iter)
     }
     override def log(m: SuperstepMetrics): Unit = ()
@@ -142,6 +152,92 @@ class SuperstepLoopsSpec extends AnyFunSuite {
       assert(store.plan != null, name)
       assert(stateExchanges(store.plan).isEmpty, s"$name:\n${store.plan}")
     }
+  }
+
+  /** A store that counts the jobs of each superstep: those started from
+    * its `persist` call to the next one, or to the end of the run. */
+  private final class StepJobs(inner: StateStore) extends StateStore {
+    private val sc = spark.sparkContext
+    private val jobs = new AtomicInteger(0)
+    private val marks = ArrayBuffer.empty[Int]
+    private def mark(): Unit = { ListenerDrain(sc); marks += jobs.get() }
+
+    /** `run`'s result and the jobs of each of its supersteps. */
+    def watch[A](run: => A): (A, Seq[Int]) = {
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      ListenerDrain(sc)
+      sc.addSparkListener(listener)
+      try {
+        val a = run
+        mark()
+        (a, marks.toSeq.sliding(2).map { case Seq(x, y) => y - x }.toSeq)
+      } finally sc.removeSparkListener(listener)
+    }
+    override def persist(state: DataFrame, iter: Int): DataFrame = {
+      if (iter > 0) mark()
+      inner.persist(state, iter)
+    }
+    override def log(m: SuperstepMetrics): Unit = inner.log(m)
+    override def resumePoint(): Option[(Int, DataFrame)] = inner.resumePoint()
+    override def release(state: DataFrame): Unit = inner.release(state)
+  }
+
+  private val scatterLoops = Seq[(String, StateStore => Superstep.RunResult)](
+    "PageRank" -> (s => PageRank.run(spark, path, tol = -1.0, maxIters = 3,
+      store = s)),
+    "CC" -> (s => ConnectedComponents.run(spark, path, 10, s)),
+    "LPA" -> (s => LabelPropagation.run(spark, path, 3, s)))
+
+  test("with broadcasts on, a superstep runs one job and broadcasts no view") {
+    // the static views are far under the auto-broadcast threshold, so the
+    // planner alone would broadcast them again in every superstep
+    val threshold = SQLConf.AUTO_BROADCASTJOIN_THRESHOLD
+    TestSessions.withConf("spark.sql.adaptive.enabled" -> "false",
+        threshold.key -> threshold.defaultValueString) {
+      for ((name, run) <- scatterLoops) {
+        val store = new StepJobs(new LocalStore)
+        val (res, perStep) = store.watch(run(store))
+        assert(perStep == Seq.fill(res.supersteps)(1), name)
+        val first = new FirstStepPlan
+        run(first)
+        val viewBroadcasts = first.plan.collect {
+          case b: BroadcastExchangeExec
+              if b.exists(_.isInstanceOf[InMemoryTableScanExec]) => b
+        }
+        assert(viewBroadcasts.isEmpty, s"$name:\n${first.plan}")
+      }
+      // a durable state is read back from parquet with no partitioning, so
+      // the view is still broadcast, and the read-back state's file-size
+      // estimate is small enough that the messages are broadcast into the
+      // apply join too: the write, the convergence fold and the two
+      // broadcasts, and no schema-inference job
+      val dir = Files.createTempDirectory("graft-durable-jobs").toString
+      val store = new StepJobs(new DurableStore(spark, dir))
+      val (res, perStep) =
+        store.watch(ConnectedComponents.run(spark, path, 10, store))
+      assert(res.converged)
+      assert(perStep == Seq.fill(res.supersteps)(4))
+    }
+  }
+
+  test("the scatter join takes a merge hint only without AQE") {
+    // under AQE a checkpointed state leaf advertises no partitioning, and a
+    // hinted join would exchange and sort the state on the join
+    def mergeHinted(df: DataFrame) = df.queryExecution.optimizedPlan.exists {
+      case j: Join => Seq(j.hint.leftHint, j.hint.rightHint).flatten
+        .exists(_.strategy.contains(SHUFFLE_MERGE))
+      case _ => false
+    }
+    for (aqe <- Seq(false, true); (name, run) <- scatterLoops)
+      TestSessions.withConf("spark.sql.adaptive.enabled" -> aqe.toString) {
+        val store = new FirstStepPlan
+        run(store)
+        assert(store.steps.nonEmpty, name)
+        assert(store.steps.forall(mergeHinted(_) != aqe), s"$name, AQE $aqe")
+      }
   }
 
   test("loops on a session that never sets the partition count") {
@@ -264,6 +360,11 @@ class SuperstepLoopsSpec extends AnyFunSuite {
       Set("core/LinkGraph.scala", "Bench.scala", "BenchExtra.scala",
         "Verify.scala", "jobs/Jobs.scala"))
     assert(callSites("numPartitions").isEmpty)
+  }
+
+  test("jobs run directly only in the engine, join hints only in LinkGraph") {
+    assertRatchet("runJob(", Set.empty, Set("engine/Superstep.scala"))
+    assertRatchet(".hint(", Set.empty, Set("core/LinkGraph.scala"))
   }
 
   test("def main( appears only in the measurement, oracle and job mains") {

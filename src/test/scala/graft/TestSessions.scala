@@ -21,30 +21,35 @@ object TestSessions {
   }
   val Sf0001 = "/root/testdata/sf0.001"
 
+  /** `f` run with the session confs `kv` set; the previous values are
+    * restored afterwards. */
+  def withConf[A](kv: (String, String)*)(f: => A): A = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prev.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   /** `f`'s result and the jobs started while it runs (static plans: AQE
     * and auto-broadcast off, so the only broadcasts are explicit hints). */
-  def withJobs[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val prev = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.autoBroadcastJoinThreshold").map(k => k -> spark.conf.get(k))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    ListenerDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val a = f
+  def withJobs[A](f: => A): (A, Int) =
+    withConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val sc = spark.sparkContext
+      val jobs = new AtomicInteger(0)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
       ListenerDrain(sc)
-      (a, jobs.get())
-    } finally {
-      sc.removeSparkListener(listener)
-      prev.foreach { case (k, v) => spark.conf.set(k, v) }
+      sc.addSparkListener(listener)
+      try {
+        val a = f
+        ListenerDrain(sc)
+        (a, jobs.get())
+      } finally sc.removeSparkListener(listener)
     }
-  }
 }
 
 /** Plain-Scala reference implementations ("oracles") of the graph
