@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.graft.GraftSqlBridge.ReboundStep
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import scala.collection.immutable.ListMap
@@ -20,8 +21,9 @@ import graft.vectors.{Pq, Similarity}
   * {{{
   * dev/run.sh graft.BenchExtra <mode> [args...]
   *   plans    [outDir] [tag]        formatted plans of the bench legs, incl.
-  *                                  each loop's shipped superstep (PlanStore),
-  *                                  to outDir/<leg>_<tag>.txt
+  *                                  each loop's built superstep and its first
+  *                                  rebound one (PlanStore), to
+  *                                  outDir/<leg>_<tag>.txt
   *   phases                         prep vs per-superstep wall of the legs
   *   lpa                            LPA phases with a per-stage log
   *   sweep    <outDir> <tag> [query...]
@@ -70,16 +72,32 @@ object BenchExtra {
   }
 
   /** LocalStore that also records the formatted plan of each superstep's
-    * pre-checkpoint computation — the shipped step closure's actual plan.
+    * pre-checkpoint computation — the shipped step closure's actual plan —
+    * and whether it reran a built step with its state leaf rebound.
     */
   final class PlanStore extends graft.engine.StateStore {
     private val inner = new LocalStore
-    val plans = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
+    val plans =
+      scala.collection.mutable.ArrayBuffer.empty[(Int, Boolean, String)]
     override def persist(state: DataFrame, iter: Int): DataFrame = {
-      plans += ((iter,
+      plans += ((iter, state.queryExecution.analyzed.isInstanceOf[ReboundStep],
         state.queryExecution.explainString(ExplainMode.fromString("formatted"))))
       inner.persist(state, iter)
     }
+
+    /** The first rebound superstep's plan and the plan of the built step it
+      * reran, as `(file suffix, title, plan)`; superstep 2's plan alone
+      * when no superstep was rebound (AQE). */
+    def builtAndRebound(name: String): Seq[(String, String, String)] =
+      plans.find(_._2) match {
+        case Some((iter, _, rebound)) =>
+          val (built, _, plan) = plans.filter(p => p._1 > 0 && p._1 < iter).last
+          Seq(("built", s"== $name superstep $built, built ==", plan),
+            ("rebound", s"== $name superstep $iter, the step built in " +
+              s"superstep $built rerun with its state leaf rebound ==", rebound))
+        case None => plans.find(_._1 == 2).toSeq.map { case (_, _, plan) =>
+          ("built", s"== $name superstep 2, built ==", plan) }
+      }
     override def log(m: SuperstepMetrics): Unit = inner.log(m)
     override def resumePoint(): Option[(Int, DataFrame)] = None
     override def release(state: DataFrame): Unit = inner.release(state)
@@ -316,27 +334,20 @@ object BenchExtra {
         write(outDir, s"derive_edges_$tag.txt",
           fmt(LinkGraph.edges(spark, sfDir)))
 
-        val prStore = new PlanStore
-        sc.setJobDescription("pagerank")
-        PageRank.run(spark, edges, tol = 1e-6, maxIters = 200, store = prStore)
-        write(outDir, s"pagerank_superstep_$tag.txt",
-          "== PageRank superstep (iter 2 of the shipped loop; " +
-            "iter 0 is the init state) ==\n" +
-            prStore.plans.find(_._1 == 2).map(_._2).getOrElse("<missing>"))
-
-        val ccStore = new PlanStore
-        sc.setJobDescription("connected_components")
-        ConnectedComponents.run(spark, edges, store = ccStore)
-        write(outDir, s"connected_components_superstep_$tag.txt",
-          "== CC superstep (iter 2 of the shipped loop) ==\n" +
-            ccStore.plans.find(_._1 == 2).map(_._2).getOrElse("<missing>"))
-
-        val lpaStore = new PlanStore
-        sc.setJobDescription("label_propagation")
-        LabelPropagation.run(spark, edges, iters = 5, store = lpaStore)
-        write(outDir, s"label_propagation_superstep_$tag.txt",
-          "== LPA superstep (iter 2 of the shipped loop) ==\n" +
-            lpaStore.plans.find(_._1 == 2).map(_._2).getOrElse("<missing>"))
+        for ((name, file, run) <- Seq[(String, String, PlanStore => Any)](
+            ("PageRank", "pagerank", s =>
+              PageRank.run(spark, edges, tol = 1e-6, maxIters = 200, store = s)),
+            ("CC", "connected_components", s =>
+              ConnectedComponents.run(spark, edges, store = s)),
+            ("LPA", "label_propagation", s =>
+              LabelPropagation.run(spark, edges, iters = 5, store = s)))) {
+          val store = new PlanStore
+          sc.setJobDescription(file)
+          run(store)
+          store.builtAndRebound(name).foreach { case (kind, title, plan) =>
+            write(outDir, s"${file}_superstep_${kind}_$tag.txt", s"$title\n$plan")
+          }
+        }
 
         write(outDir, s"triangle_total_$tag.txt",
           fmt(TriangleCount.total(spark, edges)))

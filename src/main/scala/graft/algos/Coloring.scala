@@ -74,7 +74,7 @@ object Coloring {
             hashPri.cast(dec)).as("pri"))
       else und.select(col("src").as("id")).distinct()
         .select(col("id"), hashPri.as("pri"))
-    def step(state: DataFrame, round: Int): DataFrame = {
+    def step(state: DataFrame): DataFrame = {
       val uncol = state.filter(col("delta") > 0)
       val nbrMax = und
         .join(uncol.select(col("id").as("dst"), col("pri").as("np")),

@@ -40,7 +40,7 @@ object ConnectedComponents {
     val init = und.groupBy(col("src").as("id"))
       .agg(min(col("src")).as("label"), lit(1.0).as("delta"))
 
-    def step(state: DataFrame, iter: Int): DataFrame = {
+    def step(state: DataFrame): DataFrame = {
       // Frontier: only vertices that changed last round emit their label.
       val frontier = state.filter(col("delta") > 0)
         .select(col("id"), col("label"))

@@ -102,7 +102,7 @@ object GraphOps {
     // hash(src)-partitioned: the per-round frontier semi-join never
     // re-exchanges the E-row side; superstep 1's job materializes it
     val und = LinkGraph.edgeView(edges, "src", undirected = true)
-    def step(state: DataFrame, iter: Int): DataFrame = {
+    def step(state: DataFrame): DataFrame = {
       val next = und.join(
           state.filter(col("delta") > 0).select(col("id").as("src")),
           Seq("src"), "left_semi")
@@ -148,7 +148,7 @@ object GraphOps {
     e.count()
     // state (id, dist, delta); delta = 1 where dist improved (the frontier).
     // One min-groupBy merges the old distances with the relaxations.
-    def step(state: DataFrame, iter: Int): DataFrame = {
+    def step(state: DataFrame): DataFrame = {
       val frontier = state.filter(col("delta") > 0)
       val relaxed = frontier.join(e, frontier("id") === e("src"))
         .select(col("dst").as("id"), (col("dist") + col("weight")).as("nd"))
@@ -250,7 +250,7 @@ object GraphOps {
         sum("weight").over(Window.partitionBy("dst")).as("wsum"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     e.count()
-    def step(dist: DataFrame, iter: Int): DataFrame = {
+    def step(dist: DataFrame): DataFrame = {
       val msgs = dist.join(e, dist("id") === e("src"))
         .groupBy(col("dst").as("id"), col("label"), col("wsum"))
         .agg(sum(col("p") * col("weight")).as("wp"))

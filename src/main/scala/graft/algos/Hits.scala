@@ -46,7 +46,7 @@ object Hits {
         .withColumn(c, col(c) / col("__n")).drop("__n")
     }
 
-    def step(state: DataFrame, iter: Int): DataFrame = {
+    def step(state: DataFrame): DataFrame = {
       val auth = state.select(col("id"), col("hub"))
         .join(eSrc, state("id") === eSrc("src"))
         .groupBy(col("dst").as("id")).agg(sum("hub").as("auth"))

@@ -52,7 +52,7 @@ object KCores {
       .agg(count(lit(1)).as("core"))
       .withColumn("delta", lit(1.0))
 
-    def step(state: DataFrame, iter: Int): DataFrame = {
+    def step(state: DataFrame): DataFrame = {
       // recompute h only where it can move: vertices with a changed
       // neighbor. und is symmetric, so they are the dst side of the changed
       // vertices' edges — a probe on the src-partitioned view that

@@ -50,7 +50,7 @@ object LabelPropagation {
     val init = und.groupBy(col("src").as("id"))
       .agg(min(col("src")).as("label"), lit(1.0).as("delta"))
 
-    def step(state: DataFrame, iter: Int): DataFrame = {
+    def step(state: DataFrame): DataFrame = {
       val view = LinkGraph.scatterView(und, state, "id")
       val msgs = state.select(col("id"), col("label"))
         .join(view, state("id") === view("src"))

@@ -32,8 +32,9 @@ import graft.engine.{LocalStore, Superstep}
   * it wait).
   *
   * The rounds are supersteps of [[Superstep.run]] (frontier stop rule):
-  * state (id, pri, mis_round, delta), `delta` = 1 on still-active
-  * vertices, a winner's round written into its `mis_round`.
+  * state (id, pri, mis_round, round, delta), `delta` = 1 on still-active
+  * vertices, `round` the rounds done so far (the same on every row), a
+  * winner's round written into its `mis_round`.
   *
   * Output: (id, mis_round) for MIS members only, mis_round ≥ 1.
   */
@@ -58,9 +59,9 @@ object Mis {
       4294967296L + (col("id") % 4294967296L)).as("pri")
     val init = und.select(col("src").as("id")).distinct()
       .select(col("id"), pri, lit(null).cast("long").as("mis_round"),
-        lit(1.0).as("delta"))
+        lit(0L).as("round"), lit(1.0).as("delta"))
 
-    def step(state: DataFrame, round: Int): DataFrame = {
+    def step(state: DataFrame): DataFrame = {
       val active = state.filter(col("delta") > 0)
       val nbrMax = und
         .join(active.select(col("id").as("dst"), col("pri").as("np")),
@@ -68,9 +69,9 @@ object Mis {
         .groupBy(col("src").as("id")).agg(max(col("np")).as("maxnp"))
       val winners = active.join(nbrMax, Seq("id"), "left")
         .filter(col("maxnp").isNull || col("pri") > col("maxnp"))
-        .select(col("id"))
+        .select(col("id"), (col("round") + 1).as("won"))
       // winners and their neighbors leave; a winner carries its round
-      val removed = winners.select(col("id"), lit(round.toLong).as("won"))
+      val removed = winners
         .unionAll(und
           .join(winners.select(col("id").as("src")), Seq("src"))
           .select(col("dst").as("id"), lit(null).cast("long").as("won")))
@@ -78,6 +79,7 @@ object Mis {
       state.join(removed, Seq("id"), "left")
         .select(col("id"), col("pri"),
           coalesce(col("mis_round"), col("won")).as("mis_round"),
+          (col("round") + 1).as("round"),
           when(col("delta") > 0 && col("rm").isNull, 1.0).otherwise(0.0)
             .as("delta"))
     }

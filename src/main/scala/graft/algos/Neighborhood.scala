@@ -51,13 +51,15 @@ object Neighborhood {
     und.count()
 
     // state (seed, id, dist, delta); delta = 1 for pairs first reached at
-    // superstep t = iter
-    def step(state: DataFrame, t: Int): DataFrame = {
+    // superstep t = dist. Every frontier row of superstep t was first
+    // reached at t - 1, so its dist + 1 is t
+    def step(state: DataFrame): DataFrame = {
       val frontier = state.filter(col("delta") > 0)
       val newly = frontier.join(und, frontier("id") === und("src"))
-        .select(col("seed"), und("dst").as("id")).distinct()
+        .select(col("seed"), und("dst").as("id"), (col("dist") + 1).as("dist"))
+        .distinct()
         .join(state.select("seed", "id"), Seq("seed", "id"), "left_anti")
-        .select(col("seed"), col("id"), lit(t).as("dist"), lit(1.0).as("delta"))
+        .select(col("seed"), col("id"), col("dist"), lit(1.0).as("delta"))
       state.withColumn("delta", lit(0.0)).unionByName(newly)
     }
     val reached = Superstep.run(

@@ -86,7 +86,7 @@ object PageRank {
     val init = LinkGraph.vertices(edges)
       .select(col("id"), lit(1.0).as("rank"), lit(Double.MaxValue).as("delta"))
 
-    def step(state: DataFrame, iter: Int): DataFrame = {
+    def step(state: DataFrame): DataFrame = {
       val view = LinkGraph.scatterView(sh, state, "id")
       val scattered = state.select(col("id"), col("rank"))
         .join(view, state("id") === view("src"))
@@ -194,7 +194,7 @@ object PageRank {
       .select(col("id"), seedRank(col("id")).as("rank"),
         lit(Double.MaxValue).as("delta"))
 
-    def step(state: DataFrame, iter: Int): DataFrame = {
+    def step(state: DataFrame): DataFrame = {
       val view = LinkGraph.scatterView(sh, state, "id")
       val scattered = state.select(col("id"), col("rank"))
         .join(view, state("id") === view("src"))

@@ -75,7 +75,7 @@ object SCC {
     }
     // one inner fixpoint on Superstep; its final state
     def fixpoint(phase: String, init: DataFrame)(
-        step: (DataFrame, Int) => DataFrame): DataFrame = {
+        step: DataFrame => DataFrame): DataFrame = {
       val res = Superstep.run(init, step, tol = 0.0, maxInnerRounds,
         new LocalStore)
       if (!res.converged) throw new IllegalStateException(
@@ -121,7 +121,7 @@ object SCC {
           .join(outDeg, Seq("id"), "left")
           .select(col("id") +: trimmed(coalesce(col("in"), lit(0L)),
             coalesce(col("out"), lit(0L)), lit(true)): _*)
-          .repartition(parts, col("id"))) { (deg, _) =>
+          .repartition(parts, col("id"))) { deg =>
         val peel = deg.filter(col("delta") > 0).select("id")
         // each peeled vertex kills its incident edges: decrement the other
         // endpoint's opposing degree (edges with both endpoints peeled
@@ -175,7 +175,7 @@ object SCC {
       // CC uses. State (id, color, delta), hash-partitioned on id.
       val colors = fixpoint("forward", live
           .select(col("id"), col("id").as("color"), lit(1.0).as("delta"))
-          .repartition(parts, col("id"))) { (colors, _) =>
+          .repartition(parts, col("id"))) { colors =>
         val msgs = colors.filter(col("delta") > 0)
           .join(eSrc, col("id") === eSrc("src"))
           .groupBy(col("dst")).agg(max(col("color")).as("mcolor"))
@@ -197,7 +197,7 @@ object SCC {
       val bstate = fixpoint("backward", colors.select(col("id"),
           col("color"), when(col("color") === col("id"), col("id")).as("scc"),
           when(col("color") === col("id"), 1.0).otherwise(0.0).as("delta"))
-        ) { (bstate, _) =>
+        ) { bstate =>
         // predecessor candidates of the newly-confirmed frontier
         val frontier = bstate.filter(col("delta") > 0)
         val cand = frontier.join(eDst, frontier("id") === eDst("dst"))

@@ -1,6 +1,6 @@
 package graft.algos
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.core.Dataflow
@@ -77,6 +77,14 @@ object Truss {
     * every round. Small removal batches broadcast. BENCH.md records the
     * measured A/B at 22 M edges. The peel rounds are supersteps of
     * [[Superstep.run]] (frontier stop rule).
+    *
+    * The broadcast gate is decided once, before the loop, so the step is a
+    * plan over its state alone: every batch is broadcast iff round 1's
+    * removals and its survivors both number at most 1M edges. Every later
+    * batch is a subset of round 1's survivors, so no batch over 1M rows is
+    * broadcast. The one regime that loses a broadcast: round 1 removes or
+    * keeps more than 1M edges, and later batches are small; those batches
+    * then shuffle into the wedge join instead.
     */
   def kTrussDecremental(spark: SparkSession, edges: DataFrame, k: Int,
       maxRounds: Int = 200): DataFrame = {
@@ -90,14 +98,12 @@ object Truss {
     val init = flagged(e0.join(supp0, Seq("u", "v"), "left")
       .select(col("u"), col("v"), coalesce(col("supp"), lit(0L)).as("supp")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val removed0 = init.filter(col("delta") > 0).count()
+    val Row(removed0: Long, n0: Long) =
+      init.agg(count(when(col("delta") > 0, 1)), count(lit(1))).head()
     o0.unpersist(false)
-    val store = new LocalStore
+    val broadcastBatches = math.max(removed0, n0 - removed0) <= 1000000L
 
-    def step(cur: DataFrame, round: Int): DataFrame = {
-      // Superstep logs superstep round-1 before it builds this round, so
-      // its `active` is this round's removal count
-      val nRemoved = store.metrics.lastOption.fold(removed0)(_.active)
+    def step(cur: DataFrame): DataFrame = {
       val removed = cur.filter(col("delta") > 0).select("u", "v")
       val und = cur.select(col("u").as("a"), col("v").as("b"))
         .unionAll(cur.select(col("v").as("a"), col("u").as("b")))
@@ -110,7 +116,7 @@ object Truss {
         .select(col("u"), col("v"),
           when(lower, col("u")).otherwise(col("v")).as("lo"),
           when(lower, col("v")).otherwise(col("u")).as("hi"))
-      val rdegH = if (nRemoved <= 1000000L) broadcast(rdeg) else rdeg
+      val rdegH = if (broadcastBatches) broadcast(rdeg) else rdeg
       val tris = rdegH
         .join(und.select(col("a").as("lo"), col("b").as("w")), "lo")
         .filter(col("w") =!= col("hi"))
@@ -140,7 +146,7 @@ object Truss {
           (col("supp") - coalesce(col("dec"), lit(0L))).as("supp")))
     }
 
-    val res = Superstep.run(init, step, tol = 0.0, maxRounds, store)
+    val res = Superstep.run(init, step, tol = 0.0, maxRounds, new LocalStore)
     init.unpersist(false)
     if (!res.converged) throw new IllegalStateException(
       s"k-truss did not converge in $maxRounds peel rounds")

@@ -23,12 +23,11 @@ trait StateStore {
   def resumePoint(): Option[(Int, DataFrame)]
   /** Drop cached/earlier state no longer needed (best-effort). */
   def release(state: DataFrame): Unit = ()
-  /** Per-partition sizes of superstep `iter`'s persisted table, where the
-    * store can measure them; a wrapping store passes the call through. */
-  def partitionMetrics(iter: Int): Seq[PartitionMetric] = Nil
 }
 
-final case class PartitionMetric(partition: Int, bytes: Long)
+/** One partition of a superstep's state: its rows and their `UnsafeRow`
+  * bytes, counted by the job that materializes the state. */
+final case class PartitionMetric(partition: Int, rows: Long, bytes: Long)
 
 final case class SuperstepMetrics(
     iter: Int,
@@ -42,7 +41,7 @@ final case class SuperstepMetrics(
     * written as `null`, which JSON has no number for. */
   def toJson: String = {
     val parts = partitions
-      .map(p => s"""{"p":${p.partition},"bytes":${p.bytes}}""")
+      .map(p => s"""{"p":${p.partition},"rows":${p.rows},"bytes":${p.bytes}}""")
       .mkString("[", ",", "]")
     val d = if (delta.isNaN || delta.isInfinite) "null" else delta.toString
     s"""{"iter":$iter,"rows":$rows,"bytes":$bytes,"delta":$d,""" +
@@ -72,8 +71,10 @@ final class LocalStore extends StateStore {
     graft.core.Dataflow.checkpointRebased(state, eager = false)
   override def log(m: SuperstepMetrics): Unit = history ::= m
   override def resumePoint(): Option[(Int, DataFrame)] = None
+  // The checkpoint's blocks: a Dataset.unpersist would drop only
+  // cache-manager entries, and leave them to the next GC.
   override def release(state: DataFrame): Unit =
-    try state.unpersist(false) catch { case _: Throwable => () }
+    org.apache.spark.sql.graft.GraftSqlBridge.unpersistStateLeaf(state)
   def metrics: Seq[SuperstepMetrics] = history.reverse
 }
 
@@ -82,8 +83,7 @@ final class LocalStore extends StateStore {
   * [[TableFormat]] (parquet directories here; Iceberg/Delta on a cluster
   * with a catalog — the commit/compaction claims of SURVEY §2.9 live behind
   * that seam). Resume = last manifest entry whose state table is complete.
-  * At cluster scale `dir` is an object store path; partition byte sizes come
-  * from the written part-files.
+  * At cluster scale `dir` is an object store path.
   */
 final class DurableStore(spark: SparkSession, dir: String,
     format: TableFormat = null) extends StateStore {
@@ -94,8 +94,6 @@ final class DurableStore(spark: SparkSession, dir: String,
   private val manifest: Path = root.resolve("manifest.jsonl")
 
   private def stateTable(iter: Int): String = s"state/iter=$iter"
-  private def stateDir(iter: Int): Path =
-    Paths.get(fmt.location(stateTable(iter)))
 
   /** Writes the table and reads it back with the schema just written, so
     * no schema-inference job runs. Reading back, rather than handing on
@@ -103,22 +101,6 @@ final class DurableStore(spark: SparkSession, dir: String,
   override def persist(state: DataFrame, iter: Int): DataFrame = {
     fmt.overwrite(state, stateTable(iter))
     fmt.read(spark, stateTable(iter), Some(state.schema))
-  }
-
-  /** Per-partition bytes of superstep `iter`'s parquet files. Knowingly
-    * parquet-layout-specific (part- files at the table location): a
-    * best-effort local diagnostic, not part of the TableFormat contract —
-    * a catalog-format deployment reports sizes from the format's own
-    * metadata tables instead and this returns Nil harmlessly.
-    */
-  override def partitionMetrics(iter: Int): Seq[PartitionMetric] = {
-    val out = stateDir(iter)
-    if (!Files.isDirectory(out)) return Nil
-    Files.list(out).iterator().asScala.toSeq
-      .filter(p => p.getFileName.toString.startsWith("part-"))
-      .sortBy(_.getFileName.toString)
-      .zipWithIndex
-      .map { case (p, i) => PartitionMetric(i, Files.size(p)) }
   }
 
   override def log(m: SuperstepMetrics): Unit = {

@@ -94,8 +94,12 @@ class EngineSpec extends AnyFunSuite {
       val frames = states.map(ds =>
         ds.zipWithIndex.map { case (d, i) => (i.toLong, d) }
           .toDF("id", "delta").repartition(3))
-      val res = Superstep.run(frames.head, (_, iter) => frames(iter), tol,
-        frames.size - 1, new LocalStore)
+      // a step that ignores its state: with no scan of the state in its
+      // plan there is no template to rerun, so it is called every superstep
+      var calls = 0
+      val res = Superstep.run(frames.head, _ => { calls += 1; frames(calls) },
+        tol, frames.size - 1, new LocalStore)
+      assert(calls == res.supersteps)
       val want = frames.tail.map(ColumnStats(_, tol))
       val stop = want.indexWhere(_._1 <= tol)
       val what = s"tol $tol, states $states"
@@ -117,7 +121,7 @@ class EngineSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-nan").toString
     val init = Seq((1L, Double.NaN), (2L, Double.PositiveInfinity), (3L, 0.5))
       .toDF("id", "delta")
-    def step(state: DataFrame, iter: Int): DataFrame =
+    def step(state: DataFrame): DataFrame =
       state.select(col("id"), (col("delta") * 2).as("delta"))
     val first = Superstep.run(init, step, 0.0, 2, new DurableStore(spark, dir))
     assert(!first.converged && first.metrics.forall(_.delta.isNaN))

@@ -10,7 +10,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, SHUFFLE_MERGE}
 import org.apache.spark.sql.graft.CachedEntries
-import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.graft.GraftSqlBridge.ReboundStep
+import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
   ShuffleExchangeExec}
@@ -231,13 +232,118 @@ class SuperstepLoopsSpec extends AnyFunSuite {
         .exists(_.strategy.contains(SHUFFLE_MERGE))
       case _ => false
     }
+    // a rebound superstep reruns the plan of the step it was rebound from,
+    // so the hint is read from the built steps; under AQE none is rebound
     for (aqe <- Seq(false, true); (name, run) <- scatterLoops)
       TestSessions.withConf("spark.sql.adaptive.enabled" -> aqe.toString) {
         val store = new FirstStepPlan
         run(store)
-        assert(store.steps.nonEmpty, name)
-        assert(store.steps.forall(mergeHinted(_) != aqe), s"$name, AQE $aqe")
+        val (rebound, built) = store.steps.partition(isRebound)
+        assert(built.nonEmpty, name)
+        assert(built.forall(mergeHinted(_) != aqe), s"$name, AQE $aqe")
+        assert(rebound.isEmpty == aqe, s"$name, AQE $aqe")
       }
+  }
+
+  private def isRebound(step: DataFrame): Boolean =
+    step.queryExecution.analyzed.isInstanceOf[ReboundStep]
+
+  /** A store that records, for each superstep, whether its step was rerun
+    * over a rebound state leaf rather than built. */
+  private final class Rebinds(inner: StateStore) extends StateStore {
+    val rebound = ArrayBuffer.empty[Boolean]
+    override def persist(state: DataFrame, iter: Int): DataFrame = {
+      if (iter > 0) rebound += isRebound(state)
+      inner.persist(state, iter)
+    }
+    override def log(m: SuperstepMetrics): Unit = inner.log(m)
+    override def resumePoint(): Option[(Int, DataFrame)] = inner.resumePoint()
+    override def release(state: DataFrame): Unit = inner.release(state)
+  }
+
+  // 40 vertices, 120 pseudo-random edges: several components, hubs and
+  // cycles, so every loop shuffles and runs its full superstep budget
+  private def tangle = (0 until 120)
+    .map(i => ((i * 7919L) % 40, (i * 104729L + 13) % 37))
+    .filter { case (a, b) => a != b }
+    .toDF("src", "dst").withColumn("weight", lit(1.0))
+
+  test("a step is built at most twice per run, never under AQE") {
+    def values(state: DataFrame, c: String): Map[Long, Any] =
+      state.select(col("id"), col(c)).collect()
+        .map(r => r.getLong(0) -> r.get(1)).toMap
+    val loops = Seq[(String, String, StateStore => Superstep.RunResult)](
+      ("PageRank", "rank", s => PageRank.run(spark, tangle, tol = -1.0,
+        maxIters = 6, store = s)),
+      ("CC", "label", s => ConnectedComponents.run(spark, tangle, 20, s)),
+      ("LPA", "label", s => LabelPropagation.run(spark, tangle, 5, s)))
+    for ((name, c, run) <- loops) {
+      def once(aqe: Boolean, durable: Boolean) =
+        TestSessions.withConf("spark.sql.adaptive.enabled" -> aqe.toString) {
+          val store = new Rebinds(if (!durable) new LocalStore else
+            new DurableStore(spark,
+              Files.createTempDirectory("graft-rebind").toString))
+          val res = run(store)
+          assert(store.rebound.size == res.supersteps, name)
+          (values(res.state, c), store.rebound.toSeq)
+        }
+      val (want, adaptive) = once(aqe = true, durable = false)
+      assert(!adaptive.contains(true), s"$name rebound under AQE")
+      for (durable <- Seq(false, true)) {
+        val what = s"$name, durable $durable"
+        val (got, rebound) = once(aqe = false, durable)
+        assert(rebound.count(!_) <= 2 && rebound.contains(true),
+          s"$what: $rebound")
+        assert(got.keySet == want.keySet, what)
+        if (c == "rank") assert(got.forall { case (k, v) =>
+          math.abs(v.asInstanceOf[Double] - want(k).asInstanceOf[Double]) <=
+            1e-12 }, what)
+        else assert(got == want, what)
+      }
+    }
+  }
+
+  test("a state laid out differently, or with no leaf, builds the step") {
+    // the store lays superstep 3's state out in 2 partitions and
+    // superstep 5's back in 4: the supersteps that read them (4 and 6)
+    // build the step again, and the rest rerun the last one built
+    def relaid(state: DataFrame, iter: Int): DataFrame = iter match {
+      case 3 => state.repartition(2, col("id"))
+      case 5 => state.repartition(4, col("id"))
+      case _ => state
+    }
+    // a projection of the checkpoint has no leaf to rebind
+    def projected(state: DataFrame): DataFrame =
+      state.select(state.columns.map(col).toSeq: _*)
+    for ((before, after, want) <- Seq[((DataFrame, Int) => DataFrame,
+        DataFrame => DataFrame, Seq[Int])](
+        (relaid, identity, Seq(1, 4, 6)),
+        ((state, _) => state, projected, 1 to 7))) {
+      val local = new LocalStore
+      var persisted = 0
+      val store = new StateStore {
+        override def persist(state: DataFrame, iter: Int): DataFrame = {
+          persisted = iter
+          after(local.persist(before(state, iter), iter))
+        }
+        override def log(m: SuperstepMetrics): Unit = ()
+        override def resumePoint(): Option[(Int, DataFrame)] = None
+      }
+      val built = ArrayBuffer.empty[Int]
+      def step(state: DataFrame): DataFrame = {
+        built += persisted + 1
+        state.select(col("id"), (col("v") + 1).as("v"), lit(1.0).as("delta"))
+      }
+      val init = spark.range(20)
+        .select(col("id"), col("id").as("v"), lit(1.0).as("delta"))
+        .repartition(4, col("id"))
+      val res = TestSessions.withConf("spark.sql.adaptive.enabled" -> "false") {
+        Superstep.run(init, step, tol = -1.0, 7, store)
+      }
+      assert(built == want)
+      assert(res.state.as[(Long, Long, Double)].collect().toSet ==
+        (0L until 20L).map(i => (i, i + 7, 1.0)).toSet)
+    }
   }
 
   test("loops on a session that never sets the partition count") {
@@ -299,8 +405,9 @@ class SuperstepLoopsSpec extends AnyFunSuite {
     }
   }
 
-  private def callSites(token: String): Map[String, Seq[String]] = {
-    val root = Paths.get("src/main/scala/graft")
+  private def callSites(token: String,
+      under: String = "src/main/scala/graft"): Map[String, Seq[String]] = {
+    val root = Paths.get(under)
     Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
       .map(p => root.relativize(p).toString ->
@@ -311,8 +418,9 @@ class SuperstepLoopsSpec extends AnyFunSuite {
 
   /** Porting a loop removes its file from `allowed`; nothing is added. */
   private def assertRatchet(token: String, exempt: Set[String],
-      allowed: Set[String]): Map[String, Seq[String]] = {
-    val sites = callSites(token) -- exempt
+      allowed: Set[String],
+      under: String = "src/main/scala/graft"): Map[String, Seq[String]] = {
+    val sites = callSites(token, under) -- exempt
     assert(sites.keySet.diff(allowed).isEmpty,
       s"new raw $token sites: ${sites.keySet.diff(allowed)}")
     assert(allowed.diff(sites.keySet).isEmpty,
@@ -367,6 +475,37 @@ class SuperstepLoopsSpec extends AnyFunSuite {
     assertRatchet(".hint(", Set.empty, Set("core/LinkGraph.scala"))
   }
 
+  test("physical scans and planner strategies appear only in the bridge") {
+    // rebinding a step's state leaf is plan surgery on Spark's internals,
+    // kept in one auditable file
+    for (token <- Seq("RDDScanExec", "FileSourceScanExec", "extraStrategies"))
+      assertRatchet(token, Set.empty,
+        Set("org/apache/spark/sql/graft/GraftSqlBridge.scala"),
+        under = "src/main/scala")
+  }
+
+  test("a LocalStore loop holds only its final state's checkpoint") {
+    // and logs each partition's rows and bytes from the fold
+    val sc = spark.sparkContext
+    for ((name, run) <- scatterLoops; aqe <- Seq(false, true))
+      TestSessions.withConf("spark.sql.adaptive.enabled" -> aqe.toString) {
+        val what = s"$name, AQE $aqe"
+        val before = sc.getPersistentRDDs.keySet
+        val store = new LocalStore
+        val res = run(store)
+        val held = sc.getPersistentRDDs.keySet -- before
+        val last = res.state.queryExecution.analyzed.collect {
+          case r: LogicalRDD => r.rdd.id }
+        assert(last.size == 1 && held == last.toSet, s"$what: $held")
+        val ms = store.metrics
+        assert(ms.size == res.supersteps && ms.forall(m =>
+          m.partitions.map(_.partition) == (0 until m.partitions.size) &&
+          m.partitions.nonEmpty && m.rows == m.partitions.map(_.rows).sum &&
+          m.bytes == m.partitions.map(_.bytes).sum && m.bytes > 8 * m.rows),
+          s"$what: $ms")
+      }
+  }
+
   test("def main( appears only in the measurement, oracle and job mains") {
     assertRatchet("def main(", Set.empty,
       Set("Bench.scala", "Verify.scala", "BenchExtra.scala", "jobs/Jobs.scala"))
@@ -392,7 +531,7 @@ class SuperstepLoopsSpec extends AnyFunSuite {
     // plan's estimate, and an inner join multiplies its children's, so the
     // digit count grows ~3x per round until the driver hangs in BigInteger
     // products
-    def step(df: DataFrame, iter: Int): DataFrame = {
+    def step(df: DataFrame): DataFrame = {
       val a = df.select(col("id"), (col("v") + 1).as("v"))
       a.join(df.select(col("id"), col("v").as("w")), Seq("id"))
         .join(a.withColumnRenamed("v", "u"), Seq("id"))
