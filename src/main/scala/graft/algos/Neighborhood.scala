@@ -33,8 +33,8 @@ import graft.engine.{LocalStore, Superstep}
   * carries one m-int buffer per (partition, dst), not per edge), which is
   * precisely what the explode-to-(id, j, r) pure-builtin form also achieves
   * but with m× the shuffle rows. NeighborhoodSpec proves the Aggregator
-  * path row-identical to the explode path ([[mergeViaExplode]]) and the
-  * estimates within HLL error of [[landmarkBalls]] ground truth.
+  * path row-identical to that explode form and the estimates within HLL
+  * error of [[landmarkBalls]] ground truth.
   */
 object Neighborhood {
 
@@ -131,17 +131,6 @@ object Neighborhood {
       .otherwise(raw)
   }
 
-  /** One register-merge superstep written with builtins only (posexplode →
-    * per-register max → re-assemble): m× the shuffle rows of the Aggregator
-    * path, used as its correctness oracle in NeighborhoodSpec.
-    */
-  def mergeViaExplode(withMsgs: DataFrame): DataFrame =
-    withMsgs.select(col("id"), posexplode(col("regs")).as(Seq("j", "r")))
-      .groupBy("id", "j").agg(max("r").as("r"))
-      .groupBy("id").agg(
-        transform(array_sort(collect_list(struct(col("j"), col("r")))),
-          s => s.getField("r")).as("regs"))
-
   /** HyperBall: (t, nf_est) for t in 0..maxT, where nf_est estimates
     * N(t) = Σ_v |ball(v, t)| (the neighborhood function) over the undirected
     * view. logM register bits → m = 2^logM registers/vertex → relative
@@ -154,19 +143,6 @@ object Neighborhood {
     registerStates(spark, edges, logM, maxT).map { case (tt, st) =>
       st.agg(sum(estimateCol(col("regs"), m)).as("nf_est"))
         .select(lit(tt).as("t"), col("nf_est"))
-    }.reduce(_ unionAll _)
-  }
-
-  /** Per-vertex ball-size estimates (id, t, est) for t in 0..maxT — the
-    * series behind [[harmonicEstimate]] (and centrality families generally:
-    * closeness/Lin need exactly this table).
-    */
-  def hyperBallSeries(spark: SparkSession, edges: DataFrame, logM: Int,
-      maxT: Int): DataFrame = {
-    val m = 1 << logM
-    registerStates(spark, edges, logM, maxT).map { case (tt, st) =>
-      st.select(col("id"), lit(tt.toLong).as("t"),
-        estimateCol(col("regs"), m).as("est"))
     }.reduce(_ unionAll _)
   }
 
@@ -215,18 +191,6 @@ object Neighborhood {
     snaps.toSeq
   }
 
-  /** Effective diameter at quantile `alpha` from a neighborhood-function
-    * table (t, nf_est): the smallest t whose N(t) reaches alpha of the
-    * plateau (non-interpolated integer variant; Boldi-Vigna interpolate
-    * between t-1 and t). Returns one row (eff_diameter).
-    */
-  def effectiveDiameter(nf: DataFrame, alpha: Double = 0.9): DataFrame = {
-    val mx = nf.agg(max("nf_est").as("mx"))
-    nf.crossJoin(broadcast(mx))
-      .filter(col("nf_est") >= col("mx") * alpha)
-      .agg(min("t").as("eff_diameter"))
-  }
-
   /** lcm(1..n) — the integer weight base that makes bounded-radius harmonic
     * centrality exactly representable (c·lcm is a sum of integer products).
     */
@@ -250,39 +214,5 @@ object Neighborhood {
       .groupBy("seed")
       .agg(sum((col("n_reached") - col("prev")) * (lit(lcm) / col("t"))
         .cast("long")).as(s"harmonic_x$lcm"))
-  }
-
-  /** Estimated harmonic centrality per vertex from a [[hyperBallSeries]]
-    * table: c(v) ≈ Σ_t (est_t - est_{t-1})/t. Ball estimates are clamped
-    * monotone (the raw/linear-counting branch switch can dip slightly).
-    */
-  def harmonicEstimate(series: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy("t")
-    series.withColumn("prev", lag("est", 1).over(w))
-      .filter(col("t") > 0)
-      .groupBy("id")
-      .agg(sum(greatest(col("est") - col("prev"), lit(0.0)) / col("t"))
-        .as("harmonic"))
-  }
-
-  /** Lin's index estimate per vertex (the closeness variant that is
-    * well-defined on disconnected graphs): reach² / Σ_u dist(v,u), where
-    * reach = |ball(v, maxT)| and Σ dist = Σ_t t·(est_t − est_{t−1}) —
-    * both read off the same [[hyperBallSeries]] table. Vertices with no
-    * within-radius neighbors get the conventional value 1.
-    */
-  def linIndexEstimate(series: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy("t")
-    series.withColumn("prev", lag("est", 1).over(w))
-      .filter(col("t") > 0)
-      .groupBy("id")
-      .agg(max("est").as("reach"),
-        sum(greatest(col("est") - col("prev"), lit(0.0)) * col("t"))
-          .as("sumdist"))
-      .select(col("id"),
-        when(col("sumdist") > 0, col("reach") * col("reach") / col("sumdist"))
-          .otherwise(lit(1.0)).as("lin"))
   }
 }

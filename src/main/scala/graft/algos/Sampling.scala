@@ -93,10 +93,14 @@ object Sampling {
       .select(col("src"), col("i"), col("vid").as("dst"))
       .filter(col("src") =!= col("dst"))
       .join(und, Seq("src", "dst"), "left_anti")
-    props.groupBy("src", "dst").agg(min("i").as("i"))
+    // checkpointed before `idx` is released, so the result still computes
+    val out = props.groupBy("src", "dst").agg(min("i").as("i"))
       .withColumn("neg_rank", row_number().over(
         Window.partitionBy("src").orderBy("i")).cast("long"))
       .filter(col("neg_rank") <= k)
       .select("src", "dst", "neg_rank")
+      .localCheckpoint(true)
+    idx.unpersist(false)
+    out
   }
 }

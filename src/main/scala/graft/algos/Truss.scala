@@ -3,30 +3,29 @@ package graft.algos
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.core.Dataflow
 import graft.engine.{LocalStore, Superstep}
 
 /** k-truss — the edge-centric cohesion analog of k-cores (beyond the
   * reference's app set, which peels vertices but not edges): the maximal
   * subgraph in which every edge closes at least k−2 triangles *within the
   * subgraph*. Computed by support peeling: count each edge's triangles,
-  * drop edges below k−2, recount on the survivors, repeat to fixpoint.
+  * drop edges below k−2, take the dropped edges' triangles off the
+  * survivors' supports, repeat to fixpoint.
   *
-  * Scale shape: each round is [[TriangleCount]]'s degree-oriented adjacency
-  * intersection (work Σ min-degree, degeneracy-bounded arrays — the plan
-  * already measured linear at 176 M edges) over a monotonically SHRINKING
-  * edge set, plus one left-join filter; support attribution is a 3×union +
-  * map-side-combinable count. Rounds are data-dependent (each removes ≥ 1
-  * edge or stops), so like SCC's peel the loop fails loudly on a round
-  * budget instead of spinning silently. State is lineage-truncated per
-  * round (constant-size plan).
+  * Scale shape: the one support count is [[TriangleCount]]'s
+  * degree-oriented adjacency intersection (work Σ min-degree,
+  * degeneracy-bounded arrays — the plan already measured linear at 176 M
+  * edges); support attribution is a 3×union + map-side-combinable count.
+  * Rounds are data-dependent (each removes ≥ 1 edge or stops), so like
+  * SCC's peel the loop fails loudly on a round budget instead of spinning
+  * silently.
   */
 object Truss {
 
   /** Per-edge triangle support over canonical (u < v) edges.
     * Returns ((u, v, supp), orientedHandleToUnpersist).
     */
-  private def support(und: DataFrame): (DataFrame, DataFrame) = {
+  private[graft] def support(und: DataFrame): (DataFrame, DataFrame) = {
     val oriented = TriangleCount.orientByDegree(und)
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
     val adj = oriented.groupBy(col("a").as("id"))
@@ -45,27 +44,14 @@ object Truss {
     (supp, oriented)
   }
 
-  /** One peel round over canonical (u < v) edges: recount support, keep
-    * edges with supp >= k−2. Returns a materialized (lineage-truncated)
-    * frame; the round's persisted orientation is released before returning.
-    */
-  def kTrussRound(cur: DataFrame, k: Int): DataFrame = {
-    val (supp, oriented) = support(cur)
-    val next = Dataflow.checkpointRebased(
-      cur.join(supp, Seq("u", "v"), "left")
-        .filter(coalesce(col("supp"), lit(0L)) >= k - 2)
-        .select("u", "v"))
-    oriented.unpersist(false)
-    next
-  }
-
   /** Decremental k-truss (VERDICT r4 #5): support is counted ONCE (the
-    * same degree-oriented pass as [[kTruss]]'s first round), then each
-    * peel round lists ONLY the triangles touching that round's removed
-    * edges and subtracts them from the survivors' supports, maintaining
-    * the invariant supp(e) = triangles of e within the current edge set —
-    * so the fixpoint is identical to the recount plan's (MoreAlgosSpec
-    * asserts set equality; the shared unrolled oracle pins both).
+    * degree-oriented pass of [[support]]), then each peel round lists
+    * ONLY the triangles touching that round's removed edges and subtracts
+    * them from the survivors' supports, maintaining the invariant supp(e) =
+    * triangles of e within the current edge set — so the fixpoint is
+    * identical to the recount plan's (MoreAlgosSpec asserts set equality
+    * with its test-side recount; the unrolled [[oracleSql]] is the recount
+    * plan in SQL).
     *
     * Scale shape per round: a map-side-combinable degree count, then each
     * removed edge expands from its LOWER-degree endpoint (Σ min-deg rows —
@@ -153,31 +139,11 @@ object Truss {
     res.state.select("u", "v")
   }
 
-  /** Edges (u, v) of the k-truss of the undirected view of `edges`. */
-  def kTruss(spark: SparkSession, edges: DataFrame, k: Int,
-      maxRounds: Int = 50): DataFrame = {
-    require(k >= 3, s"k-truss needs k >= 3, got $k")
-    var cur = TriangleCount.canonicalEdges(edges).localCheckpoint(true)
-    var n = cur.count()
-    var round = 0
-    var done = n == 0L
-    while (!done) {
-      if (round >= maxRounds) throw new IllegalStateException(
-        s"k-truss did not converge in $maxRounds peel rounds")
-      val next = kTrussRound(cur, k)
-      val m = next.count()
-      done = m == n
-      cur = next
-      n = m
-      round += 1
-    }
-    cur
-  }
-
-  /** Unrolled ANSI-SQL oracle for [[kTruss]] (DuckDB-runnable): `rounds`
-    * peel rounds — enough to cover the engine's measured fixpoint; peeling
-    * is idempotent after convergence, so extra rounds are harmless (and the
-    * engine's own `maxRounds` fails loudly if data drift ever needs more).
+  /** Unrolled ANSI-SQL oracle for [[kTrussDecremental]] (DuckDB-runnable):
+    * `rounds` recount peel rounds — enough to cover the engine's measured
+    * fixpoint; peeling is idempotent after convergence, so extra rounds are
+    * harmless (and the engine's own `maxRounds` fails loudly if data drift
+    * ever needs more).
     */
   def oracleSql(edgesSql: String, k: Int, rounds: Int): String = {
     val roundCtes = (1 to rounds).map { r =>

@@ -1,6 +1,6 @@
 package graft.cf
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,10 +26,6 @@ import org.apache.spark.sql.functions._
   * everything carries no similarity signal but quadratic cost).
   */
 object ItemCF {
-
-  /** Distinct (user, item) interactions from a ratings-like table. */
-  def interactions(df: DataFrame, userCol: String, itemCol: String): DataFrame =
-    df.select(col(userCol).as("user"), col(itemCol).as("item")).distinct()
 
   /** Item-pair similarities (item_a < item_b): one row per co-rated pair
     * with all four metrics. Columns: item_a, item_b, inter, size_a, size_b,

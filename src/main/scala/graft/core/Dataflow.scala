@@ -27,8 +27,8 @@ object Dataflow {
     * dropped the checkpoint's output partitioning; this keeps both). The
     * conservative default leaf size also keeps the optimizer from ever
     * broadcasting the state side — right for cluster-scale state.
-    */
-  /** @param eager false defers materialization to the first action on the
+    *
+    * @param eager false defers materialization to the first action on the
     *   result (RDD.localCheckpoint marks the RDD; the checkpoint happens at
     *   the end of the first job that computes it) — used by the superstep
     *   driver so the job of its convergence fold materializes, caches and

@@ -1,8 +1,7 @@
 package graft.derive
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** Derives the engine's `(src, dst, weight)` edge table from a lakehouse
   * table of source files `(repo, path, commit, lang, content)` by extracting
@@ -16,9 +15,7 @@ import org.apache.spark.sql.types.LongType
   * (repo, path) — a distributed sort + per-partition offset scan
   * (zipWithIndex), i.e. two passes and one range shuffle over the catalog,
   * never a single-partition window. At 10^12 files the catalog sort is the
-  * preprocessing step (the reference's sharder played this role); the
-  * alternative constant-time scheme (id = xxhash64(repo, path), collision
-  * odds ≈ n²/2⁶⁵) is available as [[hashIds]].
+  * preprocessing step (the reference's sharder played this role).
   */
 object EdgeDerive {
 
@@ -41,12 +38,6 @@ object EdgeDerive {
     }
     spark.createDataFrame(withIds).toDF("fid", "fkey")
   }
-
-  /** Constant-time id scheme for when a global sort is unaffordable. */
-  def hashIds(files: DataFrame): DataFrame =
-    files.select(
-      xxhash64(col("repo"), col("path")).as("fid"),
-      concat(col("repo"), lit("/"), col("path")).as("fkey"))
 
   /** (src, dst, weight): one edge per (importer, imported) pair, weight =
     * number of duplicate import lines; unresolved references and self-imports

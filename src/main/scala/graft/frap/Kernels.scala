@@ -9,10 +9,11 @@ import graft.vectors.Scan
 /** Graph-kernel machinery: label dictionary, dense count arrays, and the
   * three distances of the reference (myapps/helper.cpp:16-108,
   * profile.cpp:38-79) — symmetric KL divergence with back-off smoothing,
-  * Hellinger, Euclidean — plus distributed pairwise distance matrices. Those
-  * run on one sparse row per graph ([[GraphRow]]): the small side's rows
-  * are collected and broadcast, and one [[Scan.broadcastScan]] merges each
-  * pair's sorted labels — no join, and no dictionary-wide arrays.
+  * Hellinger, Euclidean — plus distributed KL and Euclidean pairwise
+  * distance matrices. Those run on one sparse row per graph
+  * ([[GraphRow]]): the small side's rows are collected and broadcast, and
+  * one [[Scan.broadcastScan]] merges each pair's sorted labels — no join,
+  * and no dictionary-wide arrays.
   */
 object Kernels {
 
@@ -203,20 +204,6 @@ object Kernels {
         .map(b => (a.id, b.id, dist(a, b))))
     }.toDF("ga", "gb", "dist")
   }
-
-  /** Pairwise Hellinger distances (ga < gb, dist) from sparse counts, over
-    * raw count distributions (no back-off, helper.cpp:85-95); over
-    * dictionary-ordered labels bit-identical to [[distance]].
-    */
-  def hellingerMatrix(kernelCounts: DataFrame): DataFrame =
-    pairMatrix(rows(kernelCounts) { (id, l, c) =>
-      val sum = c.sum.toDouble
-      GraphRow(id, l, c.map(_ / sum), 0.0)
-    }) { (a, b) =>
-      math.sqrt(pairSum(a, b, 0) { (p, q) =>
-        val d = math.sqrt(p) - math.sqrt(q); d * d
-      }) / math.sqrt(2)
-    }
 
   /** Pairwise symmetric-KL distances (ga < gb, dist) with the reference's
     * back-off smoothing (helper.cpp:16-52,73-84).

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CamFlow PROV-JSON ingest — the Spark dataflow form of the reference's
@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * endpoints never declared are dropped (the reference's `map::operator[]`
   * silently aliases them to vertex 0 — an accident, not a contract).
   *
-  * Output schema matches [[EdgeListReader.typedEdgeList]]:
+  * Output schema is the typed edge list [[graft.frap.WLRelabel]] reads:
   * (graph_id, src, dst, src_type, dst_type, edge_type).
   */
 object ProvJsonReader {

@@ -2,31 +2,33 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 
-/** Structured-Streaming operators. The reference's "streaming" is an
-  * evolving-graph engine (/root/reference/src/engine/dynamic_graphs/
+/** Event-table aggregates and Structured-Streaming edge ingest. The
+  * reference's "streaming" is an evolving-graph engine
+  * (/root/reference/src/engine/dynamic_graphs/
   * graphchi_dynamicgraph_engine.hpp:289-373 — buffered edge ingest spliced
-  * into shards between iterations), not stream-relational processing; the
-  * Spark-native equivalents are (a) watermarked windowed aggregation over an
-  * event stream and (b) micro-batch edge ingest via `foreachBatch` appending
-  * to the edge table (re-running affected analytics per batch).
+  * into shards between iterations), not stream-relational processing; its
+  * Spark-native equivalent is micro-batch edge ingest via `foreachBatch`
+  * ([[mapEdgeBatches]], [[foldEdgeBatches]]), re-running the analytics per
+  * batch. The event-table aggregates ([[windowedCountsBatch]],
+  * [[sessionizeBatch]]) are the batch queries over the events table.
   */
 object EventStream {
 
   /** Per-EVENT quantization of `value` to the 1e-4 grid, summed as exact
     * longs: sums of pre-quantized integers are summation-ORDER-FREE, so the
-    * aggregate is bit-identical across partitionings, engines, and batch vs
-    * streaming — the same grid-integer design principle as
-    * [[graft.vectors.KMeans]] (ADVICE r4: quantizing AFTER a double SUM left
-    * per-session sums near a .5·1e-4 boundary at the mercy of summation
-    * order, and sessions aggregate many rows).
+    * aggregate is bit-identical across partitionings and engines — the
+    * same grid-integer design principle as [[graft.vectors.KMeans]]
+    * (ADVICE r4: quantizing AFTER a double SUM left per-session sums near a
+    * .5·1e-4 boundary at the mercy of summation order, and sessions
+    * aggregate many rows).
     */
   private def sumValueQ4: Column =
     sum(floor(col("value") * 1e4 + lit(0.5)).cast("long")).as("sum_value_q4")
 
-  /** Batch-equivalent of [[windowedCounts]] for oracle checks: tumbling
-    * 1-hour windows per event_type.
+  /** Tumbling 1-hour windows per event_type: (window_start, event_type, n,
+    * sum_value_q4).
     */
   def windowedCountsBatch(events: DataFrame): DataFrame =
     events
@@ -35,28 +37,14 @@ object EventStream {
         col("event_type"))
       .agg(count(lit(1)).as("n"), sumValueQ4)
 
-  /** Streaming windowed aggregation with a watermark: 1-hour tumbling
-    * windows per event_type, 2-hour late-data watermark.
-    */
-  def windowedCounts(events: DataFrame): DataFrame =
-    events
-      // file sources deliver TIMESTAMP_NTZ; watermarks need TIMESTAMP
-      // (session TZ is UTC so the cast is value-preserving)
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sumValueQ4)
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value_q4"))
-
   /** Gap-based sessionization via Spark's NATIVE `session_window` (Catalyst
     * merging session windows, SPARK-10816): events of a user belong to one
     * session while each gap to the next event is <= `gap` (touching windows
-    * merge — pinned by StreamingSpec); the window's end is last-event + gap. One hash shuffle on the grouping key, then a
-    * partition-local sort-merge of overlapping windows
+    * merge — pinned by StreamingSpec); the window's end is last-event + gap.
+    * One hash shuffle on the grouping key, then a partition-local
+    * sort-merge of overlapping windows
     * (`UpdatingSessionsIterator`) — sessions never cross partitions, so the
-    * shape holds at any number of users. Batch and streaming share this
-    * expression; [[sessionize]] is the watermarked streaming twin.
+    * shape holds at any number of users.
     */
   def sessionizeBatch(events: DataFrame, gap: String = "24 hours"): DataFrame =
     events
@@ -65,78 +53,6 @@ object EventStream {
       .select(col("user_id"), col("sw.start").as("session_start"),
         col("sw.end").as("session_end"), col("n_events"),
         col("sum_value_q4"))
-
-  /** Streaming sessionization: same session_window expression under a
-    * watermark — a session is emitted (append mode) once the watermark
-    * passes its end, so state per user is one open session, bounded by
-    * delay × arrival rate like [[dedupIngest]]'s.
-    */
-  def sessionize(events: DataFrame, gap: String = "24 hours",
-      delay: String = "1 hour"): DataFrame =
-    events.withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", delay)
-      .groupBy(col("user_id"), session_window(col("ts"), gap).as("sw"))
-      .agg(count(lit(1)).as("n_events"), sumValueQ4)
-      .select(col("user_id"), col("sw.start").as("session_start"),
-        col("sw.end").as("session_end"), col("n_events"),
-        col("sum_value_q4"))
-
-  /** Streaming ingest dedup for a document pipeline: drop exact duplicates
-    * (by content hash) arriving within the watermark delay of the original —
-    * the streaming counterpart of [[graft.text.Dedup.exact]].
-    * `dropDuplicatesWithinWatermark` keeps per-key state only until the
-    * watermark passes the key's expiry, so dedup state is bounded by
-    * delay × ingest rate instead of growing with corpus lifetime — the only
-    * viable shape for continuous ingest at 100 TB scale (an unbounded
-    * `dropDuplicates` would hold every hash ever seen).
-    */
-  def dedupIngest(docs: DataFrame, delay: String = "2 hours"): DataFrame =
-    docs.withColumn("ts", col("ts").cast("timestamp"))
-      .withColumn("text_md5", md5(col("text")))
-      .withWatermark("ts", delay)
-      .dropDuplicatesWithinWatermark("text_md5")
-
-  final case class Event(event_id: Long, ts: java.sql.Timestamp,
-      user_id: Long, event_type: String, value: Double)
-  final case class SessionAgg(user_id: Long, events: Long, total: Double)
-
-  /** Custom per-key state: running per-user totals via mapGroupsWithState
-    * (the `KeyValueGroupedDataset` stateful path).
-    */
-  def userTotals(events: Dataset[Event]): Dataset[SessionAgg] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
-        (uid: Long, evs: Iterator[Event], state: GroupState[SessionAgg]) =>
-          val prev = state.getOption.getOrElse(SessionAgg(uid, 0L, 0.0))
-          var n = prev.events
-          var tot = prev.total
-          evs.foreach { e => n += 1; tot += e.value }
-          val next = SessionAgg(uid, n, tot)
-          state.update(next)
-          next
-      }
-  }
-
-  /** Drive a streaming query synchronously over a static parquet directory
-    * (file-source micro-batches) into an in-memory sink; returns the final
-    * table. Used by tests and the streaming smoke query.
-    */
-  def runOnce(spark: SparkSession, parquetPath: String,
-      transform: DataFrame => DataFrame, queryName: String,
-      outputMode: String = "append"): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = spark.readStream.schema(schema).parquet(parquetPath)
-    val q = transform(stream).writeStream
-      .outputMode(outputMode)
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
-  }
 
   /** Micro-batch map core: stream `edgeParquetPath` one file per trigger and
     * run `perBatch` on each batch *independently* (no accumulation) — the

@@ -23,11 +23,9 @@ import org.apache.spark.sql.functions._
   * replays every decision bit-for-bit, and the output is independent of
   * partitioning, parallelism, and input row order.
   *
-  * Scale shape: the shuffle key is attached map-side; the physical export
-  * is `repartitionByRange(shard, key)` + `sortWithinPartitions` + write —
-  * ONE range-exchange of the corpus, no global window, each shard written
-  * as one sorted file run. Split and mixture sampling are pure row-local
-  * filters/expansions with NO shuffle at all.
+  * Scale shape: the shuffle key is attached map-side and positions come
+  * from one window per shard, never a global one. Split and mixture
+  * sampling are pure row-local filters/expansions with NO shuffle at all.
   */
 object Export {
 
@@ -71,9 +69,7 @@ object Export {
     * the (rare) key collisions so the order is total. All input columns
     * ride along so a pipeline never needs a self-join to recover its
     * payload (a self-join would re-execute the whole upstream lineage —
-    * 2× the pipeline at 100 TB). The window per shard is the VERIFICATION
-    * surface; the physical export path for 100 TB is [[writeShards]] —
-    * one range exchange, no per-shard single-reducer window.
+    * 2× the pipeline at 100 TB).
     */
   def shuffleShards(docs: DataFrame, idCol: String, numShards: Int,
       seed: Long = 42L, epoch: Int = 0): DataFrame = {
@@ -87,44 +83,6 @@ object Export {
       .withColumn("pos", row_number().over(w) - 1)
       .drop("__key")
   }
-
-  /** The PHYSICAL layout behind [[shuffleShards]]: the corpus (all its
-    * columns) range-partitioned by (shard, key, id) and sorted within each
-    * partition — the frame [[writeShards]] writes. ONE range exchange of
-    * the corpus, NO window: tasks own contiguous (shard, key, id) ranges,
-    * so a shard's rows land in a handful of ADJACENT tasks and the
-    * concatenation of its part-files in task order IS the (key, id)-sorted
-    * shard — file order carries the positions `shuffleShards` computes
-    * with its per-shard window (ExportSpec proves the two agree row for
-    * row). `tasksPerShard` spreads each shard over that many writers so a
-    * hot shard never funnels through one reducer at 100 TB.
-    */
-  def shardLayout(docs: DataFrame, idCol: String, numShards: Int,
-      seed: Long = 42L, tasksPerShard: Int = 1, epoch: Int = 0): DataFrame = {
-    require(numShards >= 1 && tasksPerShard >= 1)
-    // withColumn would silently REPLACE a caller column of the same name
-    // (e.g. re-sharding previously exported data) — refuse instead
-    require(!docs.columns.contains("shard") && !docs.columns.contains("__key"),
-      "input already has a 'shard'/'__key' column; rename it before sharding")
-    val key = keyHash(col(idCol), seed, epochSalt(epoch))
-    docs.withColumn("shard", (key % numShards).cast("int"))
-      .withColumn("__key", key)
-      .repartitionByRange(numShards * tasksPerShard,
-        col("shard"), col("__key"), col(idCol))
-      .sortWithinPartitions(col("shard"), col("__key"), col(idCol))
-      .drop("__key") // projection preserves the per-partition sort
-  }
-
-  /** Write the shuffled corpus as `outDir/shard=S/part-*.parquet`. Rows of
-    * shard S read back in part-file order (files carry their zero-padded
-    * task index) are exactly shard S of [[shuffleShards]] in `pos` order —
-    * the 100 TB export path, with the window-free plan of [[shardLayout]].
-    */
-  def writeShards(docs: DataFrame, idCol: String, numShards: Int,
-      outDir: String, seed: Long = 42L, tasksPerShard: Int = 1,
-      epoch: Int = 0): Unit =
-    shardLayout(docs, idCol, numShards, seed, tasksPerShard, epoch)
-      .write.partitionBy("shard").mode("overwrite").parquet(outDir)
 
   /** Deterministic holdout split: the input's columns plus `split`, where
     * `fractions` maps split name → mass (must sum to ≤ 1; any remainder

@@ -129,7 +129,8 @@ object Scan {
   }
 
   /** SRP sign bits of `v`: bit i = [dot(v, planes(i)) > 0] under Spark's
-    * order, so a NaN dot sets its bit as `Similarity.srpBucket` does.
+    * order, where NaN is greater than every number, so a NaN dot sets its
+    * bit as Spark's Column `>` does.
     */
   def srpSignature(v: Array[Double], planes: Array[Array[Double]]): Long = {
     var b = 0L

@@ -51,14 +51,6 @@ object Similarity {
     }
   }
 
-  /** SRP-LSH bucket id per vector: bit i = [dot(v, plane_i) > 0]. The
-    * Column form of [[Scan.srpSignature]], kept as its reference.
-    */
-  def srpBucket(vec: Column, planes: Array[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      when(dot(vec, typedLit(p.toSeq)) > 0, lit(1L << i)).otherwise(0L)
-    }.reduce(_ + _)
-
   /** (id, t, b) rows: the SRP bucket b of every vector in every table t. */
   private[graft] def srpBucketsScan(df: DataFrame, idCol: String,
       vecCol: String, planeSets: Seq[Array[Array[Double]]]): DataFrame = {

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 import graft.text.Export
 
 /** Deterministic export stage: shuffle-to-shards, holdout split, mixture
@@ -78,18 +77,6 @@ class ExportSpec extends AnyFunSuite {
           s"epoch $e shard of $id not from salt ${e + 2}")
       }
     }
-    // shardLayout(epoch) carries the same epoch ordering: its
-    // (shard, key-order) equals shuffleShards(epoch)'s pos order
-    val layout = Export.shardLayout(docs(300), "doc_id", 8, epoch = 1)
-      .select(col("shard"), col("doc_id"),
-        spark_partition_id().as("part"))
-      .withColumn("seq", monotonically_increasing_id())
-      .orderBy("part", "seq")
-      .select("shard", "doc_id").as[(Int, Long)].collect()
-    val wantOrder = perms(1).toSeq
-      .map { case (id, (sh, pos)) => (sh, pos, id) }.sorted
-      .map { case (sh, _, id) => (sh, id) }
-    assert(layout.toSeq == wantOrder)
   }
 
   test("shuffleShards matches the Lehmer formula by hand") {
@@ -100,44 +87,6 @@ class ExportSpec extends AnyFunSuite {
     (0L until 50L).foreach { id =>
       assert(got(id) == (key(id) % 4).toInt, s"doc $id")
     }
-  }
-
-  test("writeShards: file order carries the logical shuffle positions") {
-    val out = java.nio.file.Files.createTempDirectory("graft_shards")
-      .toString
-    Export.writeShards(docs(500), "doc_id", numShards = 8, out,
-      tasksPerShard = 3)
-    val logical = Export.shuffleShards(docs(500), "doc_id", 8)
-      .orderBy("shard", "pos")
-      .select("shard", "doc_id").as[(Int, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    def ls(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
-      val s = java.nio.file.Files.list(p)
-      try s.iterator().asScala.toSeq finally s.close()
-    }
-    val shardDirs = ls(java.nio.file.Paths.get(out))
-      .filter(_.getFileName.toString.startsWith("shard="))
-    assert(shardDirs.map(_.getFileName.toString.drop(6).toInt).sorted ==
-      (0 until 8))
-    shardDirs.foreach { dir =>
-      val shard = dir.getFileName.toString.drop(6).toInt
-      // part files sorted by their zero-padded task index: concatenating
-      // them in that order must reproduce the windowed pos order exactly
-      val files = ls(dir).map(_.toString).filter(_.endsWith(".parquet")).sorted
-      val physical = files.flatMap { f =>
-        val df = spark.read.parquet(f)
-        assert(df.rdd.getNumPartitions == 1, s"file $f split on read")
-        df.select("doc_id").as[Long].collect().toSeq
-      }
-      assert(physical == logical(shard), s"shard $shard order diverged")
-    }
-  }
-
-  test("shardLayout plan: one exchange, no window") {
-    val plan = Export.shardLayout(docs(500), "doc_id", 8, tasksPerShard = 3)
-      .queryExecution.executedPlan.toString
-    assert("(?i)exchange".r.findAllIn(plan).size == 1, plan)
-    assert(!plan.toLowerCase.contains("window"), plan)
   }
 
   test("packSequences: spans tile docs exactly and fill sequences to capacity") {

@@ -129,25 +129,6 @@ class FrapSpec extends AnyFunSuite {
     }
   }
 
-  test("distributed Hellinger matrix matches the driver-side formula") {
-    val edges = ProvGen.corpus(spark, nNormal = 4, nAbnormal = 1)
-    val counts = WLRelabel.kernelCounts(WLRelabel.run(edges, iters = 2)).cache()
-    val ids = counts.select("graph_id").distinct()
-      .as[String].collect().sorted.toSeq
-    val dict = Kernels.dictionary(counts)
-    val dsize = dict.count().toInt
-    val arr = Kernels.countArrays(counts, dict, dsize).collect()
-      .map(r => r.getString(0) -> r.getSeq[Int](1).toArray).toMap
-    val got = Kernels.hellingerMatrix(counts)
-      .as[(String, String, Double)].collect()
-      .map(r => (r._1, r._2) -> r._3).toMap
-    for (i <- ids.indices; j <- i + 1 until ids.size) {
-      val want = Kernels.distance(Kernels.Hellinger, arr(ids(i)), arr(ids(j)))
-      val key = if (ids(i) < ids(j)) (ids(i), ids(j)) else (ids(j), ids(i))
-      assert(math.abs(got(key) - want) < 1e-9, s"pair $key")
-    }
-  }
-
   test("distributed KL matrix matches the driver-side back-off formula") {
     val edges = ProvGen.corpus(spark, nNormal = 4, nAbnormal = 1)
     val counts = WLRelabel.kernelCounts(WLRelabel.run(edges, iters = 2)).cache()
@@ -191,21 +172,19 @@ class FrapSpec extends AnyFunSuite {
     assert(!got.head._3.isNaN && !got.head._3.isInfinite)
   }
 
-  test("Hellinger and Euclidean matrices equal the driver formula exactly") {
+  test("Euclidean matrix equals the driver formula exactly") {
     val counts = WLRelabel.kernelCounts(WLRelabel.run(
       ProvGen.corpus(spark, nNormal = 4, nAbnormal = 1), iters = 2)).cache()
     val dict = Kernels.dictionary(counts)
     val dsize = dict.count().toInt
     val arr = Kernels.countArrays(counts, dict, dsize).collect()
       .map(r => r.getString(0) -> r.getSeq[Int](1).toArray).toMap
-    for ((m, got) <- Seq(
-        Kernels.Hellinger -> Kernels.hellingerMatrix(counts),
-        Kernels.Euclidean -> Kernels.euclideanMatrix(counts))) {
-      val pairs = got.as[(String, String, Double)].collect()
-      assert(pairs.length == arr.size * (arr.size - 1) / 2)
-      pairs.foreach { case (a, b, d) =>
-        assert(d == Kernels.distance(m, arr(a), arr(b)), s"method $m ($a, $b)")
-      }
+    val pairs = Kernels.euclideanMatrix(counts)
+      .as[(String, String, Double)].collect()
+    assert(pairs.length == arr.size * (arr.size - 1) / 2)
+    pairs.foreach { case (a, b, d) =>
+      assert(d == Kernels.distance(Kernels.Euclidean, arr(a), arr(b)),
+        s"($a, $b)")
     }
     counts.unpersist(false)
   }

@@ -187,18 +187,18 @@ class MoreAlgosSpec extends AnyFunSuite {
       (4L, 10L), (4L, 13L), (10L, 13L)) // bridge triangle
     val edges = (k5 ++ extra).toDF("src", "dst")
       .withColumn("weight", lit(1.0))
-    val t4 = graft.algos.Truss.kTruss(spark, edges, k = 4)
+    val t4 = graft.algos.TrussRecount.kTruss(spark, edges, k = 4)
       .as[(Long, Long)].collect().toSet
     assert(t4 == k5.toSet, s"4-truss should be exactly K5, got $t4")
     // k=3 keeps every triangle (each edge in >= 1 triangle of its own
     // structure) and drops only the chain
-    val t3 = graft.algos.Truss.kTruss(spark, edges, k = 3)
+    val t3 = graft.algos.TrussRecount.kTruss(spark, edges, k = 3)
       .as[(Long, Long)].collect().toSet
     assert(t3 == (k5 ++ extra.filterNot(e => e._1 >= 20L && e._1 < 23L)).toSet)
     // directed duplicates / reversed edges canonicalize before peeling
     val doubled = edges.unionAll(
       edges.select(col("dst").as("src"), col("src").as("dst"), col("weight")))
-    val t4d = graft.algos.Truss.kTruss(spark, doubled, k = 4)
+    val t4d = graft.algos.TrussRecount.kTruss(spark, doubled, k = 4)
       .as[(Long, Long)].collect().toSet
     assert(t4d == t4)
   }
@@ -211,7 +211,7 @@ class MoreAlgosSpec extends AnyFunSuite {
     val edges = (k5 ++ extra).toDF("src", "dst")
       .withColumn("weight", lit(1.0))
     for (k <- Seq(3, 4, 5)) {
-      val rec = graft.algos.Truss.kTruss(spark, edges, k)
+      val rec = graft.algos.TrussRecount.kTruss(spark, edges, k)
         .as[(Long, Long)].collect().toSet
       val dec = graft.algos.Truss.kTrussDecremental(spark, edges, k)
         .as[(Long, Long)].collect().toSet
@@ -219,7 +219,7 @@ class MoreAlgosSpec extends AnyFunSuite {
     }
     // and on the real derived link graph (multi-round peel, support > 0)
     val lg = graft.core.LinkGraph.edges(spark, TestSessions.Sf0001)
-    val rec4 = graft.algos.Truss.kTruss(spark, lg, k = 4)
+    val rec4 = graft.algos.TrussRecount.kTruss(spark, lg, k = 4)
       .as[(Long, Long)].collect().toSet
     val dec4 = graft.algos.Truss.kTrussDecremental(spark, lg, k = 4)
       .as[(Long, Long)].collect().toSet

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.algos.{ConnectedComponents, PageRank, TriangleCount}
 
@@ -71,20 +71,5 @@ class PropertySpec extends AnyFunSuite {
         0.85 * ranks.filter { case (v, _) => withOut(v) }.values.sum
       assert(math.abs(lhs - rhs) < 1e-4, s"lhs=$lhs rhs=$rhs graph: $g")
     }
-  }
-
-  test("binary edge list roundtrip") {
-    val edges = Seq((1L, 2L, 0.5f), (3L, 4L, 1.5f), (5L, 5L, 9f))
-    val buf = java.nio.ByteBuffer.allocate(edges.size * 12)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    edges.foreach { case (s, d, w) =>
-      buf.putInt(s.toInt); buf.putInt(d.toInt); buf.putFloat(w)
-    }
-    val dir = java.nio.file.Files.createTempDirectory("graft-bin")
-    java.nio.file.Files.write(dir.resolve("edges.bin"), buf.array())
-    val got = graft.sources.EdgeListReader
-      .binEdgeList(spark, dir.toString, hasValue = true)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(got == Set((1L, 2L, 0.5), (3L, 4L, 1.5))) // self-edge dropped
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.Tables
 import graft.streaming.EventStream
 
 class StreamingSpec extends AnyFunSuite {
@@ -16,43 +15,6 @@ class StreamingSpec extends AnyFunSuite {
     spark.read.parquet(eventsPath).repartition(4)
       .write.mode("overwrite").parquet(dir)
     dir
-  }
-
-  test("streaming windowed aggregation equals the batch equivalent") {
-    val streamed = EventStream.runOnce(spark, eventsDir,
-      EventStream.windowedCounts, "win_counts", outputMode = "complete")
-      .select("window_start", "event_type", "n", "sum_value_q4")
-      .as[(java.sql.Timestamp, String, Long, Long)].collect().toSet
-    val batch = EventStream.windowedCountsBatch(
-      spark.read.parquet(eventsDir))
-      .select("window_start", "event_type", "n", "sum_value_q4")
-      .as[(java.sql.Timestamp, String, Long, Long)].collect().toSet
-    assert(streamed == batch)
-    assert(batch.nonEmpty)
-  }
-
-  test("streaming sessionization equals batch for watermark-closed sessions") {
-    val batchDf = EventStream.sessionizeBatch(spark.read.parquet(eventsDir))
-    val batch = batchDf
-      .select("user_id", "session_start", "session_end", "n_events",
-        "sum_value_q4")
-      .as[(Long, java.sql.Timestamp, java.sql.Timestamp, Long, Long)]
-      .collect().toSet
-    // append mode emits a session once the watermark passes its end; the
-    // final watermark stops at the stream's max event time, so parity holds
-    // exactly for sessions closed by then — the stream's tail stays open
-    val maxTs = spark.read.parquet(eventsDir)
-      .agg(max(col("ts"))).as[java.sql.Timestamp].head()
-    val streamed = EventStream.runOnce(spark, eventsDir,
-      df => EventStream.sessionize(df, delay = "0 seconds"),
-      "sessions", outputMode = "append")
-      .select("user_id", "session_start", "session_end", "n_events",
-        "sum_value_q4")
-      .as[(Long, java.sql.Timestamp, java.sql.Timestamp, Long, Long)]
-      .collect().toSet
-    val closed = batch.filter(s => !s._3.after(maxTs))
-    assert(streamed == closed, s"streamed ${streamed.size} closed ${closed.size}")
-    assert(streamed.nonEmpty && batch.exists(_._4 > 1))
   }
 
   test("sessionization: gap merge and boundary semantics (hand fixture)") {
@@ -71,21 +33,6 @@ class StreamingSpec extends AnyFunSuite {
       .select("user_id", "n_events").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq.sorted).toMap
     assert(got == Map(1L -> Seq(3L), 2L -> Seq(2L), 3L -> Seq(1L, 1L)))
-  }
-
-  test("stateful per-user totals equal the batch groupBy") {
-    val ds = spark.read.parquet(eventsPath)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[EventStream.Event]
-    val got = EventStream.userTotals(ds)
-      .collect().map(s => s.user_id -> ((s.events, math.round(s.total * 1e4))))
-      .toMap
-    val want = spark.read.parquet(eventsPath)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n"), sum("value").as("t"))
-      .as[(Long, Long, Double)].collect()
-      .map(r => r._1 -> ((r._2, math.round(r._3 * 1e4)))).toMap
-    assert(got == want)
   }
 
   test("evolving-graph ingest recomputes per micro-batch, monotonic counts") {
@@ -126,61 +73,6 @@ class StreamingSpec extends AnyFunSuite {
     }
     // the ranking genuinely evolves across batches
     assert(perBatch.map(_.map(_._1)).distinct.size >= 2)
-  }
-
-  test("watermark drops late data (not just parity): late row excluded") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def t(h: Int, m: Int) =
-      java.sql.Timestamp.valueOf(f"2026-01-01 $h%02d:$m%02d:00")
-    val ms = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val events = ms.toDF().toDF("ts", "event_type", "value")
-    val q = EventStream.windowedCounts(events).writeStream
-      .outputMode("append").format("memory").queryName("late_drop").start()
-    try {
-      // batch 0: two rows in [10:00,11:00) plus 13:00 -> watermark becomes
-      // 13:00 - 2h = 11:00 after the batch
-      ms.addData((t(10, 0), "a", 1.0), (t(10, 30), "a", 1.0),
-        (t(13, 0), "a", 1.0))
-      q.processAllAvailable()
-      // batch 1: a LATE row for the already-closed 10:00 window (behind the
-      // 11:00 watermark -> must be dropped), plus 16:00 to advance further
-      ms.addData((t(10, 45), "a", 1.0), (t(16, 0), "a", 1.0))
-      q.processAllAvailable()
-      ms.addData((t(20, 0), "a", 1.0)) // push watermark past all windows
-      q.processAllAvailable()
-      val out = spark.table("late_drop")
-        .select("window_start", "n")
-        .as[(java.sql.Timestamp, Long)].collect().toMap
-      // the 10:00 window closed with exactly the two on-time rows; the late
-      // 10:45 row was discarded by the watermark
-      assert(out(t(10, 0)) == 2L,
-        s"late row leaked into the closed window: $out")
-    } finally q.stop()
-  }
-
-  test("streaming ingest dedup: in-watermark dups dropped, state expires") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def t(h: Int, m: Int) =
-      java.sql.Timestamp.valueOf(f"2026-01-01 $h%02d:$m%02d:00")
-    val ms = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val docs = ms.toDF().toDF("ts", "doc_id", "text")
-    val q = EventStream.dedupIngest(docs, "1 hour").writeStream
-      .outputMode("append").format("memory").queryName("dedup_ingest").start()
-    try {
-      ms.addData((t(10, 0), 1L, "A"), (t(10, 0), 3L, "B"))
-      q.processAllAvailable() // both firsts kept
-      ms.addData((t(10, 10), 2L, "A"))
-      q.processAllAvailable() // in-watermark duplicate of A: dropped
-      ms.addData((t(20, 0), 4L, "C"))
-      q.processAllAvailable() // watermark -> 19:00; A's state (10:00+1h) evicted
-      ms.addData((t(20, 30), 5L, "A"))
-      q.processAllAvailable() // same content after expiry: kept again
-      val kept = spark.table("dedup_ingest")
-        .select("doc_id").as[Long].collect().toSet
-      assert(kept == Set(1L, 3L, 4L, 5L), s"kept=$kept")
-    } finally q.stop()
   }
 
   test("streaming FRAP monitor: per-arrival verdicts equal the batch radius test") {

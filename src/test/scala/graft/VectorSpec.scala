@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -122,11 +123,20 @@ class VectorSpec extends AnyFunSuite {
         .map { case (v, i) => (i + 1L, v) }.toDF("vec_id", "embedding"))
   }
 
+  /** SRP-LSH bucket id per vector: bit i = [dot(v, plane_i) > 0]. The
+    * Column form of [[Scan.srpSignature]], kept as its reference.
+    */
+  private def srpBucket(vec: Column, planes: Array[Array[Double]]): Column =
+    planes.zipWithIndex.map { case (p, i) =>
+      when(Similarity.dot(vec, typedLit(p.toSeq)) > 0, lit(1L << i))
+        .otherwise(0L)
+    }.reduce(_ + _)
+
   test("property: srpSignature equals the srpBucket Column form on NaN/Inf") {
     val planes = Similarity.hyperplanes(8, 4, "nan")
     for (t <- nonFiniteTables(3)) {
       val want = t.select(col("vec_id"),
-        Similarity.srpBucket(col("embedding"), planes)).as[(Long, Long)]
+        srpBucket(col("embedding"), planes)).as[(Long, Long)]
       val got = Similarity.srpBucketsScan(t, "vec_id", "embedding",
         Seq(planes)).select("vec_id", "b").as[(Long, Long)]
       assert(got.collect().toMap == want.collect().toMap)
