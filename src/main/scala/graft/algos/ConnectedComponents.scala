@@ -60,9 +60,8 @@ object ConnectedComponents {
       // (state side), keeping every superstep's scatter join exchange-free
     }
 
-    val res = Superstep.run(init, step, tol = 0.0, maxIters = maxIters, store)
-    und.unpersist(false)
-    res
+    try Superstep.run(init, step, tol = 0.0, maxIters = maxIters, store)
+    finally und.unpersist(false)
   }
 
   /** (id, label) at the fixpoint. Asserts convergence — with a too-small

@@ -84,9 +84,8 @@ object LabelPropagation {
       // no repartition: apply join preserves the state side's hash(id)
     }
 
-    val res = Superstep.run(init, step, tol = 0.0, maxIters = iters, store)
-    und.unpersist(false)
-    res
+    try Superstep.run(init, step, tol = 0.0, maxIters = iters, store)
+    finally und.unpersist(false)
   }
 
   /** Unrolled SQL oracle: `iters` synchronous LPA rounds with the same

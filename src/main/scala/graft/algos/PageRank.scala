@@ -110,9 +110,8 @@ object PageRank {
         .drop("prev")
     }
 
-    val res = Superstep.run(init, step, tol, maxIters, store)
-    sh.unpersist(false)
-    res
+    try Superstep.run(init, step, tol, maxIters, store)
+    finally sh.unpersist(false)
   }
 
   /** Fixed-iteration variant of the same recurrence (oracle-checkable:
@@ -211,9 +210,10 @@ object PageRank {
         .drop("prev")
     }
 
-    val res = Superstep.run(init, step _, tol = -1.0, maxIters = iters,
-      store = new LocalStore)
-    sh.unpersist(false)
+    val res =
+      try Superstep.run(init, step _, tol = -1.0, maxIters = iters,
+        store = new LocalStore)
+      finally sh.unpersist(false)
     res.state.select("id", "rank")
   }
 

@@ -1,10 +1,8 @@
 package graft.algos
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.core.LinkGraph
 
 /** Triangle counting over the undirected graph via degree-ordered adjacency
   * self-join, the Spark-native equivalent of the reference's pivot-interval

@@ -67,6 +67,10 @@ final class LocalStore extends StateStore {
   // runs CC once per Boruvka round), until the driver pins a core in
   // BigInteger.multiplyToomCook3. Rebasing every superstep keeps all
   // loop-leaf stats at the bounded engine default.
+  //
+  // Stored serialized (MEMORY_AND_DISK_SER, Dataflow.CheckpointLevel): a
+  // 32-byte (id, value, delta) row takes ~43 B under Kryo and ~50 B under
+  // the Java serializer, against ~88 B as a deserialized row object.
   override def persist(state: DataFrame, iter: Int): DataFrame =
     graft.core.Dataflow.checkpointRebased(state, eager = false)
   override def log(m: SuperstepMetrics): Unit = history ::= m

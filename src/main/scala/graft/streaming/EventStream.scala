@@ -104,7 +104,7 @@ object EventStream {
     * dynamic shard splicing, graphchi_dynamicgraph_engine.hpp:289-373).
     */
   def evolvingEdgeIngest(spark: SparkSession, edgeParquetPath: String,
-      analytic: DataFrame => DataFrame, queryName: String): Seq[Long] =
+      analytic: DataFrame => DataFrame): Seq[Long] =
     foldEdgeBatches(spark, edgeParquetPath, acc => analytic(acc).count())
 
   /** Streaming PageRank — the reference's streaming_pagerank app

@@ -1,7 +1,6 @@
 package graft
 
 import java.security.MessageDigest
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.derive.{CodeLakehouse, EdgeDerive}
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.algos.GraphEmbed
 
 /** NetMF-style embedding pipeline: hand-checked co-occurrence/PPMI

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.algos.{GraphOps, MinimumSpanningForest}
 import graft.core.LinkGraph

@@ -1,13 +1,11 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Tables
 import graft.multimodal.Multimodal
 
 class MultimodalSpec extends AnyFunSuite {
   lazy val spark = TestSessions.spark
-  import spark.implicits._
 
   test("PGM parser: general Netpbm lexing (comments, unpadded dims)") {
     // a hand-written header the SYNTHESIZER never emits: comments between

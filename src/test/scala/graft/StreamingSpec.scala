@@ -39,7 +39,7 @@ class StreamingSpec extends AnyFunSuite {
     // several files → several micro-batches (a single file = one batch)
     val dir = eventsDir
     val counts = EventStream.evolvingEdgeIngest(spark, dir,
-      df => df.select("user_id").distinct(), "evolve_cc")
+      df => df.select("user_id").distinct())
     assert(counts.size >= 4)
     assert(counts.nonEmpty)
     assert(counts == counts.sorted, "accumulating table can't shrink")

@@ -404,6 +404,23 @@ class SuperstepLoopsSpec extends AnyFunSuite {
       }
       assert(CachedEntries(spark) == before, name)
     }
+    for ((name, run) <- scatterLoops) {
+      val before = CachedEntries(spark)
+      intercept[StoreFailed](run(new FailingStore(2)))
+      assert(CachedEntries(spark) == before, s"$name, a store that threw")
+    }
+  }
+
+  private final class StoreFailed extends RuntimeException("store failed")
+
+  /** A [[LocalStore]] that throws when asked to persist superstep `at`. */
+  private final class FailingStore(at: Int) extends StateStore {
+    private val inner = new LocalStore
+    override def persist(state: DataFrame, iter: Int): DataFrame =
+      if (iter == at) throw new StoreFailed else inner.persist(state, iter)
+    override def log(m: SuperstepMetrics): Unit = inner.log(m)
+    override def resumePoint(): Option[(Int, DataFrame)] = None
+    override def release(state: DataFrame): Unit = inner.release(state)
   }
 
   private def callSites(token: String,
@@ -504,6 +521,32 @@ class SuperstepLoopsSpec extends AnyFunSuite {
           m.partitions.nonEmpty && m.rows == m.partitions.map(_.rows).sum &&
           m.bytes == m.partitions.map(_.bytes).sum && m.bytes > 8 * m.rows),
           s"$what: $ms")
+      }
+  }
+
+  test("a LocalStore loop stores its state serialized and compact") {
+    // the per-block overhead of a serialized stream is amortized over
+    // 1,000 rows per partition (4 partitions); Spark's deserialized default
+    // stored ~2.8 bytes per UnsafeRow byte, serialized state ~1.6
+    val ring = (0L until 4000L).map(v => (v, (v * 7 + 1) % 4000L))
+      .toDF("src", "dst").withColumn("weight", lit(1.0))
+    val sc = spark.sparkContext
+    val loops = Seq[(String, () => Superstep.RunResult)](
+      "PageRank" -> (() => PageRank.run(spark, ring, tol = -1.0, maxIters = 2)),
+      "CC" -> (() => ConnectedComponents.run(spark, ring, 2)),
+      "LPA" -> (() => LabelPropagation.run(spark, ring, 2)))
+    for ((name, run) <- loops; aqe <- Seq(false, true))
+      TestSessions.withConf("spark.sql.adaptive.enabled" -> aqe.toString) {
+        val what = s"$name, AQE $aqe"
+        val res = run()
+        val Seq(id) = res.state.queryExecution.analyzed.collect {
+          case r: LogicalRDD => r.rdd.id }
+        val info = sc.getRDDStorageInfo.find(_.id == id)
+          .getOrElse(fail(s"$what: checkpoint $id holds no blocks"))
+        assert(!info.storageLevel.deserialized, s"$what: ${info.storageLevel}")
+        val stored = info.memSize + info.diskSize
+        val bytes = res.metrics.last.bytes
+        assert(stored <= 2 * bytes, s"$what: $stored B stored for $bytes B")
       }
   }
 

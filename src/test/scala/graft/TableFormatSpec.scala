@@ -13,7 +13,6 @@ import graft.engine.{DurableStore, ParquetFormat, SnapshotParquetFormat, TableFo
   */
 class TableFormatSpec extends AnyFunSuite {
   lazy val spark = TestSessions.spark
-  import spark.implicits._
 
   private val impls: Seq[(String, String => TableFormat)] = Seq(
     "parquet" -> (root => new ParquetFormat(root)),
