@@ -36,18 +36,21 @@ object Dataflow {
     *   lineage-truncates the state in one pass. The stats rebase is
     *   independent of eagerness: it only rewraps the same marked RDD.
     *
-    * The blocks are stored serialized ([[CheckpointLevel]]). Spark's
-    * default for a local checkpoint is the deserialized MEMORY_AND_DISK,
-    * which keeps one row object per row: a 10,000-row `(id, value, delta)`
-    * state is 320,000 B of `UnsafeRow` data but was stored as 884,952 B,
-    * 2.77× the data. Serialized, the same state is 430,000 B under Kryo
-    * and 502,400 B under the Java serializer, at bit-identical results and
-    * no measured slowdown (BENCH.md, "Serialized superstep state").
+    * @param level the blocks' storage level. Spark's default for a local
+    *   checkpoint, the deserialized MEMORY_AND_DISK, keeps one row object
+    *   per row: a 10,000-row `(id, value, delta)` state is 320,000 B of
+    *   `UnsafeRow` data but is stored as 884,952 B, 2.77× the data.
+    *   [[graft.engine.LocalStore]] stores every superstep state as
+    *   MEMORY_AND_DISK_SER instead: 430,000 B under Kryo and 502,400 B
+    *   under the Java serializer, at bit-identical results. The loop
+    *   states of SVD++, timeSVD++, Louvain and AdPredictor keep the
+    *   default, because serialized blocks are deserialized on every read:
+    *   in 4 interleaved sf0.01 sweep rounds `timesvdpp_drift` read 203.8 s
+    *   median serialized against 181.1 s (range 162.8–193.4 s)
+    *   deserialized (BENCH.md, "Serialized superstep state").
     */
-  def checkpointRebased(df: DataFrame, eager: Boolean = true): DataFrame =
+  def checkpointRebased(df: DataFrame, eager: Boolean = true,
+      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
     org.apache.spark.sql.graft.GraftSqlBridge.dropOriginStats(
-      df.localCheckpoint(eager, CheckpointLevel))
-
-  /** The storage level of every [[checkpointRebased]] state. */
-  private val CheckpointLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK_SER
+      df.localCheckpoint(eager, level))
 }

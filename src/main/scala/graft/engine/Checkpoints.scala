@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Paths, Path}
 import scala.jdk.CollectionConverters._
 
@@ -68,11 +69,11 @@ final class LocalStore extends StateStore {
   // BigInteger.multiplyToomCook3. Rebasing every superstep keeps all
   // loop-leaf stats at the bounded engine default.
   //
-  // Stored serialized (MEMORY_AND_DISK_SER, Dataflow.CheckpointLevel): a
-  // 32-byte (id, value, delta) row takes ~43 B under Kryo and ~50 B under
-  // the Java serializer, against ~88 B as a deserialized row object.
+  // Stored serialized; the reason is at Dataflow.checkpointRebased's
+  // `level`.
   override def persist(state: DataFrame, iter: Int): DataFrame =
-    graft.core.Dataflow.checkpointRebased(state, eager = false)
+    graft.core.Dataflow.checkpointRebased(state, eager = false,
+      StorageLevel.MEMORY_AND_DISK_SER)
   override def log(m: SuperstepMetrics): Unit = history ::= m
   override def resumePoint(): Option[(Int, DataFrame)] = None
   // The checkpoint's blocks: a Dataset.unpersist would drop only

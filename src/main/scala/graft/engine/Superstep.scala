@@ -103,24 +103,35 @@ object Superstep {
     var iter = startIter
     var converged = false
     var template: Option[StepTemplate] = None
-    while (iter <= maxIters && !converged) {
-      val t0 = System.nanoTime()
-      val planned = template.flatMap(_.rebind(state)).getOrElse {
-        val built = step(state)
-        template = StepTemplate(state, built)
-        built
+    // A superstep that throws releases the states it holds, the last
+    // completed one and the one it persisted, so a failed run leaves no
+    // checkpoint blocks behind.
+    try {
+      while (iter <= maxIters && !converged) {
+        val t0 = System.nanoTime()
+        val planned = template.flatMap(_.rebind(state)).getOrElse {
+          val built = step(state)
+          template = StepTemplate(state, built)
+          built
+        }
+        val next = store.persist(planned, iter)
+        val (maxDelta, active, parts) =
+          try stats(next, tol)
+          catch { case e: Throwable => store.release(next); throw e }
+        val wall = (System.nanoTime() - t0) / 1e9
+        val m = SuperstepMetrics(iter, parts.map(_.rows).sum,
+          parts.map(_.bytes).sum, maxDelta, active, wall, parts)
+        store.log(m)
+        collected += m
+        store.release(state)
+        state = next
+        converged = maxDelta <= tol
+        iter += 1
       }
-      val next = store.persist(planned, iter)
-      val (maxDelta, active, parts) = stats(next, tol)
-      val wall = (System.nanoTime() - t0) / 1e9
-      val m = SuperstepMetrics(iter, parts.map(_.rows).sum,
-        parts.map(_.bytes).sum, maxDelta, active, wall, parts)
-      store.log(m)
-      collected += m
-      store.release(state)
-      state = next
-      converged = maxDelta <= tol
-      iter += 1
+    } catch {
+      case e: Throwable =>
+        store.release(state)
+        throw e
     }
     RunResult(state, iter - 1, converged, collected.toSeq)
   }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
   ShuffleExchangeExec}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, lit, udf}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -404,24 +404,41 @@ class SuperstepLoopsSpec extends AnyFunSuite {
       }
       assert(CachedEntries(spark) == before, name)
     }
-    for ((name, run) <- scatterLoops) {
+    // nor a loop whose superstep 2 fails, in its store or in the job that
+    // computes its state: its static view and every checkpoint it held
+    // are released
+    val sc = spark.sparkContext
+    for ((name, run) <- scatterLoops; lazily <- Seq(false, true)) {
+      val what = s"$name, superstep 2 failing " +
+        (if (lazily) "lazily" else "in persist")
       val before = CachedEntries(spark)
-      intercept[StoreFailed](run(new FailingStore(2)))
-      assert(CachedEntries(spark) == before, s"$name, a store that threw")
+      val persisted = sc.getPersistentRDDs.keySet
+      val e = intercept[Exception](run(new FailingStore(2, lazily)))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage == FailingStore.Message), s"$what: $e")
+      assert(CachedEntries(spark) == before, what)
+      assert(sc.getPersistentRDDs.keySet == persisted,
+        s"$what: ${sc.getPersistentRDDs.keySet -- persisted}")
     }
   }
 
-  private final class StoreFailed extends RuntimeException("store failed")
-
-  /** A [[LocalStore]] that throws when asked to persist superstep `at`. */
-  private final class FailingStore(at: Int) extends StateStore {
+  /** A [[LocalStore]] whose superstep `at` fails: `persist` throws, or,
+    * `lazily`, it returns a state that throws when a job computes it. */
+  private final class FailingStore(at: Int, lazily: Boolean)
+      extends StateStore {
     private val inner = new LocalStore
+    private val failing = udf[Double, Double](_ =>
+      throw new IllegalStateException(FailingStore.Message))
     override def persist(state: DataFrame, iter: Int): DataFrame =
-      if (iter == at) throw new StoreFailed else inner.persist(state, iter)
+      if (iter != at) inner.persist(state, iter)
+      else if (lazily)
+        inner.persist(state.withColumn("delta", failing(col("delta"))), iter)
+      else throw new IllegalStateException(FailingStore.Message)
     override def log(m: SuperstepMetrics): Unit = inner.log(m)
     override def resumePoint(): Option[(Int, DataFrame)] = None
     override def release(state: DataFrame): Unit = inner.release(state)
   }
+  private object FailingStore { final val Message = "superstep failed" }
 
   private def callSites(token: String,
       under: String = "src/main/scala/graft"): Map[String, Seq[String]] = {
